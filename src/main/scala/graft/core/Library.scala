@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ManifestScan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -553,7 +554,7 @@ final class Library(
     var offset = 0L
     ordered.map { s =>
       val e = FileEntry(s"${dir.getName}/${s.name}", s.rows, offset,
-        s.minIdx, s.maxIdx, s.minStr, s.maxStr)
+        s.minIdx, s.maxIdx, s.minStr, s.maxStr, Some(s.bytes), Some(s.mtimeMs))
       offset += s.rows
       e
     }
@@ -562,6 +563,9 @@ final class Library(
   private final case class RawFileStat(
       name: String,
       rows: Long,
+      /** Length and mtime from the listing that found the file. */
+      bytes: Long,
+      mtimeMs: Long,
       minIdx: Option[Long],
       maxIdx: Option[Long],
       minStr: Option[String],
@@ -626,15 +630,15 @@ final class Library(
               if (perBlock.isEmpty) None
               else Some((perBlock.map(_._1).min(Library.strOrdering),
                 perBlock.map(_._2).max(Library.strOrdering)))
-            RawFileStat(st.getPath.getName, rows, None, None,
+            RawFileStat(st.getPath.getName, rows, st.getLen, st.getModificationTime, None, None,
               bounds.map(_._1), bounds.map(_._2), blockStr = perBlock.toSeq)
           } else {
             val perBlock = idxStats.map { case (mn, mx) => (statToLong(mn), statToLong(mx)) }
             val bounds =
               if (perBlock.isEmpty) None
               else Some((perBlock.map(_._1).min, perBlock.map(_._2).max))
-            RawFileStat(st.getPath.getName, rows, bounds.map(_._1), bounds.map(_._2),
-              None, None, blockIdx = perBlock.toSeq)
+            RawFileStat(st.getPath.getName, rows, st.getLen, st.getModificationTime,
+              bounds.map(_._1), bounds.map(_._2), None, None, blockIdx = perBlock.toSeq)
           }
         } finally reader.close()
       }
@@ -1137,7 +1141,7 @@ final class Library(
       qs += Library.ReadStats(symbol, m.version, m.files.size,
         m.files.size - byIndex.size, byIndex.size - byStats.size,
         byStats.size - selected.size, selected.size,
-        selected.map(_.rows).sum, m.rowCount)
+        selected.map(_.rows).sum, m.rowCount, selected.count(_.status.isEmpty))
     readFiles(symbol, m, selected, range, columns, withRowId)
   }
 
@@ -1177,6 +1181,16 @@ final class Library(
   /** Scan a manifest-selected subset of a version's files. Row ids are
     * reconstructed from the SELECTED files' global offsets, so pruned
     * reads still carry correct absolute row numbers.
+    *
+    * The scan is planned from the manifest: each entry's recorded size and
+    * mtime seed the file index ([[org.apache.spark.sql.graftbridge.ManifestScan]]),
+    * so no storage listing runs while the frame is built — nor the Spark
+    * listing job a read of more than 32 files (Spark's parallel-discovery
+    * threshold) used to fire. Entries from builds that did not record a
+    * status are listed as before, and a missing one fails here; a missing
+    * seeded file fails when the scan runs. Seeded statuses carry no HDFS
+    * block locations, so such scans lose locality hints; local
+    * filesystems and object stores have none to lose.
     */
   private def readFiles(
       symbol: String,
@@ -1195,24 +1209,12 @@ final class Library(
     // cast/backfilled to the current schema on the fly (one scan per
     // distinct historical schema — appends that don't evolve the schema
     // add no groups).
-    val groups = selected.groupBy(f => fileSchemaDdl(m, f))
-    var df =
-      if (groups.size == 1)
-        align(
-          spark.read
-            .schema(StructType.fromDDL(groups.keys.head))
-            .parquet(selected.map(resolve(symbol, _)): _*),
-          target)
-      else
-        groups.toSeq
-          .map { case (ddl, files) =>
-            align(
-              spark.read
-                .schema(StructType.fromDDL(ddl))
-                .parquet(files.map(resolve(symbol, _)): _*),
-              target)
-          }
-          .reduce(_ unionByName _)
+    var df = selected.groupBy(f => fileSchemaDdl(m, f)).toSeq
+      .map { case (ddl, files) =>
+        align(ManifestScan.parquet(spark, StructType.fromDDL(ddl),
+          files.map(f => (resolve(symbol, f), f.status))), target)
+      }
+      .reduce(_ unionByName _)
 
     for (r <- range; idx <- m.indexCol)
       df = df.filter(r.residual(idx, df.schema(idx).dataType))
@@ -1583,13 +1585,15 @@ final class Library(
     * version as a DataFrame — one row per data file with its row count,
     * cumulative offset and index bounds (delta chains resolved; exactly
     * what the scan planner sees). Columns: path, rows, row_offset,
-    * min_idx, max_idx, min_str, max_str.
+    * min_idx, max_idx, min_str, max_str, bytes (null for entries whose
+    * size was not recorded — those are listed at read time).
     */
   def manifestDump(symbol: String, asOf: AsOf = AsOf.Latest): DataFrame = {
     val m = resolveVersion(symbol, asOf)
     spark.createDataFrame(m.files.map(e =>
-      (e.path, e.rows, e.rowOffset, e.minIdx, e.maxIdx, e.minStr, e.maxStr)))
-      .toDF("path", "rows", "row_offset", "min_idx", "max_idx", "min_str", "max_str")
+      (e.path, e.rows, e.rowOffset, e.minIdx, e.maxIdx, e.minStr, e.maxStr, e.bytes)))
+      .toDF("path", "rows", "row_offset", "min_idx", "max_idx", "min_str", "max_str",
+        "bytes")
   }
 
   // ------------------------------------------------------ query stats
@@ -1630,13 +1634,13 @@ final class Library(
   /** [[withQueryStats]] rows as a DataFrame (one row per read, in read
     * order): symbol, version, files_total, pruned_by_range,
     * pruned_by_stats, pruned_by_expr, files_read, rows_read,
-    * rows_total.
+    * rows_total, files_listed.
     */
   def queryStatsFrame(stats: Seq[Library.ReadStats]): DataFrame =
     spark.createDataFrame(stats)
       .toDF("symbol", "version", "files_total", "pruned_by_range",
         "pruned_by_stats", "pruned_by_expr", "files_read", "rows_read",
-        "rows_total")
+        "rows_total", "files_listed")
 
   /** Per-symbol storage census over the whole library: live versions,
     * latest-version file/row counts, total data bytes on disk (all
@@ -2226,7 +2230,8 @@ final class Library(
 
       val entries0 = moved.toSeq.flatMap { case (dir, fsx, _) =>
         fsx.map(s =>
-          FileEntry(s"$dir/${s.name}", s.rows, 0L, s.minIdx, s.maxIdx, s.minStr, s.maxStr))
+          FileEntry(s"$dir/${s.name}", s.rows, 0L, s.minIdx, s.maxIdx, s.minStr, s.maxStr,
+            Some(s.bytes), Some(s.mtimeMs)))
       }
       val orderedEntries =
         if (idxCol.isEmpty) entries0.sortBy(_.path)
@@ -2739,7 +2744,9 @@ object Library {
     * index bounds), `prunedByStats` (caller ColRanges vs the stats
     * sidecar) and `prunedByExpr` (expression-AST Kleene pruning);
     * `filesRead`/`rowsRead` is what the scan touches, `rowsTotal` the
-    * version's full row count.
+    * version's full row count. `filesListed` counts the read files whose
+    * status the manifest did not record, so planning the scan lists them
+    * in storage; 0 means the read touches no storage metadata.
     */
   final case class ReadStats(
       symbol: String,
@@ -2750,7 +2757,8 @@ object Library {
       prunedByExpr: Int,
       filesRead: Int,
       rowsRead: Long,
-      rowsTotal: Long)
+      rowsTotal: Long,
+      filesListed: Int)
 
   /** Symbol-metadata key carrying the last streaming fold stamp
     * (`<scope>:<batchId>`, [[ReplayGuard]]) of an index/ledger symbol —

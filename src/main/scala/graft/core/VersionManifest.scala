@@ -18,6 +18,14 @@ import org.json4s.jackson.Serialization
   * cumulative row count of all preceding files in index order — this is
   * what makes head/tail/row_range a FILE-PRUNING operation instead of a
   * global sort.
+  *
+  * bytes/mtimeMs are the file's length and modification time as the
+  * committing listing saw them (the reference's index rows likewise carry
+  * everything a reader needs to fetch a segment). They let a read plan its
+  * scan without listing storage (Library.readFiles). Entries written by
+  * builds that predate them decode as None and are listed at read time.
+  * mtimeMs is informational only: a store whose rename copies (object
+  * stores) gives the moved file a newer one, which no reader checks.
   */
 final case class FileEntry(
     path: String,
@@ -26,7 +34,13 @@ final case class FileEntry(
     minIdx: Option[Long],
     maxIdx: Option[Long],
     minStr: Option[String] = None,
-    maxStr: Option[String] = None)
+    maxStr: Option[String] = None,
+    bytes: Option[Long] = None,
+    mtimeMs: Option[Long] = None) {
+
+  /** (bytes, mtimeMs) when the manifest recorded the file's status. */
+  def status: Option[(Long, Long)] = for (b <- bytes; t <- mtimeMs) yield (b, t)
+}
 
 /** One immutable version of a symbol — the analog of the reference's
   * VERSION key pointing at a TABLE_INDEX (cpp/arcticdb/entity/key.hpp:62-123).

@@ -831,10 +831,13 @@ object Dedup {
       // ride each posting row as posts.sz; docidx's old sz column was
       // dead beyond this filter) — so the collect gates on the cheap
       // token-count kernel instead of building every doc's distinct
-      // shingle SET a second time (r22; ngramCount > 0 ⟺ the doc has
-      // ≥ shingleLen tokens ⟺ DistinctShingles nonempty — same
-      // normalize+tokenize). The collect still rides the spread input,
-      // parallel with the postings kernel.
+      // shingle SET a second time (r22; ngramCount > 0 ⟸ DistinctShingles
+      // nonempty, same normalize+tokenize). The converse fails only for
+      // shingleLen == 1 on empty normalized text: split yields [""], so
+      // ngramCount is 1 while the shingle set is empty. Such a doc takes
+      // a dead docidx slot with no postings — a wasted slot, never a
+      // wrong pair. The collect still rides the spread input, parallel
+      // with the postings kernel.
       val collected: Array[Long] = spreadIn
         .filter(graft.functions.Text.ngramCount(col(textCol), shingleLen) > 0)
         .select(col(idCol).cast("long").as("id"))

@@ -39,33 +39,12 @@ class BpeBatchedSpec extends SparkSuite {
     val df = rows.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "text")
     val seq = Bpe.trainMerges(df, "text", 20).collect().toSeq
     var bat = Seq.empty[org.apache.spark.sql.Row]
-    val jobs = jobsOf { bat = Bpe.trainMergesBatched(df, "text", 20, maxBatch = 64)
-      .collect().toSeq }
+    val jobs = jobsDuring { bat = Bpe.trainMergesBatched(df, "text", 20, maxBatch = 64)
+      .collect().toSeq }._2
     assert(bat == seq)
     // one pass = word table build + window + risk + checkpoint + final
     // collect — allow slack, but nothing near 20 passes
     assert(jobs <= 10, s"expected one batched pass, saw $jobs jobs")
-  }
-
-  /** Deterministic job counter: statusTracker's retained-job window is
-    * bounded (negative deltas mid-suite), so count onJobStart directly.
-    */
-  private def jobsOf(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      // listener delivery is async; every job has STARTED by the time
-      // the driver-side collect returns — a short drain suffices
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
   }
 
   test("BPE batched: early char-stage natural text stays within 1.6x sequential's jobs") {
@@ -77,9 +56,9 @@ class BpeBatchedSpec extends SparkSuite {
     // multi-script corpora; later-stage training) — here we pin that
     // the machinery's overhead in its WORST regime is bounded (the
     // driver pre-cut skips the risk aggregate on degenerate passes).
-    val seqJobs = jobsOf(Bpe.trainMerges(docs, "text", 120).collect())
-    val batJobs = jobsOf(
-      Bpe.trainMergesBatched(docs, "text", 120, maxBatch = 64).collect())
+    val seqJobs = jobsDuring(Bpe.trainMerges(docs, "text", 120).collect())._2
+    val batJobs = jobsDuring(
+      Bpe.trainMergesBatched(docs, "text", 120, maxBatch = 64).collect())._2
     assert(batJobs < seqJobs * 8 / 5,
       s"batched ran $batJobs jobs vs sequential $seqJobs for 120 merges")
   }

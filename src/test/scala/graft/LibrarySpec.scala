@@ -926,6 +926,10 @@ class LibrarySpec extends SparkSuite {
       offs.scanLeft(0L)(_ + _._2).dropRight(1).toSeq, "row_offset not cumulative")
     assert(md.map(_.getString(0)).toSet ==
       lib.resolveVersion("s").files.map(_.path).toSet)
+    // trailing bytes column: each file's recorded size, matching keyTree's
+    val keyBytes = kt.filter(_._1 == "data").map(r => r._2 -> r._3).toMap
+    assert(md.forall(r => keyBytes.get(s"data/${r.getString(0)}").contains(r.getLong(7))),
+      s"manifest bytes vs keyTree: ${md.map(r => (r.getString(0), r.get(7))).mkString(",")}")
 
     // a staged-but-never-finalized symbol has a dir with ZERO versions —
     // the census must report it (it owns storage), not throw (ADVICE r17)
@@ -1066,7 +1070,8 @@ class LibrarySpec extends SparkSuite {
     val r1 = st1.head
     assert(r1.filesTotal == 4 && r1.prunedByRange == 2 &&
       r1.prunedByStats == 0 && r1.prunedByExpr == 0 && r1.filesRead == 2 &&
-      r1.rowsRead == 200 && r1.rowsTotal == 400, s"range census: $r1")
+      r1.rowsRead == 200 && r1.rowsTotal == 400 && r1.filesListed == 0,
+      s"range census: $r1")
     assert(df1.count() == 101) // the exact row filter still ran
 
     // expression pruning: ts2 < 100 keeps only file 0; an unfiltered
@@ -1081,12 +1086,14 @@ class LibrarySpec extends SparkSuite {
       st2.head.rowsRead == 100, s"expr census: ${st2.head}")
     assert(st2(1).filesRead == 4 && st2(1).prunedByRange == 0 &&
       st2(1).prunedByExpr == 0)
+    // a manifest that records file sizes plans every read without listing
+    assert(st2.forall(_.filesListed == 0), s"files listed: $st2")
 
     // the frame renders in read order with the documented columns
     val f = lib.queryStatsFrame(st2)
     assert(f.columns.toSeq == Seq("symbol", "version", "files_total",
       "pruned_by_range", "pruned_by_stats", "pruned_by_expr", "files_read",
-      "rows_read", "rows_total"))
+      "rows_read", "rows_total", "files_listed"))
     assert(f.count() == 2)
 
     // nesting refused, reference-style; the scope still unwinds
@@ -1479,5 +1486,70 @@ class LibrarySpec extends SparkSuite {
     val orig = ev.filter(col("ts").between(usL(lo), usL(hi)))
     assert(minus.exceptAll(orig).isEmpty && orig.exceptAll(minus).isEmpty)
     assert(plus.exceptAll(patch).isEmpty && patch.exceptAll(plus).isEmpty)
+  }
+
+  /** Manifest-relative paths (`dir/part-…`) of a frame's scanned files. */
+  private def scannedEntries(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.inputFiles.toSeq.map(p => p.substring(p.lastIndexOf("/data/") + "/data/".length)).sorted
+
+  test("reads plan from the manifest: no listing job above the discovery threshold") {
+    import graft.query.Expr.{col => e, lit => l}
+    val lib = newLib()
+    val df = mk(0, 600)
+    lib.write("s", df, Some("ts2"), targetRows = 10)
+    val m = lib.resolveVersion("s")
+    assert(m.files.size > 32, s"premise: more files than Spark lists serially, got ${m.files.size}")
+    // every entry records the file's real size and mtime
+    val dataDir = new org.apache.hadoop.fs.Path(lib.root, "s/data")
+    val fsys = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    m.files.foreach { f =>
+      val st = fsys.getFileStatus(new org.apache.hadoop.fs.Path(dataDir, f.path))
+      assert(f.bytes.contains(st.getLen) && f.mtimeMs.contains(st.getModificationTime),
+        s"recorded status of ${f.path}: ${f.bytes}/${f.mtimeMs} vs ${st.getLen}/${st.getModificationTime}")
+    }
+    // premise: handing the same paths to spark.read lists them in a job
+    val paths = m.files.map(f => new org.apache.hadoop.fs.Path(dataDir, f.path).toString)
+    assert(jobsDuring(spark.read.schema(df.schema).parquet(paths: _*))._2 >= 1,
+      "premise: a plain parquet read of these paths fires a listing job")
+
+    val ((full, st), jobs) = jobsDuring(lib.withQueryStats(lib.read("s")))
+    assert(jobs == 0, s"building a full read fired $jobs Spark jobs")
+    assert(st.map(_.filesListed) == Seq(0), s"sized manifest listed files: $st")
+    assert(scannedEntries(full) == m.files.map(_.path).sorted)
+    assert(full.count() == 600 && full.exceptAll(df).isEmpty && df.exceptAll(full).isEmpty)
+
+    // dateRange: the range-selected files, still > 32, still no job
+    val ((ranged, rst), rJobs) =
+      jobsDuring(lib.withQueryStats(lib.read("s", dateRange = Some((100L, 499L)))))
+    assert(rJobs == 0, s"building a ranged read fired $rJobs Spark jobs")
+    val hit = m.files.filter(f => f.maxIdx.get >= 100L && f.minIdx.get <= 499L)
+    assert(hit.size > 32 && rst.head.filesRead == hit.size && rst.head.filesListed == 0)
+    assert(scannedEntries(ranged) == hit.map(_.path).sorted)
+    val want = df.filter(col("ts2").between(100L, 499L))
+    assert(ranged.count() == 400 && ranged.exceptAll(want).isEmpty)
+
+    // readQuery: expression pruning, then the clause pipeline
+    val q = graft.query.QueryBuilder().filter(e("ts2") >= l(200L))
+    val ((qd, qst), qJobs) = jobsDuring(lib.withQueryStats(lib.readQuery("s", q)))
+    assert(qJobs == 0, s"building a readQuery fired $qJobs Spark jobs")
+    assert(qst.head.filesListed == 0 && qst.head.filesRead > 32)
+    assert(qd.count() == 400 && qd.exceptAll(df.filter(col("ts2") >= 200L)).isEmpty)
+  }
+
+  test("a manifest naming a deleted data file throws, never reads short") {
+    val lib = newLib()
+    lib.write("s", mk(0, 400), Some("ts2"), targetRows = 100) // 4 files
+    val m = lib.resolveVersion("s")
+    val victim = new org.apache.hadoop.fs.Path(lib.root, s"s/data/${m.files(1).path}")
+    assert(victim.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(victim, false))
+    // the seeded scan plans without touching storage, so the loss
+    // surfaces at the action — as an error, for every action shape
+    val df = lib.read("s")
+    val e1 = intercept[Exception](df.collect())
+    assert(String.valueOf(e1.getMessage).contains(victim.getName) ||
+      String.valueOf(e1.getCause).contains(victim.getName), e1.toString)
+    intercept[Exception](df.count())
+    intercept[Exception](lib.read("s", columns = Some(Seq("v"))).collect())
+    intercept[Exception](lib.tail("s", 250).collect())
   }
 }

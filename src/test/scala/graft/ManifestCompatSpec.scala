@@ -20,6 +20,7 @@ import graft.core.{FileEntry, Library, LibraryOptions, SnapshotManifest, Version
   *  - v1 dynamic        (dirSchemas + metadata, pre-delta)
   *  - v1 checkpoint     (full file list written by a delta-aware build)
   *  - v2 delta          (baseVersion set, files EMPTY by design)
+  *  - v1 sized          (file entries carrying bytes/mtimeMs)
   *  - v99 future        (a major this build does not know)
   * Editing an existing fixture to make this spec pass is a compat break
   * by definition — add a new fixture for a new shape instead.
@@ -53,6 +54,79 @@ class ManifestCompatSpec extends SparkSuite {
     assert(delta.files.isEmpty, "a delta manifest stores an empty file list")
     assert(delta.addedFiles.size == 1 &&
       delta.removedPaths == Vector("data/d0/part-1.parquet"))
+
+    // entries without a recorded status decode as unsized (listed at read)
+    assert((v1min.files ++ v1dyn.files ++ ckpt.files ++ delta.addedFiles)
+      .forall(f => f.bytes.isEmpty && f.mtimeMs.isEmpty && f.status.isEmpty))
+    val sized = VersionManifest.fromJson(fixture("version_v1_sized.json"))
+    assert(sized.formatVersion == 1 && sized.files.map(_.status) ==
+      Vector(Some((2150L, 1760000000000L)), Some((1327L, 1760000001000L))))
+    // the sizes need no format bump and survive a re-encode
+    assert(VersionManifest.fromJson(VersionManifest.toJson(sized)) == sized)
+  }
+
+  /** Rewrite a stored manifest as a build that predates recorded file
+    * statuses would have written it: the same JSON minus bytes/mtimeMs.
+    */
+  private def stripStatuses(root: String, v: Int): Unit = {
+    val p = Paths.get(root, "s", "_versions", f"v$v%05d.json")
+    val stripped = JsonMethods.parse(Files.readString(p)).removeField {
+      case ("bytes", _) | ("mtimeMs", _) => true
+      case _ => false
+    }
+    Files.writeString(p, JsonMethods.compact(JsonMethods.render(stripped)))
+  }
+
+  test("a legacy unsized manifest reads by listing its files") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-unsized-").toString
+    val df = spark.range(40).select($"id".as("k"), ($"id" * 3).as("v"))
+    new Library(root, spark).write("s", df, Some("k"), targetRows = 10) // 4 files
+    stripStatuses(root, 0)
+    val lib = new Library(root, spark)
+    assert(lib.resolveVersion("s").files.forall(_.status.isEmpty), "premise: legacy shape")
+    val (back, st) = lib.withQueryStats(lib.read("s"))
+    assert(st.map(_.filesListed) == Seq(4), s"every legacy file is listed: $st")
+    assert(back.count() == 40 && back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+    assert(lib.head("s", 5).count() == 5 && lib.tail("s", 15).count() == 15)
+  }
+
+  test("a mixed chain (unsized base + sized append) lists legacy files, seeds new ones") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-mixed-").toString
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select($"id".as("k"), ($"id" * 3).as("v"))
+    new Library(root, spark).write("s", rows(0, 140), Some("k"), targetRows = 2) // 70 files
+    stripStatuses(root, 0)
+    val lib = new Library(root, spark)
+    lib.append("s", rows(140, 144), targetRows = 2) // v1: +2 sized files
+    val stored1 = VersionManifest.fromJson(
+      Files.readString(Paths.get(root, "s", "_versions", "v00001.json")))
+    assert(stored1.baseVersion.contains(0) && stored1.addedFiles.size == 2 &&
+      stored1.addedFiles.forall(_.status.isDefined), s"premise: sized delta on an unsized base")
+
+    val m = lib.resolveVersion("s")
+    val (legacy, fresh) = m.files.partition(_.status.isEmpty)
+    assert(legacy.size == 70 && fresh.size == 2)
+    val (back, st) = lib.withQueryStats(lib.read("s"))
+    assert(st.map(_.filesListed) == Seq(70), s"exactly the legacy files are listed: $st")
+    val all = rows(0, 144)
+    assert(back.count() == 144 && back.exceptAll(all).isEmpty && all.exceptAll(back).isEmpty)
+    val (v0, st0) = lib.withQueryStats(lib.read("s", Library.AsOf.Version(0)))
+    assert(st0.map(_.filesListed) == Seq(70) && v0.count() == 140)
+
+    // a seeded file is not looked up while planning: its loss surfaces
+    // at the action. A listed one is: its loss surfaces at read(). Both
+    // throw; neither returns short.
+    val hconf = spark.sparkContext.hadoopConfiguration
+    def dataPath(f: FileEntry) = new org.apache.hadoop.fs.Path(root, s"s/data/${f.path}")
+    val gone = dataPath(fresh.head)
+    assert(gone.getFileSystem(hconf).delete(gone, false))
+    val planned = lib.read("s")
+    intercept[Exception](planned.collect())
+    val goneLegacy = dataPath(legacy.head)
+    assert(goneLegacy.getFileSystem(hconf).delete(goneLegacy, false))
+    val e = intercept[java.io.FileNotFoundException](lib.read("s", Library.AsOf.Version(0)))
+    assert(e.getMessage.contains(goneLegacy.getName), e.getMessage)
   }
 
   test("delta fixture RESOLVES through Library.manifest against the checkpoint base") {
