@@ -41,26 +41,6 @@ import pyarrow.parquet as pq
 
 GEN_VERSION = "gen-sf1-v4"
 REPLICAS = 10  # overridden by argv[3] for scale-rehearsal dirs (sf5/sf10)
-# ZIPF mode (argv[4] == 'zipf'): rewrite documents.text with a Zipfian
-# synthetic vocabulary. The source generator's corpus is DENSE-vocab
-# (median shingle df ~141 at sf0.1 — every 3-gram repeats constantly),
-# which PrefixProbe proved unrepresentative of natural crawls (avg
-# shingle df ~1-3, Zipf-tailed). Every Jaccard dispatch decision
-# (PrefixMaxAvgDf, dense-vs-incidence) was tuned on the dense corpus;
-# this mode provides the OTHER regime as a first-class sf-dir fixture so
-# ScaleProbe can measure both. Construction:
-#   - token (base, i) = 'z' + ceil(V^u), u = hash-uniform in [0,1):
-#     P(rank <= r) = ln r / ln V, i.e. df(rank) ~ 1/rank — Zipf s=1 —
-#     over a vocabulary V = 40 x ndocs (~80 tokens/doc => avg df ~2).
-#   - doc length 40 + hash % 80 tokens (40..119).
-#   - dup structure: doc_id % 50 == 1 copies doc_id-1's token stream
-#     with every 16th token re-drawn under a salt — ~13/16 of its
-#     3-gram shingles survive => planted near-dup pairs at jaccard
-#     ~0.6-0.7, discoverable by BOTH the prefix (t>=0.5) and the
-#     incidence paths.
-# All other tables scale exactly as the normal mode (same strides), so
-# every ScaleProbe query still runs against a zipf dir.
-ZIPF = False
 
 # table -> list of (column, stride_source_table, stride_source_column)
 # stride_source lets foreign keys reuse the primary table's stride.
@@ -94,8 +74,6 @@ def main(src, dst):
     marker = os.path.join(dst, "_GRAFT_SF1_OK")
     # replica-count-qualified marker (bare GEN_VERSION == the default 10)
     want = GEN_VERSION if REPLICAS == 10 else f"{GEN_VERSION}-r{REPLICAS}"
-    if ZIPF:
-        want += "-zipf"
     if os.path.isfile(marker) and open(marker).read().strip() == want:
         print(f"scaled dir up to date: {dst}")
         return
@@ -134,14 +112,11 @@ def main(src, dst):
             if name in shifted:
                 exprs.append(f"{shifted[name]} AS {name}")
             elif t == "documents" and name == "text":
-                if ZIPF:
-                    exprs.append("text")  # rewritten wholesale below
-                else:
-                    # insert marker token every 2 words on replicas > 0
-                    exprs.append(
-                        "CASE WHEN r = 0 THEN text ELSE "
-                        "regexp_replace(text, '(\\S+ \\S+) ', "
-                        "'\\1 w' || r || ' ', 'g') END AS text")
+                # insert marker token every 2 words on replicas > 0
+                exprs.append(
+                    "CASE WHEN r = 0 THEN text ELSE "
+                    "regexp_replace(text, '(\\S+ \\S+) ', "
+                    "'\\1 w' || r || ' ', 'g') END AS text")
             elif t == "documents" and name == "n_chars":
                 exprs.append("0 AS n_chars")  # recomputed below
             elif t == "embeddings" and name == "embedding":
@@ -155,24 +130,6 @@ def main(src, dst):
         q = (f"SELECT {sel} FROM read_parquet('{src}/{t}.parquet') "
              f"CROSS JOIN (SELECT unnest(range({REPLICAS})) AS r)")
         if t == "documents":
-            if ZIPF:
-                ndocs = con.execute(
-                    f"SELECT count(*) FROM read_parquet('{src}/{t}.parquet')"
-                ).fetchone()[0] * REPLICAS
-                vocab = 40 * ndocs
-                salt = ("CASE WHEN zmut AND i % 16 = 0 THEN ':m' ELSE '' END")
-                ztok = (f"'z' || CAST(CAST(ceil(pow({vocab}, "
-                        f"(hash(CAST(zbase AS VARCHAR) || ':' || "
-                        f"CAST(i AS VARCHAR) || {salt}) % 1000000) "
-                        f"/ 1000000.0)) AS BIGINT) AS VARCHAR)")
-                zlen = ("CAST(40 + hash(CAST(zbase AS VARCHAR) || ':len') "
-                        "% 80 AS INT)")
-                q = (f"SELECT * EXCLUDE (zbase, zmut) REPLACE ("
-                     f"array_to_string(list_transform(range({zlen}), "
-                     f"i -> {ztok}), ' ') AS text) "
-                     f"FROM (SELECT *, doc_id - (CASE WHEN doc_id % 50 = 1 "
-                     f"THEN 1 ELSE 0 END) AS zbase, "
-                     f"doc_id % 50 = 1 AS zmut FROM ({q}))")
             q = f"SELECT * REPLACE (length(text) AS n_chars) FROM ({q})"
         # Text/vector tables compress ~50x, so DuckDB's default layout (one
         # file, ~122k-row row groups) packs the whole table into a couple
@@ -232,6 +189,4 @@ def scale_events(src, out):
 if __name__ == "__main__":
     if len(sys.argv) > 3:
         REPLICAS = int(sys.argv[3])
-    if len(sys.argv) > 4 and sys.argv[4] == "zipf":
-        ZIPF = True
     main(sys.argv[1], sys.argv[2])

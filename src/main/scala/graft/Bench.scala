@@ -15,6 +15,12 @@ object Bench {
     * (BASELINE.md: groupby q1/q3/q4/adv2, string/isin/numeric/regex
     * filters, projection, resample, read) — these run without temp-dir
     * side effects.
+    *
+    * Stdout budget: each entry adds `"<name>":9999.999,` to
+    * [[compactLine]] at BenchLineSpec's worst-case widths — name length
+    * + 12 chars, 41 for the longest name here (29 chars). With these 32
+    * entries the worst-case line is 1163 chars, leaving 337 under the
+    * 1500-char pin: about eight more 29-char names.
     */
   val headline: Seq[String] = Seq(
     "q01_filter_numeric",
@@ -211,10 +217,15 @@ object Bench {
     s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$q$ot,"floor":${f"$floor%.3f"},"floor_q":${f"$floorQ%.3f"}$s1$s1o,"sf":"$sfDir"}"""
   }
 
+  /** Session width for the measuring mains (Bench, Probe): measure on
+    * the host you run on unless SPARK_GRAFT_CPUS pins it.
+    */
+  private[graft] def hostCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString).toInt
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
+    val cpus = hostCpus
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -250,11 +261,12 @@ object Bench {
     // over round in BENCH_FULL.
     def interleavedPass(dir: String, exclude: Set[String] = Set.empty)
         : (Seq[(String, Double)], Seq[(String, Double)], Map[String, Double]) = {
-      // TWO warmup passes: FixedPathProbe measured the first ~5 runs of
-      // any query still descending ~10-20% as codegen classes JIT-warm
+      // TWO warmup passes: the first ~5 runs of any query were measured
+      // still descending ~10-20% as codegen classes JIT-warm
       // (a variant ordered first reads ~2x a variant ordered last on
       // the same config) — one warmup leaves the median-of-3 reading
-      // warmup drift, not the engine
+      // warmup drift, not the engine (SURVEY.md §21, "Bench gate
+      // defended" #2)
       headline.foreach(run(_, dir))
       headline.foreach(run(_, dir))
       val eP = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]

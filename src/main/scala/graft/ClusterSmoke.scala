@@ -72,11 +72,10 @@ object ClusterSmoke {
     // retention/GC commit drives manifest CAS from the batch pool
     "q183_restore_version", "admin_maintain")
 
-  /** Smoke-only kernels that aren't SparkEntry gates (the ScaleProbe
-    * Extra convention): admin_maintain fabricates a fragmented
-    * multi-version root from sfDir rows and returns the maintenance
-    * ledger — deterministic detail strings, so the fingerprint must
-    * match across masters.
+  /** Smoke-only kernels that aren't SparkEntry gates: admin_maintain
+    * fabricates a fragmented multi-version root from sfDir rows and returns
+    * the maintenance ledger — deterministic detail strings, so the
+    * fingerprint must match across masters.
     */
   private val extra: Map[String, (SparkSession, String) => DataFrame] = Map(
     "admin_maintain" -> { (s, dir) =>

@@ -10,6 +10,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * per-stage task counts and executor run/GC/CPU time from a listener,
   * plus the final executed plan (the AQE-resolved one, which
   * `explain("formatted")` taken before execution does not show).
+  * `runs=0` prints only each query's construct time and formatted plan,
+  * executing nothing — the plan-dump mode. The session is sized like
+  * Bench's: `SPARK_GRAFT_CPUS`, else the host's available processors.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -18,7 +21,8 @@ object Probe {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val flags = args.drop(2).toSet
     val runs = flags.collectFirst { case f if f.startsWith("runs=") => f.drop(5).toInt }.getOrElse(3)
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val cpus = Bench.hostCpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     @volatile var stages = List.empty[String]

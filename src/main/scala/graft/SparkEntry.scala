@@ -105,9 +105,10 @@ object SparkEntry {
     * l_linenumber < 8). A single long key keeps the WHOLE comparison
     * inside the sorter's radix prefix; a two-column sort radixes the
     * first column only and calls the record comparator for every
-    * first-key tie (FixedPathProbe, sf0.1 lineitem projection:
-    * 593 → 376 ms). Past the size gate the same key drives the range
-    * orderBy — identical total order, still sampled/parallel at scale.
+    * first-key tie (sf0.1 lineitem projection: 593 → 376 ms, SURVEY.md
+    * §21 "Bench gate defended" #3). Past the size gate the same key
+    * drives the range orderBy — identical total order, still
+    * sampled/parallel at scale.
     */
   private[graft] def sortWideFused(df: DataFrame, key: Column): DataFrame =
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= WideSortBytes)
@@ -967,9 +968,9 @@ object SparkEntry {
       // size-ratio bound, then verify with an exact intersection count —
       // 100% recall by construction, so the oracle is the same
       // brute-force Jaccard replay as q30 at the higher threshold. This
-      // is the big-corpus high-threshold strategy (SURVEY §15: the
-      // incidence path is Σ|bucket|²-bound; ScaleProbe measured the
-      // prefix path 50× cheaper at sf10/t=0.8).
+      // is the big-corpus high-threshold strategy (SURVEY.md §15 scale
+      // rehearsal: the incidence path is Σ|bucket|²-bound; the prefix
+      // path measured 50× cheaper at sf10/t=0.8).
       Dedup.ngramJaccardPairsImpl(t(s, dir, "documents"), "doc_id", "text", 3, 0.5,
         maxDocFreq = 0, forceDense = Some(false), forcePrefix = Some(true))
         .repartition(1).sortWithinPartitions("id_a", "id_b")
@@ -2573,8 +2574,8 @@ object SparkEntry {
       // The skew-safe as-of formulation (per-(key, time-chunk) windows +
       // summary carry prefix scan) gated against the SAME DuckDB ASOF
       // oracle as q41 — identical semantics, bounded single-task buffer
-      // (SkewProbe: 8x lower peak-task records, 2.1x faster wall on a
-      // 50%-mega-key corpus at 16M rows).
+      // (8x lower peak-task records, 2.1x faster wall on a 50%-mega-key
+      // corpus at 16M rows; SURVEY.md §14 "Key-skew closure").
       val ev = t(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
       val signups = ev.filter(col("event_type") === "signup")

@@ -2515,11 +2515,12 @@ final class Library(
 
   /** Pool width for ADMIN metadata walks (sizesBySymbol /
     * storageSummary): these are pure listing round-trips, not data
-    * jobs, and an object-store census is latency-bound — AdminRttProbe
-    * (10 ms/op simulated RTT, 200-symbol root) measured the 8-wide
-    * walk at ~4x effective parallelism; 32-wide cuts a 10k-symbol
-    * census from minutes toward tens of seconds without contending
-    * with data-plane work (the walks hold no Spark resources).
+    * jobs, and an object-store census is latency-bound — the 8-wide
+    * walk measured ~4x effective parallelism under a 10 ms/op simulated
+    * RTT on a 200-symbol root (SURVEY.md round 20, "Review findings
+    * (V6)" #3); 32-wide cuts a 10k-symbol census from minutes toward
+    * tens of seconds without contending with data-plane work (the
+    * walks hold no Spark resources).
     */
   val AdminWalkParallelism = 32
 

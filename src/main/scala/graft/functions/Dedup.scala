@@ -146,14 +146,15 @@ object Dedup {
       if (maxDocFreq <= 0) cp0
       else {
         // groupBy-count → ANTI-join on the over-cap keys, NOT a count
-        // window: a partitionBy window lands every posting of a
-        // boilerplate shingle on ONE task and buffers it there before the
-        // cap can filter — the single-key buffer the cap exists to avoid.
-        // The pre-aggregate shuffles only (s, count) partials, and the
-        // anti side holds just the few skew keys (≤ rows/cap), which AQE
+        // window: a partitionBy window lands every posting of a boilerplate
+        // shingle on ONE task and buffers it there before the cap can
+        // filter — the single-key buffer the cap exists to avoid. The
+        // pre-aggregate shuffles only (s, count) partials, and the anti
+        // side holds just the few skew keys (≤ rows/cap), which AQE
         // broadcasts when it measures small — the semi form (join the
-        // survivor-key set) pays a sort of a key set nearly as large as
-        // the data (CapProbe, 8M docs: semi 14.3s vs anti 7.0s).
+        // survivor-key set) pays a sort of a key set nearly as large as the
+        // data (8M docs: semi 14.3s vs anti 7.0s; SURVEY.md §11 "Bucket-cap
+        // shape").
         val bad = cp0.groupBy("s").agg(count(lit(1)).as("__df"))
           .filter(col("__df") > maxDocFreq).select("s")
         cp0.join(bad, Seq("s"), "left_anti")
@@ -536,19 +537,19 @@ object Dedup {
     * parity the spec pins — because both sides use [[bandedRows]] and
     * the cap counts the COMBINED (index + batch) bucket population.
     *
-    * Scale shape, measured (IndexProbe sf1→sf5: scratch re-signaturing
-    * grows 1.02→1.99 s with a 5× corpus, this path stays flat
-    * 1.37→1.16 s at fixed batch): what the index removes is the
-    * CORPUS-side work — re-shingling and re-minhashing every document
-    * per drop. The index side is a band-row table ≈1% of corpus text
-    * bytes; bounded probes (≤ `maxProbeKeys` distinct keys) drive
-    * manifest FILE PRUNING of it, which pays off when the probe-key set
-    * is narrow relative to the file count (uniform hash keys spread a
-    * LARGE batch's keys across every file, so pruning asymptotes to a
-    * full scan of the 1%-scale band table — still never touching
-    * corpus text; past the cap the fallback join has the same bound).
-    * Same-id pairs are dropped: an id present on both sides is the
-    * same record re-observed, not a duplicate of itself.
+    * Scale shape, measured (SURVEY.md §16 "IndexProbe", sf1→sf5: scratch
+    * re-signaturing grows 1.02→1.99 s with a 5× corpus, this path stays
+    * flat 1.37→1.16 s at fixed batch): what the index removes is the
+    * CORPUS-side work — re-shingling and re-minhashing every document per
+    * drop. The index side is a band-row table ≈1% of corpus text bytes;
+    * bounded probes (≤ `maxProbeKeys` distinct keys) drive manifest FILE
+    * PRUNING of it, which pays off when the probe-key set is narrow
+    * relative to the file count (uniform hash keys spread a LARGE batch's
+    * keys across every file, so pruning asymptotes to a full scan of the
+    * 1%-scale band table — still never touching corpus text; past the cap
+    * the fallback join has the same bound). Same-id pairs are dropped: an
+    * id present on both sides is the same record re-observed, not a
+    * duplicate of itself.
     */
   def minhashCandidatesAgainstIndex(
       lib: graft.core.Library,
@@ -1113,15 +1114,15 @@ object Dedup {
       maxDocFreq: Long): DataFrame = {
     // With a doc-frequency cap set, over-frequent shingles are dropped
     // BEFORE the bucket lists materialize: collect_list's aggregation
-    // buffer for a boilerplate shingle shared by m docs is O(m) on one
-    // key, so a post-collect filter would cap the pair blow-up but not
-    // the buffer — at reference scale ("billions of rows") that single
-    // buffer is the OOM. The freq pre-aggregate shuffles only (s, count)
-    // partials; the ANTI-join side holds only the few over-cap keys
-    // (≤ incidences/cap — AQE broadcasts it when small), where a semi
-    // join against the survivor set would sort a key set nearly as large
-    // as the postings (CapProbe). Results are identical either way: an
-    // over-cap bucket contributed nothing downstream.
+    // buffer for a boilerplate shingle shared by m docs is O(m) on one key,
+    // so a post-collect filter would cap the pair blow-up but not the
+    // buffer — at reference scale ("billions of rows") that single buffer
+    // is the OOM. The freq pre-aggregate shuffles only (s, count) partials;
+    // the ANTI-join side holds only the few over-cap keys (≤ incidences/cap
+    // — AQE broadcasts it when small), where a semi join against the
+    // survivor set would sort a key set nearly as large as the postings
+    // (SURVEY.md §11 "Bucket-cap shape"). Results are identical either way:
+    // an over-cap bucket contributed nothing downstream.
     val capped =
       if (maxDocFreq <= 0) posts
       else {
@@ -1150,16 +1151,16 @@ object Dedup {
     * filtering instead of the all-incidence aggregate. Below it the
     * prefix barely shrinks (p = n − ⌈t·n⌉ + 1 keeps ~(1−t) of each
     * doc's shingles) and its extra passes cost more than they save —
-    * the r12 ScaleProbe measured the t=0.2 regime as incidence-bound
-    * either way.
+    * the round-12 scale rehearsal measured the t=0.2 regime as
+    * incidence-bound either way (SURVEY.md §15).
     */
   private val PrefixPathMinThreshold = 0.5
 
   /** Exact Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin family;
     * distributed shape after Vernica, Carey & Li, SIGMOD 2010
     * "Efficient Parallel Set-Similarity Joins Using MapReduce") — the
-    * high-threshold answer to the quadratic wall ScaleProbe measured at
-    * sf10 (SURVEY §15): the all-incidence aggregate pays Σ|bucket|²
+    * high-threshold answer to the quadratic wall measured at sf10
+    * (SURVEY.md §15): the all-incidence aggregate pays Σ|bucket|²
     * co-occurrences, but for Jaccard ≥ t any qualifying pair must (a)
     * satisfy t·max(|A|,|B|) ≤ min(|A|,|B|) and (b) collide on at least
     * one shingle inside BOTH docs' (global-rarity-ordered) prefixes of
@@ -1185,25 +1186,26 @@ object Dedup {
     * the verification join amplifies the un-pruned candidates by doc
     * length — measured as a 75 GB spill on the sf10 rehearsal corpus
     * (300k distinct shingles across 500k docs, median df 141; see
-    * PrefixProbe/SURVEY §15). Natural corpora sit at avg df ≈ 1–3
+    * SURVEY.md §15, PrefixProbe). Natural corpora sit at avg df ≈ 1–3
     * (most shingles contain doc-unique content), which is the regime
     * prefix filtering is FOR. The gate costs one aggregate over the
     * freq table the path builds anyway.
     */
   private val PrefixMaxAvgDf = 8.0
 
-  /** The SECOND prefix-dispatch condition (round 14, measured on the
-    * Zipf-vocabulary sf dirs): rare shingles alone don't justify the
-    * prefix path — on a boilerplate-FREE natural corpus (sf10-zipf,
-    * avg df 1.04) incidence measured 12.3 s where prefix paid 27.6 s /
-    * 3.4 GB for its two corpus-postings exchanges (collect_list + the
-    * prefix self-join), because the candidate-pair mass Σ df·(df−1)/2
-    * was already tiny. Prefix engages only when that mass exceeds this
-    * factor × total postings — i.e. when the incidence bucket join
-    * would materially out-cost the prefix machinery (PrefixProbe's
-    * boilerplate fixture: Σdf² ≈ 5 × postings ⇒ prefix, where it wins
-    * 32×). Both conditions cost the ONE aggregate over the freq table
-    * the path builds anyway.
+  /** The SECOND prefix-dispatch condition (round 14, measured on
+    * Zipf-vocabulary sf dirs; SURVEY.md §17 "Two vocabulary regimes" keeps
+    * the numbers and the generator rule): rare shingles alone don't justify
+    * the prefix path — on a boilerplate-FREE natural corpus (sf10-zipf, avg
+    * df 1.04) incidence measured 12.3 s where prefix paid 27.6 s / 3.4 GB
+    * for its two corpus-postings exchanges (collect_list + the prefix
+    * self-join), because the candidate-pair mass Σ df·(df−1)/2 was already
+    * tiny. Prefix engages only when that mass exceeds this factor × total
+    * postings — i.e. when the incidence bucket join would materially
+    * out-cost the prefix machinery (the boilerplate fixture of SURVEY.md
+    * §15 and §17 "Two vocabulary regimes": Σdf² ≈ 5 × postings ⇒ prefix,
+    * where it wins 32×). Both conditions cost the ONE aggregate over the
+    * freq table the path builds anyway.
     */
   private val IncidencePairsFactor = 2.0
 

@@ -48,20 +48,19 @@ object Importance {
       s"bucket count must be in (0, 65536], got $buckets — the ratio table " +
         "is collected to the driver and must stay bounded")
     // The WHOLE model is one job: both sides' texts flow through the
-    // dsir_bucket_counts partial aggregate in a single tagged union
-    // (each map task ships ONE buckets-long counter array per side —
-    // a 2-row, 2·buckets-long collect, bounded by construction),
-    // totals and the smoothed log-ratios then compute driver-side in
-    // plain arithmetic. The former explode(split) → groupBy(side, bk)
-    // shape materialized a corpus-sized token-row stream through the
-    // hash aggregate for the same counts (FixedPathProbe: ~365 ms of
-    // q93's sf0.1 wall was this model job); the kernel splits each doc
-    // in place with the identical tokenization (DsirModel.score's
-    // convention — null text skipped, empty text one empty token).
-    // One model job + one scoring job total; a per-piece formulation
-    // (count() totals, separate aggregates, a join-then-collect) paid
-    // five driver round-trips of pure scheduling floor for the same
-    // numbers.
+    // dsir_bucket_counts partial aggregate in a single tagged union (each
+    // map task ships ONE buckets-long counter array per side — a 2-row,
+    // 2·buckets-long collect, bounded by construction), totals and the
+    // smoothed log-ratios then compute driver-side in plain arithmetic. The
+    // former explode(split) → groupBy(side, bk) shape materialized a
+    // corpus-sized token-row stream through the hash aggregate for the same
+    // counts (~365 ms of q93's sf0.1 wall was this model job; SURVEY.md §21
+    // "Bench gate defended" #3); the kernel splits each doc in place with
+    // the identical tokenization (DsirModel.score's convention — null text
+    // skipped, empty text one empty token). One model job + one scoring job
+    // total; a per-piece formulation (count() totals, separate aggregates,
+    // a join-then-collect) paid five driver round-trips of pure scheduling
+    // floor for the same numbers.
     val sides = raw.select(lit(0).as("side"), col(textCol).as("__t"))
       .unionAll(target.select(lit(1).as("side"), col(textCol).as("__t")))
       .filter(col("__t").isNotNull)

@@ -789,16 +789,17 @@ object Retrieval {
     // of an exact M-query batch (the per-query loop pays the same total
     // spread over M jobs). At scan parallelism (a pruned read is a few
     // file splits) that expansion serializes into those few tasks
-    // (ScaleProbe sf1, 1000 queries: 27.6 s peak task); one cheap
-    // shuffle of the PRUNED postings (bounded by the batch's term
-    // postings, never the corpus) spreads the expansion and the
-    // map-side partial aggregation across the cluster. Hashing on
+    // (sf1, 1000 queries: 27.6 s peak task; SURVEY.md §21 "ScaleProbe:
+    // the 1000-query batch"); one cheap shuffle of the PRUNED postings
+    // (bounded by the batch's term postings, never the corpus) spreads
+    // the expansion and the map-side partial aggregation across the
+    // cluster. Hashing on
     // __rid also lands every (query, doc) pair of a doc in one task,
     // so partial sums are final-sized before the exchange. The width is
     // EXPLICIT: an N-less repartition is AQE-rebalanced by the pruned
     // read's BYTES (~MBs), which under-provisions a stage whose compute
-    // is the ×queries expansion, not the input size (ScaleProbe sf1:
-    // 54 s peak task coalesced vs 4 s pinned).
+    // is the ×queries expansion, not the input size (same SURVEY.md
+    // section, sf1: 54 s peak task coalesced vs 4 s pinned).
     // explicit width: "spark.sql.shuffle.partitions" can be non-numeric
     // on some platforms ("auto" under vendor AQE) — fall back to
     // defaultParallelism rather than NumberFormatException (ADVICE r19)

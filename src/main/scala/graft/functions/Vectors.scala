@@ -416,8 +416,9 @@ object Vectors {
     // Assignment is ONE codegen'd narrow map (plans.NearestCentroid):
     // the former crossJoin(broadcast) + interpreted HOF distance +
     // min(struct) re-aggregate materialized n×k rows and ran the inner
-    // loop interpreted — ScaleProbe sf10 measured 42 s single tasks in
-    // that shape (154 s wall for bare kmeansAssign at 200k×391×64);
+    // loop interpreted — sf10 measured 42 s single tasks in that shape
+    // (154 s wall for bare kmeansAssign at 200k×391×64; SURVEY.md §17
+    // "The NearestCentroid kernel");
     // the kernel replays the identical IEEE arithmetic with zero joins.
     def assign(ct: Array[Array[Double]]): DataFrame =
       pts.select(col("__kid"), col("__x"),
@@ -823,8 +824,9 @@ object Vectors {
     // ---- the k ∝ n envelope, ENFORCED, not just documented ----
     // Within-cluster pair cost is Σᵢ|cᵢ|² ≈ n·(n/k) when balanced: hold
     // k fixed while the corpus grows 100× and the pair join grows 100×
-    // per cluster — the one super-linear shuffle ScaleProbe measured at
-    // sf5 (11.3 s/22.8 MB → 32.5 s/597.6 MB with fixed k). SemDeDup's
+    // per cluster — the one super-linear shuffle measured at sf5
+    // (11.3 s/22.8 MB → 32.5 s/597.6 MB with fixed k; SURVEY.md §16
+    // "ScaleProbe: round-13 operators"). SemDeDup's
     // own prescription is k ∝ n (the paper runs k = 50k on 100M+
     // points). So: k ≤ 0 derives k = ⌈n / targetMeanCluster⌉ from one
     // corpus count, and an EXPLICIT k must keep the expected mean

@@ -29,8 +29,8 @@ import graft.core.Ts
   * per-(key, chunk) carry-in table — the last right-row values of every
   * earlier chunk — through a second, summary-sized window: the
   * distributed prefix scan (same two-level scheme as the position
-  * engine in functions.Sampling). SkewProbe measures the two shapes on
-  * a planted mega key.
+  * engine in functions.Sampling). SURVEY.md §14 ("Key-skew closure")
+  * records the two shapes measured on a planted mega key.
   */
 object AsOfJoin {
 

@@ -106,8 +106,9 @@ object DsirScore {
   * explode(split(text)) → groupBy(side, bucket) — which materializes a
   * corpus-sized token-row stream through the hash aggregate — with
   * counter arrays: each map task ships ONE buckets-long array per
-  * group (FixedPathProbe: the q93 model job was 365 ms of the 469 ms
-  * sf0.1 wall, ~40% of it explode-row overhead).
+  * group (measured at sf0.1: the q93 model job was 365 ms of the 469 ms
+  * wall, ~40% of it explode-row overhead; SURVEY.md §21 "Bench gate
+  * defended" records q93 0.47 → 0.24 s with this kernel).
   */
 final case class DsirBucketCounts(
     child: Expression,

@@ -14,10 +14,11 @@ import org.apache.spark.sql.types._
   * `pts.crossJoin(broadcast(centroids))` + an
   * `aggregate(zip_with((x−y)²))` HOF distance + a `min(struct)` keyed
   * re-aggregate — materializes n×k rows and evaluates the distance
-  * INTERPRETED (higher-order functions don't codegen), which ScaleProbe
+  * INTERPRETED (higher-order functions don't codegen), which was
   * measured as the whole cost of SemDeDup at sf10: 42 s single tasks
-  * inside kmeansAssign while the actual pair join stayed balanced. This
-  * kernel computes the argmin across all k centroids in ONE codegen'd
+  * inside kmeansAssign while the actual pair join stayed balanced
+  * (SURVEY.md §17 "The NearestCentroid kernel"). This kernel
+  * computes the argmin across all k centroids in ONE codegen'd
   * narrow map — no join, no n×k row blowup, no re-aggregate, and the
   * per-element arithmetic is the IDENTICAL IEEE sequence the HOF ran
   * (ascending dims, acc = acc + d·d), so distances are bit-equal to the

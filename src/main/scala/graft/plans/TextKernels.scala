@@ -388,20 +388,20 @@ object TextKernels {
     * Dedup.dropRepeatedSpans, ONE pass over the raw bytes.
     *
     * The load-bearing identity: `split(text, " ", -1)` preserves empty
-    * tokens, so `concat_ws(" ", slice(tokens, j, k))` is exactly the
-    * BYTE SLICE of the original text from token j's first byte to token
-    * j+k-1's last byte (single-space separators round-trip, runs of
-    * spaces become interior empty tokens that rejoin to the same run).
-    * Hashing those windows directly replaces the Column formulation's
-    * per-gram string build (concat_ws+slice allocations) and, in
-    * portable mode, the hex-string md5 → conv(substring) chain — the
-    * measured dominant CPU of q112 at sf5 (ScaleProbe r12). Bit-equal
-    * outputs: portable = first 15 md5 hex digits as a long (extracted
-    * from the raw digest bytes: 7 full bytes + the high nibble of byte
-    * 7), production = XXH64(bytes, seed 42) — precisely Spark's
-    * xxhash64. A doc with fewer than spanWords tokens yields an empty
-    * array (0x20 never occurs inside a multi-byte UTF-8 sequence, so
-    * byte-level space scanning is codepoint-safe).
+    * tokens, so `concat_ws(" ", slice(tokens, j, k))` is exactly the BYTE
+    * SLICE of the original text from token j's first byte to token j+k-1's
+    * last byte (single-space separators round-trip, runs of spaces become
+    * interior empty tokens that rejoin to the same run). Hashing those
+    * windows directly replaces the Column formulation's per-gram string
+    * build (concat_ws+slice allocations) and, in portable mode, the
+    * hex-string md5 → conv(substring) chain — the measured dominant CPU of
+    * q112 at sf5 (SURVEY.md §15, ScaleProbe r12). Bit-equal outputs:
+    * portable = first 15 md5 hex digits as a long (extracted from the raw
+    * digest bytes: 7 full bytes + the high nibble of byte 7), production =
+    * XXH64(bytes, seed 42) — precisely Spark's xxhash64. A doc with fewer
+    * than spanWords tokens yields an empty array (0x20 never occurs inside
+    * a multi-byte UTF-8 sequence, so byte-level space scanning is
+    * codepoint-safe).
     */
   def gramHashes(text: UTF8String, spanWords: Int, portable: Boolean): ArrayData = {
     val bytes = text.getBytes

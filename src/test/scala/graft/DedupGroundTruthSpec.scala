@@ -552,7 +552,8 @@ class DedupGroundTruthSpec extends SparkSuite {
     // boilerplate-heavy natural corpus: every doc carries 12 shared
     // trailing words, so ~10 fully-boilerplate shingles have df = 200
     // => Σ df(df−1)/2 ≈ 199k ≫ 2 × ~6k postings, avg df ~1.5 → PREFIX
-    // (the PrefixProbe regime where incidence serialized 32× worse)
+    // (the SURVEY.md §15 PrefixProbe regime where incidence serialized
+    // 32× worse)
     val heavy = (1L to 200L).map { i =>
       (i, ((1 to 20).map(j => s"u${i}x$j") ++
         (1 to 12).map(j => s"bp$j")).mkString(" "))

@@ -39,9 +39,10 @@ object HttpObjectStore {
   final class Server {
     private val objects = new ConcurrentHashMap[String, Obj]()
     private val http = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    // enough server concurrency that PUTs really race AND a delayMs
-    // census (AdminRttProbe) measures the client's parallelism, not an
-    // artificial 8-way server bottleneck a real object store lacks
+    // enough server concurrency that the conditional PUTs really race
+    // and the Library's 32-way admin walks (AdminWalkParallelism) never
+    // queue behind an artificial server bottleneck a real object store
+    // lacks
     private val pool = Executors.newFixedThreadPool(64)
     http.setExecutor(pool)
     http.createContext("/", (x: HttpExchange) => handle(x))
@@ -49,23 +50,13 @@ object HttpObjectStore {
 
     def port: Int = http.getAddress.getPort
     // HttpServer.stop does NOT shut down an externally-supplied
-    // executor; its non-daemon threads would keep a runMain JVM alive
-    // forever after main returns (found the hard way by AdminRttProbe)
+    // executor; its non-daemon threads would keep the JVM alive after
+    // the last spec returns
     def stop(): Unit = { http.stop(0); pool.shutdownNow(); () }
     def keys: Seq[String] = { import scala.jdk.CollectionConverters._; objects.keySet.asScala.toSeq }
 
-    /** Simulated per-request RTT (AdminRttProbe): every op sleeps this
-      * long before being served, the object-store latency a census
-      * walk multiplies. 0 = off (every spec's default).
-      */
-    @volatile var delayMs: Long = 0
-    private val served = new java.util.concurrent.atomic.AtomicLong(0)
-    def requests: Long = served.get
-
     private def handle(x: HttpExchange): Unit =
       try {
-        served.incrementAndGet()
-        if (delayMs > 0) Thread.sleep(delayMs)
         val key = x.getRequestURI.getPath
         (x.getRequestMethod, key) match {
           case ("GET", "/__list") =>
