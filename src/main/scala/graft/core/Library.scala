@@ -1,10 +1,14 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.ManifestScan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveType
 
 import java.nio.charset.StandardCharsets
 import java.util.UUID
@@ -35,6 +39,13 @@ import java.util.UUID
   * whose [minIdx, maxIdx] intersect the range (the reference's segment
   * splice, _store.py:1103); reads prune files by manifest stats before
   * Spark ever lists them.
+  *
+  * Index order: a manifest lists its files index-disjoint, by lower
+  * bound, then path, files without bounds last, with cumulative
+  * rowOffsets in that order. The rule lives in one place, the companion's
+  * `IdxKeys` (one instance per key family: long-unit or string, chosen
+  * from the stored index type); every commit site sorts, checks
+  * disjointness and decodes footer bounds through it.
   */
 final class Library(
     val root: String,
@@ -376,23 +387,17 @@ final class Library(
 
   // ------------------------------------------------------------ write
 
-  /** Index stats unit: ns for long indexes, µs for timestamp indexes.
-    * String indexes never pass through here — their bounds live in
-    * FileEntry.minStr/maxStr and compare with [[Library.strCmp]].
-    */
-  private def idxAsLong(c: org.apache.spark.sql.Column, t: DataType): org.apache.spark.sql.Column =
-    t match {
-      case LongType | IntegerType => c.cast(LongType)
-      case TimestampType => unix_micros(c)
-      case TimestampNTZType => unix_micros(c.cast(TimestampType))
-      case DateType => c.cast(TimestampType).cast(LongType) * 1000000L
-      case other => throw new IllegalArgumentException(s"unsupported index type $other")
-    }
-
   /** The four first-class index kinds of the reference (stream/index.hpp:84):
     * timestamp, long/int, date — long-unit here — and string TableIndex.
     */
   private def isStringIdx(t: DataType): Boolean = t == StringType
+
+  /** The [[IdxKeys]] family of an index type, chosen once per commit or
+    * read from the STORED type. Unindexed data (None) carries no bounds,
+    * so either family orders its files by path alone.
+    */
+  private def keysOf(t: Option[DataType]): IdxKeys =
+    if (t.exists(isStringIdx)) StrKeys else LongKeys
 
   /** Index-unit family: range bounds and residual filters only line up
     * WITHIN a family — long/int index values are raw epoch-ns (Ts.scala),
@@ -417,53 +422,34 @@ final class Library(
         "unit families compare raw ns against µs; cast the frame's index " +
         "to the stored type first")
 
-  /** Inclusive index range for file pruning / splice partitioning —
-    * one concrete ordering per index family, so every comparison between
-    * a manifest bound and a query bound goes through exactly one place.
-    * Missing stats always mean "cannot exclude".
+  /** Inclusive index range of one key family ([[IdxKeys.Range]]). */
+  private type KeyRange = IdxKeys#Range
+
+  /** A caller's explicit range — `dateRange` (epoch-ns, long-unit
+    * indexes) or `keyRange` (string indexes) — in the manifest unit of
+    * index type `t`.
     */
-  private sealed trait KeyRange {
-    /** May the file contain in-range rows? Missing stats ⇒ true (read-side
-      * pruning must never exclude what it cannot bound).
-      */
-    def intersects(f: FileEntry): Boolean
-    /** Does the file PROVABLY contain in-range rows? Missing stats ⇒ false
-      * (splice only rewrites files it can bound — all-null-key files stay
-      * untouched, exactly like the pre-string-index behavior).
-      */
-    def intersectsStrict(f: FileEntry): Boolean
-    def wholeFileBelow(f: FileEntry): Boolean
-    def residual(idx: String, t: DataType): org.apache.spark.sql.Column
-    def inverseResidual(idx: String, t: DataType): org.apache.spark.sql.Column
-  }
-  private final case class LongRange(lo: Long, hi: Long) extends KeyRange {
-    def intersects(f: FileEntry): Boolean =
-      f.minIdx.forall(_ <= hi) && f.maxIdx.forall(_ >= lo)
-    def intersectsStrict(f: FileEntry): Boolean =
-      f.minIdx.exists(_ <= hi) && f.maxIdx.exists(_ >= lo)
-    def wholeFileBelow(f: FileEntry): Boolean = f.maxIdx.exists(_ < lo)
-    // Timestamp indexes compare against FOLDABLE timestamp literals (lo/hi
-    // are already in the manifest's µs unit) so the residual reaches the
-    // parquet scan for row-group pruning; wrapping the column in
-    // unix_micros would defeat pushdown.
-    def residual(idx: String, t: DataType): org.apache.spark.sql.Column =
-      if (Ts.isTs(t)) col(idx).between(Ts.usLit(lo, t), Ts.usLit(hi, t))
-      else idxAsLong(col(idx), t).between(lo, hi)
-    def inverseResidual(idx: String, t: DataType): org.apache.spark.sql.Column =
-      if (Ts.isTs(t)) col(idx) < Ts.usLit(lo, t) || col(idx) > Ts.usLit(hi, t)
-      else idxAsLong(col(idx), t) < lo || idxAsLong(col(idx), t) > hi
-  }
-  private final case class StrRange(lo: String, hi: String) extends KeyRange {
-    import Library.strCmp
-    def intersects(f: FileEntry): Boolean =
-      f.minStr.forall(strCmp(_, hi) <= 0) && f.maxStr.forall(strCmp(_, lo) >= 0)
-    def intersectsStrict(f: FileEntry): Boolean =
-      f.minStr.exists(strCmp(_, hi) <= 0) && f.maxStr.exists(strCmp(_, lo) >= 0)
-    def wholeFileBelow(f: FileEntry): Boolean = f.maxStr.exists(strCmp(_, lo) < 0)
-    def residual(idx: String, t: DataType): org.apache.spark.sql.Column =
-      col(idx).between(lo, hi) // Spark string comparison IS utf-8 byte order
-    def inverseResidual(idx: String, t: DataType): org.apache.spark.sql.Column =
-      col(idx) < lo || col(idx) > hi
+  private def explicitRange(
+      t: => DataType,
+      dateRange: Option[(Long, Long)],
+      keyRange: Option[(String, String)]): Option[KeyRange] =
+    dateRange.map[KeyRange] { case (lo, hi) =>
+      val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, t); new LongKeys.Range(l, h)
+    }.orElse(keyRange.map { case (lo, hi) => new StrKeys.Range(lo, hi) })
+
+  /** The range kind must match the STORED index type: a keyRange against a
+    * long index would otherwise prune nothing and null-cast the residual
+    * filter into a silent empty result.
+    */
+  private def requireRangeKind(
+      symbol: String,
+      t: DataType,
+      dateRange: Option[(Long, Long)],
+      keyRange: Option[(String, String)]): Unit = {
+    require(dateRange.isEmpty || !isStringIdx(t),
+      s"$symbol has a string index — use keyRange, not dateRange")
+    require(keyRange.isEmpty || isStringIdx(t),
+      s"$symbol has a ${t.simpleString} index — use dateRange, not keyRange")
   }
 
   /** The range family comes from the STORED index type, never the patch
@@ -474,21 +460,23 @@ final class Library(
     */
   private def keyRangeFor(m: VersionManifest, df: DataFrame, idx: String): KeyRange = {
     val storedT = schemaOf(m.schemaDdl)(idx).dataType
-    val t = df.schema(idx).dataType
-    requireSameIdxFamily(idx, t, storedT)
-    if (isStringIdx(storedT)) {
-      val b = df.agg(min(col(idx)), max(col(idx))).collect()(0)
-      require(!b.isNullAt(0), "update with empty frame")
-      StrRange(b.getString(0), b.getString(1))
-    } else {
-      val b = df.agg(min(idxAsLong(col(idx), t)), max(idxAsLong(col(idx), t))).collect()(0)
-      require(!b.isNullAt(0), "update with empty frame")
-      LongRange(b.getLong(0), b.getLong(1))
-    }
+    requireSameIdxFamily(idx, df.schema(idx).dataType, storedT)
+    val r = keysOf(Some(storedT)).frameRange(df, idx)
+    require(r.isDefined, "update with empty frame")
+    r.get
+  }
+
+  /** `files` in index order with cumulative rowOffsets, continuing after
+    * the last of `after` — the one row-offset numbering every commit uses.
+    */
+  private def renumber(files: Seq[FileEntry], after: Seq[FileEntry] = Nil): Vector[FileEntry] = {
+    var offset = after.lastOption.fold(0L)(f => f.rowOffset + f.rows)
+    files.iterator.map { f => val e = f.copy(rowOffset = offset); offset += f.rows; e }.toVector
   }
 
   /** Write df's rows into `dir` sorted+range-partitioned by the index and
-    * return per-file stats in index order. targetRows controls file
+    * return its files' entries in index order (rowOffsets are the
+    * committing caller's to number). targetRows controls file
     * geometry — the analog of the reference's 100k-row segment slicing
     * (pipeline/slicing.hpp:23-34) scaled up for Parquet/Spark.
     *
@@ -543,103 +531,36 @@ final class Library(
     indexCol.foreach(i => writer.option(s"parquet.bloom.filter.enabled#$i", "true"))
     writer.mode("errorifexists").parquet(dir.toString)
 
-    val idxType = indexCol.map(i => df.schema(i).dataType)
-    val stats = footerStats(dir, indexCol, idxType)
-    val ordered = idxType match {
-      case Some(t) if isStringIdx(t) =>
-        stats.sortWith((a, b) => Library.strBoundFirst(a.minStr, a.name, b.minStr, b.name))
-      case Some(_) => stats.sortBy(s => (s.minIdx.getOrElse(Long.MaxValue), s.name))
-      case None => stats.sortBy(_.name)
-    }
-    var offset = 0L
-    ordered.map { s =>
-      val e = FileEntry(s"${dir.getName}/${s.name}", s.rows, offset,
-        s.minIdx, s.maxIdx, s.minStr, s.maxStr, Some(s.bytes), Some(s.mtimeMs))
-      offset += s.rows
-      e
-    }
+    val index = indexCol.map(i => i -> df.schema(i).dataType)
+    keysOf(index.map(_._2)).sorted(footerStats(dir, index).map { case (e, _) =>
+      e.copy(path = s"${dir.getName}/${e.path}")
+    })
   }
 
-  private final case class RawFileStat(
-      name: String,
-      rows: Long,
-      /** Length and mtime from the listing that found the file. */
-      bytes: Long,
-      mtimeMs: Long,
-      minIdx: Option[Long],
-      maxIdx: Option[Long],
-      minStr: Option[String],
-      maxStr: Option[String],
-      /** Per-row-group bounds in footer (= file) order — the granularity
-        * finalizeStaged's sortedness validation inspects.
-        */
-      blockIdx: Seq[(Long, Long)] = Nil,
-      blockStr: Seq[(String, String)] = Nil)
-
-  /** Per-file stats from parquet footer metadata. Long-unit indexes are
-    * converted to the manifest's canonical unit (ns for long indexes, µs
-    * for timestamps, µs-of-midnight for dates) — the same unit `idxAsLong`
-    * produces at query time. String indexes keep their UTF-8 bounds
-    * (parquet may truncate long binary stats, but only OUTWARD — min ≤
-    * true min, max ≥ true max — so pruning stays conservative).
+  /** One entry per data file of `dir` (path = the bare file name, length
+    * and mtime from the listing that found it), read from parquet footer
+    * metadata with its index bounds decoded by the index's [[IdxKeys]]
+    * family, plus each row group's bounds as an entry in footer (= file)
+    * order — the granularity finalizeStaged's sortedness check inspects.
     */
   private def footerStats(
       dir: Path,
-      indexCol: Option[String],
-      idxType: Option[DataType]): Vector[RawFileStat] = {
+      index: Option[(String, DataType)]): Vector[(FileEntry, Vector[FileEntry])] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.api.Binary
     import scala.jdk.CollectionConverters._
-
-    def statToLong(v: AnyRef): Long = (idxType.get, v) match {
-      case (DateType, days: Integer) => days.toLong * 86400000000L
-      case (_, n: Number) => n.longValue()
-      case (t, other) =>
-        throw new IllegalStateException(s"unexpected footer stat $other for index type $t")
-    }
-    def statToStr(v: AnyRef): String = v match {
-      case b: Binary => b.toStringUsingUTF8
-      case other =>
-        throw new IllegalStateException(s"unexpected footer stat $other for string index")
-    }
-    val stringIdx = idxType.exists(isStringIdx)
-
-    val f = fs(dir)
-    f.listStatus(dir).toVector
+    val keys = keysOf(index.map(_._2))
+    fs(dir).listStatus(dir).toVector
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
       .map { st =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, hconf))
         try {
-          val blocks = reader.getFooter.getBlocks.asScala
-          val rows = blocks.map(_.getRowCount).sum
-          val idxStats = indexCol.map { idx =>
-            blocks.flatMap { b =>
-              b.getColumns.asScala
-                .find(_.getPath.toDotString == idx)
-                .map(_.getStatistics)
-                .filter(s => s != null && s.hasNonNullValue)
-                .map(s => (s.genericGetMin.asInstanceOf[AnyRef],
-                  s.genericGetMax.asInstanceOf[AnyRef]))
-            }
-          }.getOrElse(Seq.empty)
-          if (stringIdx) {
-            val perBlock = idxStats.map { case (mn, mx) => (statToStr(mn), statToStr(mx)) }
-            val bounds =
-              if (perBlock.isEmpty) None
-              else Some((perBlock.map(_._1).min(Library.strOrdering),
-                perBlock.map(_._2).max(Library.strOrdering)))
-            RawFileStat(st.getPath.getName, rows, st.getLen, st.getModificationTime, None, None,
-              bounds.map(_._1), bounds.map(_._2), blockStr = perBlock.toSeq)
-          } else {
-            val perBlock = idxStats.map { case (mn, mx) => (statToLong(mn), statToLong(mx)) }
-            val bounds =
-              if (perBlock.isEmpty) None
-              else Some((perBlock.map(_._1).min, perBlock.map(_._2).max))
-            RawFileStat(st.getPath.getName, rows, st.getLen, st.getModificationTime,
-              bounds.map(_._1), bounds.map(_._2), None, None, blockIdx = perBlock.toSeq)
-          }
+          val blocks = reader.getFooter.getBlocks.asScala.toSeq
+          keys.withFooterBounds(
+            FileEntry(st.getPath.getName, blocks.map(_.getRowCount).sum, 0L, None, None,
+              bytes = Some(st.getLen), mtimeMs = Some(st.getModificationTime)),
+            index, blocks)
         } finally reader.close()
       }
   }
@@ -690,27 +611,17 @@ final class Library(
     val data =
       if (!dynamicSchema) df
       else align(df, mergeSchemas(schemaOf(m.schemaDdl), df.schema))
-    if (validateIndex)
-      for (idx <- m.indexCol) {
-        val t = data.schema(idx).dataType
-        if (isStringIdx(t))
-          for (priorMax <- m.files.flatMap(_.maxStr).maxOption(Library.strOrdering)) {
-            val newMin = data.agg(min(col(idx))).collect()(0)
-            if (!newMin.isNullAt(0))
-              require(
-                Library.strCmp(newMin.getString(0), priorMax) >= 0,
-                s"append index starts before prior data ($symbol): " +
-                  s"'${newMin.getString(0)}' < '$priorMax'")
-          }
-        else
-          for (priorMax <- m.files.flatMap(_.maxIdx).maxOption) {
-            val newMin = data.agg(min(idxAsLong(col(idx), t))).collect()(0)
-            if (!newMin.isNullAt(0))
-              require(
-                newMin.getLong(0) >= priorMax,
-                s"append index starts before prior data ($symbol): ${newMin.getLong(0)} < $priorMax")
-          }
+    for (idx <- m.indexCol) {
+      // the family comes from the STORED index: a frame of the other
+      // family would commit bounds no later read can compare
+      val storedT = schemaOf(m.schemaDdl)(idx).dataType
+      requireSameIdxFamily(idx, data.schema(idx).dataType, storedT)
+      if (validateIndex) {
+        val keys = keysOf(Some(storedT))
+        keys.requireAfter(m.files, keys.frameRange(data, idx).map(_.lo),
+          s"append index starts before prior data ($symbol)")
       }
+    }
     commitNew(symbol, data, m.indexCol, targetRows, priorFiles = m.files,
       m.metadata ++ extraMetadata,
       priorDirSchemas = m.dirSchemas, derived = true, baseVersion = Some(m.version))
@@ -775,10 +686,7 @@ final class Library(
     var v = nextVersion(symbol,
       baseVersion.getOrElse(latestVersion(symbol).getOrElse(-1)))
     val dir = dataDir(symbol, v)
-    val newFiles = writeData(df, dir, indexCol, targetRows)
-    val baseOffset = priorFiles.lastOption.map(f => f.rowOffset + f.rows).getOrElse(0L)
-    val shifted = newFiles.map(f => f.copy(rowOffset = f.rowOffset + baseOffset))
-    val all = priorFiles ++ shifted
+    val all = priorFiles ++ renumber(writeData(df, dir, indexCol, targetRows), priorFiles)
     val m = VersionManifest(
       version = v,
       indexCol = indexCol,
@@ -839,19 +747,11 @@ final class Library(
       case Some(m) =>
         val idx = m.indexCol.getOrElse(
           throw new IllegalArgumentException("update requires an indexed symbol"))
-        // validate range kind against the STORED index, not the patch frame
         val storedT = schemaOf(m.schemaDdl)(idx).dataType
-        require(dateRange.isEmpty || !isStringIdx(storedT),
-          s"$symbol has a string index — use keyRange, not dateRange")
-        require(keyRange.isEmpty || isStringIdx(storedT),
-          s"$symbol has a ${storedT.simpleString} index — use dateRange, not keyRange")
+        requireRangeKind(symbol, storedT, dateRange, keyRange)
         val t = df.schema(idx).dataType
         requireSameIdxFamily(idx, t, storedT)
-        val explicit: Option[KeyRange] =
-          dateRange.map { case (lo, hi) =>
-            val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, storedT); LongRange(l, h)
-          }.orElse(keyRange.map { case (lo, hi) => StrRange(lo, hi) })
-        explicit match {
+        explicitRange(storedT, dateRange, keyRange) match {
           case Some(r) =>
             spliceRange(symbol, m, r, Some(df.filter(r.residual(idx, t))), targetRows)
           case None =>
@@ -863,11 +763,8 @@ final class Library(
         // upsert-create honors the explicit range exactly like the
         // existing-symbol path: out-of-range patch rows are NOT stored
         // (the same call against an existing symbol would discard them)
-        val rangeOnCreate: Option[KeyRange] =
-          dateRange.map { case (lo, hi) =>
-            val it = indexCol.map(i => df.schema(i).dataType).getOrElse(LongType)
-            val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, it); LongRange(l, h)
-          }.orElse(keyRange.map { case (lo, hi) => StrRange(lo, hi) })
+        val rangeOnCreate = explicitRange(
+          indexCol.map(i => df.schema(i).dataType).getOrElse(LongType), dateRange, keyRange)
         val data = rangeOnCreate match {
           case Some(r) =>
             val idx = indexCol.getOrElse(throw new IllegalArgumentException(
@@ -886,7 +783,7 @@ final class Library(
     val m = manifest(symbol, v)
     val it = m.indexCol.map(i => schemaOf(m.schemaDdl)(i).dataType).getOrElse(LongType)
     val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, it)
-    spliceRange(symbol, m, LongRange(l, h), None, targetRows)
+    spliceRange(symbol, m, new LongKeys.Range(l, h), None, targetRows)
   }
 
   /** delete_data_in_range over a string-keyed index (inclusive bounds,
@@ -895,7 +792,7 @@ final class Library(
   def deleteRange(symbol: String, lo: String, hi: String, targetRows: Long): Int = {
     val v = latestVersion(symbol).getOrElse(
       throw new NoSuchElementException(s"symbol $symbol does not exist"))
-    spliceRange(symbol, manifest(symbol, v), StrRange(lo, hi), None, targetRows)
+    spliceRange(symbol, manifest(symbol, v), new StrKeys.Range(lo, hi), None, targetRows)
   }
   def deleteRange(symbol: String, lo: String, hi: String): Int =
     deleteRange(symbol, lo, hi, DefaultTargetRows)
@@ -942,10 +839,7 @@ final class Library(
       case None => Vector.empty
     }
     val (before, after) = untouched.partition(range.wholeFileBelow)
-    var offset = 0L
-    val ordered = (before ++ rewritten ++ after).map { f =>
-      val e = f.copy(rowOffset = offset); offset += f.rows; e
-    }
+    val ordered = renumber(before ++ rewritten ++ after)
     val nm = m.copy(
       version = v,
       files = ordered,
@@ -1096,22 +990,9 @@ final class Library(
     val m = resolveVersion(symbol, asOf)
     require(dateRange.isEmpty || keyRange.isEmpty,
       "dateRange and keyRange are mutually exclusive")
-    // validate the range kind against the index type up front — a keyRange
-    // against a long index would otherwise prune nothing and null-cast the
-    // residual filter into a silent empty result
-    for (idx <- m.indexCol if dateRange.nonEmpty || keyRange.nonEmpty) {
-      val t = schemaOf(m.schemaDdl)(idx).dataType
-      require(dateRange.isEmpty || !isStringIdx(t),
-        s"$symbol has a string index — use keyRange, not dateRange")
-      require(keyRange.isEmpty || isStringIdx(t),
-        s"$symbol has a ${t.simpleString} index — use dateRange, not keyRange")
-    }
-    val range: Option[KeyRange] =
-      dateRange.map { case (lo, hi) =>
-        val it = m.indexCol.map(i => schemaOf(m.schemaDdl)(i).dataType)
-          .getOrElse(LongType)
-        val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, it); LongRange(l, h)
-      }.orElse(keyRange.map { case (lo, hi) => StrRange(lo, hi) })
+    val idxType = m.indexCol.map(i => schemaOf(m.schemaDdl)(i).dataType)
+    idxType.foreach(requireRangeKind(symbol, _, dateRange, keyRange))
+    val range = explicitRange(idxType.getOrElse(LongType), dateRange, keyRange)
     val byIndex = range match {
       case Some(r) => m.files.filter(r.intersects)
       case None => m.files
@@ -2127,73 +2008,36 @@ final class Library(
           s"(${ts.mkString(", ")}) — use sortAndFinalizeStaged")
       unified(i).dataType
     }
-    val stringIdx = idxType.exists(isStringIdx)
+    val keys = keysOf(idxType)
 
-    val stats: Seq[(Path, Vector[RawFileStat])] =
-      deltas.map(d => d -> footerStats(d, idxCol, idxType))
+    val stats: Seq[(Path, Vector[(FileEntry, Vector[FileEntry])])] =
+      deltas.map(d => d -> footerStats(d, idxCol.zip(idxType)))
 
     if (validateIndex) for (i <- idxCol) {
+      // staged files named by delta dir, in the order the manifest will list them
+      val staged = keys.sorted(stats.flatMap { case (d, fsx) =>
+        fsx.map { case (e, _) => e.copy(path = s"${d.getName}/${e.path}") }
+      })
       // Every non-empty staged file must CARRY index footer stats — a
       // dynamicSchema delta missing the index column, or an all-null
       // index, would otherwise slip past the bounded-files checks below
       // while the manifest still claimed sorted=true
-      for ((d, fsx) <- stats; s <- fsx if s.rows > 0) {
-        val hasBounds = if (stringIdx) s.minStr.isDefined else s.minIdx.isDefined
-        require(hasBounds,
-          s"staged file ${d.getName}/${s.name} of $symbol has rows but no " +
+      for (e <- staged if e.rows > 0)
+        require(keys.lo(e).isDefined,
+          s"staged file ${e.path} of $symbol has rows but no " +
             s"footer stats for $i (missing or all-null index column) — " +
             "use sortAndFinalizeStaged or finalize with validateIndex=false")
-      }
-      def ordered[B](bs: Seq[(B, B)], cmp: (B, B) => Int): Boolean =
-        bs.sliding(2).forall {
-          case Seq((_, aMax), (bMin, _)) => cmp(aMax, bMin) <= 0
-          case _ => true
-        }
-      for ((d, fsx) <- stats; s <- fsx) {
-        val ok =
-          if (stringIdx) ordered[String](s.blockStr, Library.strCmp)
-          else ordered[Long](s.blockIdx, java.lang.Long.compare)
-        require(ok,
-          s"staged file ${d.getName}/${s.name} of $symbol is not sorted by $i " +
+      for ((d, fsx) <- stats; (e, blocks) <- fsx)
+        require(keys.firstOverlap(blocks).isEmpty,
+          s"staged file ${d.getName}/${e.path} of $symbol is not sorted by $i " +
             "at row-group granularity — use sortAndFinalizeStaged")
-      }
-      val allFiles = stats.flatMap { case (d, fsx) => fsx.map(d -> _) }
-      def overlapFail(a: String, b: String): Nothing =
+      for ((a, b) <- keys.firstOverlap(staged))
         throw new IllegalArgumentException(
-          s"staged files of $symbol overlap on $i: $a vs $b — " +
+          s"staged files of $symbol overlap on $i: ${a.path} vs ${b.path} — " +
             "use sortAndFinalizeStaged or restage disjoint deltas")
-      if (stringIdx) {
-        val bounded = allFiles.filter(_._2.minStr.isDefined)
-          .sortBy(_._2.minStr.get)(Library.strOrdering)
-        bounded.sliding(2).foreach {
-          case Seq((da, a), (db, b)) =>
-            if (Library.strCmp(a.maxStr.get, b.minStr.get) > 0)
-              overlapFail(s"${da.getName}/${a.name}", s"${db.getName}/${b.name}")
-          case _ =>
-        }
-        for {
-          m <- prior
-          priorMax <- m.files.flatMap(_.maxStr).maxOption(Library.strOrdering)
-          (_, first) <- bounded.headOption
-        } require(Library.strCmp(first.minStr.get, priorMax) >= 0,
-          s"staged data starts before stored data ($symbol): " +
-            s"'${first.minStr.get}' < '$priorMax'")
-      } else {
-        val bounded = allFiles.filter(_._2.minIdx.isDefined).sortBy(_._2.minIdx.get)
-        bounded.sliding(2).foreach {
-          case Seq((da, a), (db, b)) =>
-            if (a.maxIdx.get > b.minIdx.get)
-              overlapFail(s"${da.getName}/${a.name}", s"${db.getName}/${b.name}")
-          case _ =>
-        }
-        for {
-          m <- prior
-          priorMax <- m.files.flatMap(_.maxIdx).maxOption
-          (_, first) <- bounded.headOption
-        } require(first.minIdx.get >= priorMax,
-          s"staged data starts before stored data ($symbol): " +
-            s"${first.minIdx.get} < $priorMax")
-      }
+      for (m <- prior)
+        keys.requireAfter(m.files, staged.headOption.flatMap(keys.lo),
+          s"staged data starts before stored data ($symbol)")
     }
 
     // Move each delta dir under data/ — an O(1) rename on rename-capable
@@ -2206,7 +2050,7 @@ final class Library(
     val dataRoot = new Path(symDir(symbol), "data")
     val dfs = fs(dataRoot)
     dfs.mkdirs(dataRoot)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[(String, Vector[RawFileStat], StructType)]
+    val moved = scala.collection.mutable.ArrayBuffer.empty[(String, Vector[FileEntry], StructType)]
     val markers = scala.collection.mutable.ArrayBuffer.empty[Path]
     val keepMarkers = scala.collection.mutable.Set.empty[Path]
     var published = false
@@ -2225,24 +2069,13 @@ final class Library(
         markers += mk
         require(dfs.rename(d, new Path(dataRoot, destName)),
           s"failed to move staged delta $d into $dataRoot")
-        moved += ((destName, fsx, schema))
+        moved += ((destName, fsx.map(_._1), schema))
       }
 
-      val entries0 = moved.toSeq.flatMap { case (dir, fsx, _) =>
-        fsx.map(s =>
-          FileEntry(s"$dir/${s.name}", s.rows, 0L, s.minIdx, s.maxIdx, s.minStr, s.maxStr,
-            Some(s.bytes), Some(s.mtimeMs)))
-      }
-      val orderedEntries =
-        if (idxCol.isEmpty) entries0.sortBy(_.path)
-        else if (stringIdx)
-          entries0.sortWith((a, b) => Library.strBoundFirst(a.minStr, a.path, b.minStr, b.path))
-        else entries0.sortBy(e => (e.minIdx.getOrElse(Long.MaxValue), e.path))
       val priorFiles = prior.map(_.files).getOrElse(Vector.empty)
-      var offset = priorFiles.lastOption.map(f => f.rowOffset + f.rows).getOrElse(0L)
-      val shifted = orderedEntries.map { e =>
-        val r = e.copy(rowOffset = offset); offset += e.rows; r
-      }
+      val shifted = renumber(keys.sorted(moved.toSeq.flatMap { case (dir, entries, _) =>
+        entries.map(e => e.copy(path = s"$dir/${e.path}"))
+      }), priorFiles)
       val unifiedDdl = unified.toDDL
       val m = VersionManifest(
         version = v,
@@ -2357,7 +2190,6 @@ final class Library(
       schema: StructType): Map[String, (String, String)] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.api.Binary
     import scala.jdk.CollectionConverters._
     def render(v: AnyRef): String = v match {
       case b: Binary => b.toStringUsingUTF8
@@ -2678,32 +2510,16 @@ final class Library(
       dir -> writeData(readFiles(symbol, m, run, None, None, withRowId = false),
         dir, m.indexCol, targetRows)
     }
-    val rewritten = runOut.flatMap(_._2)
-    // files are index-disjoint, so min-idx order IS global row order
-    val stringIdx = m.indexCol.exists(i =>
-      isStringIdx(schemaOf(m.schemaDdl)(i).dataType))
-    var offset = 0L
-    val ordered = {
-      val all = untouched ++ rewritten
-      val sorted =
-        if (stringIdx)
-          all.sortWith((a, b) => Library.strBoundFirst(a.minStr, a.path, b.minStr, b.path))
-        else all.sortBy(f => (f.minIdx.getOrElse(Long.MaxValue), f.path))
-      sorted.map { f => val e = f.copy(rowOffset = offset); offset += f.rows; e }
-    }
+    // files are index-disjoint, so the one file order IS global row order
+    val keys = keysOf(m.indexCol.map(i => schemaOf(m.schemaDdl)(i).dataType))
+    val ordered = renumber(keys.sorted(untouched ++ runOut.flatMap(_._2)))
     // Guard the invariant before committing: consecutive files must not
-    // properly overlap (boundary ties of a single index value are fine —
-    // all pruning treats [min,max] inclusively).
-    ordered.iterator.sliding(2).withPartial(false).foreach { w =>
-      if (stringIdx)
-        for (amx <- w(0).maxStr; bmn <- w(1).minStr)
-          require(Library.strCmp(amx, bmn) <= 0,
-            s"compact would overlap file index ranges: ${w(0).path} [..$amx] vs ${w(1).path} [$bmn..]")
-      else
-        for (amx <- w(0).maxIdx; bmn <- w(1).minIdx)
-          require(amx <= bmn,
-            s"compact would overlap file index ranges: ${w(0).path} [..$amx] vs ${w(1).path} [$bmn..]")
-    }
+    // properly overlap.
+    val clash = keys.firstOverlap(ordered)
+    require(clash.isEmpty, clash.fold("") { case (a, b) =>
+      s"compact would overlap file index ranges: ${a.path} [..${keys.hi(a).get}] vs " +
+        s"${b.path} [${keys.lo(b).get}..]"
+    })
     val nm = m.copy(
       version = v,
       files = ordered,
@@ -2906,22 +2722,183 @@ object Library {
 
   val strOrdering: Ordering[String] = (a: String, b: String) => strCmp(a, b)
 
-  /** The ONE ordering of string-indexed files by lower bound: byte order,
-    * files without stats (all-null keys) last, deterministic tiebreak.
-    * writeData and compact must sort identically or the
-    * files-are-index-disjoint/row-offset invariant breaks between them.
+  /** Index stats unit: ns for long indexes, µs for timestamp indexes.
+    * String indexes never pass through here — their bounds live in
+    * FileEntry.minStr/maxStr and compare with [[Library.strCmp]].
     */
-  def strBoundFirst(
-      aMin: Option[String], aTie: String,
-      bMin: Option[String], bTie: String): Boolean =
-    (aMin, bMin) match {
-      case (Some(x), Some(y)) =>
-        val c = strCmp(x, y)
-        if (c != 0) c < 0 else aTie < bTie
-      case (Some(_), None) => true
-      case (None, Some(_)) => false
-      case (None, None) => aTie < bTie
+  private def idxAsLong(c: Column, t: DataType): Column =
+    t match {
+      case LongType | IntegerType => c.cast(LongType)
+      case TimestampType => unix_micros(c)
+      case TimestampNTZType => unix_micros(c.cast(TimestampType))
+      case DateType => c.cast(TimestampType).cast(LongType) * 1000000L
+      case other => throw new IllegalArgumentException(s"unsupported index type $other")
     }
+
+  /** One index-key family — the ONE rule for a data file's index bounds
+    * (the reference's TABLE_INDEX rows, stream/index.hpp:84): the key
+    * order, which [[FileEntry]] fields hold the bounds, how footer stats
+    * and a frame's min/max decode into keys, and the residual row filters.
+    * [[LongKeys]] holds the long-unit indexes in minIdx/maxIdx (ns for
+    * long/int, µs for timestamp/date — the unit `idxAsLong` produces);
+    * [[StrKeys]] the string TableIndex in minStr/maxStr under [[strCmp]].
+    * Every commit site picks the family once from the stored index type,
+    * then shares one file order ([[sorted]]), one disjointness check
+    * ([[firstOverlap]]) and one start-after-prior check ([[requireAfter]]).
+    */
+  private sealed abstract class IdxKeys {
+    type K
+    implicit val ord: Ordering[K]
+    def lo(f: FileEntry): Option[K]
+    def hi(f: FileEntry): Option[K]
+    def withBounds(f: FileEntry, b: Option[(K, K)]): FileEntry
+    /** One row group's footer min (`roundUp` false) or max stat as a key. */
+    protected def decode(v: AnyRef, t: DataType, pt: PrimitiveType, roundUp: Boolean): K
+    /** Index column `c` of type `t` as a key-typed column. */
+    protected def asKey(c: Column, t: DataType): Column
+    def residual(idx: String, t: DataType, lo: K, hi: K): Column
+    def inverseResidual(idx: String, t: DataType, lo: K, hi: K): Column
+    /** A key as error messages quote it. */
+    def show(k: K): String
+
+    /** Inclusive key range for file pruning / splice partitioning. Missing
+      * stats always mean "cannot exclude".
+      */
+    final class Range(val lo: K, val hi: K) {
+      /** May the file contain in-range rows? Missing stats ⇒ true (read-side
+        * pruning must never exclude what it cannot bound).
+        */
+      def intersects(f: FileEntry): Boolean =
+        IdxKeys.this.lo(f).forall(ord.lteq(_, hi)) && IdxKeys.this.hi(f).forall(ord.gteq(_, lo))
+      /** Does the file PROVABLY contain in-range rows? Missing stats ⇒ false
+        * (splice only rewrites files it can bound — all-null-key files stay
+        * untouched).
+        */
+      def intersectsStrict(f: FileEntry): Boolean =
+        IdxKeys.this.lo(f).exists(ord.lteq(_, hi)) && IdxKeys.this.hi(f).exists(ord.gteq(_, lo))
+      def wholeFileBelow(f: FileEntry): Boolean = IdxKeys.this.hi(f).exists(ord.lt(_, lo))
+      def residual(idx: String, t: DataType): Column = IdxKeys.this.residual(idx, t, lo, hi)
+      def inverseResidual(idx: String, t: DataType): Column =
+        IdxKeys.this.inverseResidual(idx, t, lo, hi)
+    }
+
+    /** The [min, max] key range of a frame's index column; None when it
+      * holds no non-null key.
+      */
+    def frameRange(df: DataFrame, idx: String): Option[Range] = {
+      val t = df.schema(idx).dataType
+      val b = df.agg(min(asKey(col(idx), t)), max(asKey(col(idx), t))).collect()(0)
+      if (b.isNullAt(0)) None else Some(new Range(b.getAs[K](0), b.getAs[K](1)))
+    }
+
+    /** `f` bounded by the envelope of its row groups' footer stats for
+      * `index`, plus each row group's bounds as an entry, in footer order.
+      * Row groups without stats (all-null keys) bound nothing. Parquet may
+      * truncate binary stats, but only OUTWARD, so bounds stay an envelope.
+      */
+    def withFooterBounds(
+        f: FileEntry,
+        index: Option[(String, DataType)],
+        blocks: Seq[BlockMetaData]): (FileEntry, Vector[FileEntry]) = {
+      import scala.jdk.CollectionConverters._
+      val bounds = for {
+        (idx, t) <- index.toVector
+        b <- blocks
+        c <- b.getColumns.asScala.find(_.getPath.toDotString == idx)
+        s = c.getStatistics
+        if s != null && s.hasNonNullValue
+      } yield (decode(s.genericGetMin.asInstanceOf[AnyRef], t, c.getPrimitiveType, roundUp = false),
+        decode(s.genericGetMax.asInstanceOf[AnyRef], t, c.getPrimitiveType, roundUp = true))
+      val envelope =
+        if (bounds.isEmpty) None else Some((bounds.map(_._1).min, bounds.map(_._2).max))
+      (withBounds(f, envelope), bounds.map(b => withBounds(f, Some(b))))
+    }
+
+    /** The ONE file order: by lower bound, then path; files without bounds
+      * (all-null keys, unindexed data) last, by path. writeData,
+      * finalizeStaged and compact all number rowOffsets in this order.
+      */
+    def sorted(files: Seq[FileEntry]): Vector[FileEntry] = {
+      val (bounded, unbounded) = files.partition(lo(_).isDefined)
+      (bounded.sortBy(f => (lo(f).get, f.path)) ++ unbounded.sortBy(_.path)).toVector
+    }
+
+    /** The first consecutive pair whose ranges properly overlap — a pair
+      * tying on one boundary key is fine, every range test is inclusive.
+      * Pairs with an unbounded side are skipped.
+      */
+    def firstOverlap(files: Seq[FileEntry]): Option[(FileEntry, FileEntry)] =
+      files.iterator.sliding(2).withPartial(false).map(w => (w(0), w(1))).find {
+        case (a, b) => (for (amx <- hi(a); bmn <- lo(b)) yield ord.gt(amx, bmn)).contains(true)
+      }
+
+    /** New data must start at/after the highest key of `prior` (equal keys
+      * allowed); `first` (its lowest key) is computed only when `prior`
+      * has bounds.
+      */
+    def requireAfter(prior: Seq[FileEntry], first: => Option[K], what: String): Unit =
+      for (priorMax <- prior.flatMap(hi(_)).maxOption; newMin <- first)
+        require(ord.gteq(newMin, priorMax), s"$what: ${show(newMin)} < ${show(priorMax)}")
+  }
+
+  private object LongKeys extends IdxKeys {
+    type K = Long
+    implicit val ord: Ordering[Long] = Ordering.Long
+    def lo(f: FileEntry): Option[Long] = f.minIdx
+    def hi(f: FileEntry): Option[Long] = f.maxIdx
+    def withBounds(f: FileEntry, b: Option[(Long, Long)]): FileEntry =
+      f.copy(minIdx = b.map(_._1), maxIdx = b.map(_._2))
+    /** Footer stats in the manifest unit: dates as µs of midnight,
+      * timestamps as µs from whatever unit the footer's logical type names
+      * (ns round outward, min down and max up), long/int as stored.
+      */
+    protected def decode(v: AnyRef, t: DataType, pt: PrimitiveType, roundUp: Boolean): Long =
+      (t, v) match {
+        case (DateType, days: Integer) => days.toLong * 86400000000L
+        case (TimestampType | TimestampNTZType, n: java.lang.Long) =>
+          val nsPer = ParquetFooterStats.nsPerUnit(pt)
+          if (nsPer >= 1000L) n * (nsPer / 1000L)
+          else if (roundUp) Ts.ceilDivUs(n * nsPer)
+          else Ts.floorDivUs(n * nsPer)
+        case (_, n: Number) => n.longValue()
+        case (_, other) =>
+          throw new IllegalStateException(s"unexpected footer stat $other for index type $t")
+      }
+    protected def asKey(c: Column, t: DataType): Column = idxAsLong(c, t)
+    // Timestamp indexes compare against FOLDABLE timestamp literals (lo/hi
+    // are already in the manifest's µs unit) so the residual reaches the
+    // parquet scan for row-group pruning; wrapping the column in
+    // unix_micros would defeat pushdown.
+    def residual(idx: String, t: DataType, lo: Long, hi: Long): Column =
+      if (Ts.isTs(t)) col(idx).between(Ts.usLit(lo, t), Ts.usLit(hi, t))
+      else idxAsLong(col(idx), t).between(lo, hi)
+    def inverseResidual(idx: String, t: DataType, lo: Long, hi: Long): Column =
+      if (Ts.isTs(t)) col(idx) < Ts.usLit(lo, t) || col(idx) > Ts.usLit(hi, t)
+      else idxAsLong(col(idx), t) < lo || idxAsLong(col(idx), t) > hi
+    def show(k: Long): String = k.toString
+  }
+
+  private object StrKeys extends IdxKeys {
+    type K = String
+    implicit val ord: Ordering[String] = strOrdering
+    def lo(f: FileEntry): Option[String] = f.minStr
+    def hi(f: FileEntry): Option[String] = f.maxStr
+    def withBounds(f: FileEntry, b: Option[(String, String)]): FileEntry =
+      f.copy(minStr = b.map(_._1), maxStr = b.map(_._2))
+    protected def decode(v: AnyRef, t: DataType, pt: PrimitiveType, roundUp: Boolean): String =
+      v match {
+        case b: Binary => b.toStringUsingUTF8
+        case other =>
+          throw new IllegalStateException(s"unexpected footer stat $other for string index")
+      }
+    protected def asKey(c: Column, t: DataType): Column = c
+    // Spark string comparison IS utf-8 byte order
+    def residual(idx: String, t: DataType, lo: String, hi: String): Column =
+      col(idx).between(lo, hi)
+    def inverseResidual(idx: String, t: DataType, lo: String, hi: String): Column =
+      col(idx) < lo || col(idx) > hi
+    def show(k: String): String = s"'$k'"
+  }
 
   /** Inclusive range predicate for column-stats file pruning (the caller
     * still applies the exact row filter; this only skips whole files).

@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
@@ -66,6 +67,22 @@ object ParquetFooterStats {
     }
   }
 
+  /** Nanoseconds per unit of an INT64 column's footer values: the unit of
+    * its TIMESTAMP(unit) logical-type annotation, or 1 for a raw INT64
+    * (the engine's ns). The one place a footer's time unit is read — the
+    * manifest's index bounds (Library's footer stats) decode through it
+    * too, whatever `spark.sql.parquet.outputTimestampType` wrote the file.
+    */
+  def nsPerUnit(t: PrimitiveType): Long = t.getLogicalTypeAnnotation match {
+    case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+      ts.getUnit match {
+        case LogicalTypeAnnotation.TimeUnit.MICROS => 1000L
+        case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000000L
+        case _ => 1L // NANOS
+      }
+    case _ => 1L
+  }
+
   def minMaxLong(df: DataFrame, colName: String): Option[(Long, Long)] =
     minMaxLongImpl(df, colName, throughFilters = false, requireNoNulls = false)
 
@@ -128,23 +145,9 @@ object ParquetFooterStats {
               if (chunk.getPath.toDotString == colName) {
                 found = true
                 if (chunk.getPrimitiveType.getPrimitiveTypeName !=
-                  org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
+                  PrimitiveType.PrimitiveTypeName.INT64)
                   return None
-                // Unit multiplier to ns from the logical type: raw INT64
-                // is the engine's ns; TIMESTAMP(unit) annotates the
-                // footer values in that unit.
-                val toNs: Long = chunk.getPrimitiveType.getLogicalTypeAnnotation match {
-                  case t: org.apache.parquet.schema.LogicalTypeAnnotation
-                    .TimestampLogicalTypeAnnotation =>
-                    t.getUnit match {
-                      case org.apache.parquet.schema.LogicalTypeAnnotation
-                        .TimeUnit.MICROS => 1000L
-                      case org.apache.parquet.schema.LogicalTypeAnnotation
-                        .TimeUnit.MILLIS => 1000000L
-                      case _ => 1L // NANOS
-                    }
-                  case _ => 1L
-                }
+                val toNs = nsPerUnit(chunk.getPrimitiveType)
                 val st = chunk.getStatistics
                 if (st == null || st.isEmpty) return None
                 if (requireNoNulls && !(st.isNumNullsSet && st.getNumNulls == 0))

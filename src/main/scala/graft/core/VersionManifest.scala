@@ -17,7 +17,9 @@ import org.json4s.jackson.Serialization
   * partitioner and parquet's binary stats both use). rowOffset is the
   * cumulative row count of all preceding files in index order — this is
   * what makes head/tail/row_range a FILE-PRUNING operation instead of a
-  * global sort.
+  * global sort. Index order is one rule for both families: by lower
+  * bound, then path, files without bounds last (Library's `IdxKeys`,
+  * which also decodes the bounds from parquet footers).
   *
   * bytes/mtimeMs are the file's length and modification time as the
   * committing listing saw them (the reference's index rows likewise carry

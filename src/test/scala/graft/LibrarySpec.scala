@@ -342,6 +342,53 @@ class LibrarySpec extends SparkSuite {
       afterKr.count() - df.filter(col("key").between("kc", "kd")).count())
   }
 
+  test("append refuses a frame whose index is of the other family, before writing data") {
+    // the key family comes from the stored index, never the frame: long keys
+    // committed onto a string index (or the reverse) leave a manifest no
+    // later read can compare against
+    val lib = newLib()
+    lib.write("k", keyed(0, 100), Some("key"), targetRows = 50)
+    lib.write("n", mk(0, 100), Some("ts2"), targetRows = 50)
+    def dataDirs(sym: String) = new java.io.File(s"${lib.root}/$sym/data").list().toSet
+    val before = Seq("k", "n").map(dataDirs)
+    for (validate <- Seq(true, false)) {
+      intercept[IllegalArgumentException](lib.append("k",
+        Seq((500L, 1L)).toDF("key", "payload"), validateIndex = validate))
+      intercept[IllegalArgumentException](lib.append("n",
+        Seq(("k000500", 1L)).toDF("ts2", "v"), validateIndex = validate))
+    }
+    assert(Seq("k", "n").map(dataDirs) == before)
+    for (sym <- Seq("k", "n")) {
+      assert(lib.latestVersion(sym).contains(0))
+      assert(lib.read(sym).count() == 100)
+    }
+  }
+
+  test("a millisecond timestamp index gets µs manifest bounds and prunes dateRange reads") {
+    // footer stats carry the unit the writer chose: a session writing
+    // TIMESTAMP_MILLIS (GraftSession pins MICROS; a bare Library takes any
+    // session) must still produce manifest bounds in µs
+    val lib = newLib()
+    val t0 = 1704067200L // 2024-01-01T00:00:00Z, epoch seconds
+    val df = spark.range(1000).select(
+      timestamp_seconds(lit(t0) + col("id") * 60).as("ts"), col("id").as("v"))
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "TIMESTAMP_MILLIS")
+    try lib.write("s", df, Some("ts"), targetRows = 250)
+    finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    val m = lib.resolveVersion("s")
+    assert(m.files.flatMap(_.minIdx).min == t0 * 1000000L)
+    assert(m.files.flatMap(_.maxIdx).max == (t0 + 999 * 60) * 1000000L)
+    val ns = t0 * 1000000000L
+    val first100 = lib.read("s", dateRange = Some((ns, ns + 99L * 60 * 1000000000L)))
+    assert(first100.count() == 100)
+    assert(scannedFiles(first100) == 1)
+  }
+
   test("update with explicit dateRange deletes absent in-range rows; upsert creates") {
     val lib = newLib()
     val df = spark.range(100).select(col("id").as("ts2"), col("id").as("v"))
@@ -660,6 +707,11 @@ class LibrarySpec extends SparkSuite {
   private def mk(lo: Long, hi: Long) =
     spark.range(lo, hi).select(col("id").as("ts2"), (col("id") * 2).as("v"))
 
+  /** mk's rows under a zero-padded string key, so key order is id order. */
+  private def keyed(lo: Long, hi: Long) =
+    spark.range(lo, hi).select(format_string("k%06d", col("id")).as("key"),
+      col("id").as("payload"))
+
   test("delete(versions) removes middle and latest; survivors stay readable") {
     val lib = newLib()
     lib.write("s", mk(0, 100), Some("ts2"), targetRows = 50) // v0
@@ -791,6 +843,21 @@ class LibrarySpec extends SparkSuite {
     lib.sortAndFinalizeStaged("s", Some("ts2"), mode = "append")
     assert(lib.read("s").count() == 1000 + 300 + 300)
     assert(lib.read("s").select("ts2").distinct().count() == 1500)
+
+    // the same two refusals over a string index
+    lib.write("k", keyed(0, 1000), Some("key"), targetRows = 300)
+    lib.stage("k", keyed(900, 1200).coalesce(1).sortWithinPartitions("key"))
+    val exStart = intercept[IllegalArgumentException](lib.finalizeStaged("k", mode = "append"))
+    assert(exStart.getMessage.contains("starts before stored data"))
+    assert(lib.read("k").count() == 1000)
+    lib.deleteStagedData("k")
+    lib.stage("k", keyed(1000, 1300).coalesce(1).sortWithinPartitions("key"))
+    lib.stage("k", keyed(1200, 1500).coalesce(1).sortWithinPartitions("key"))
+    val exK = intercept[IllegalArgumentException](lib.finalizeStaged("k", mode = "append"))
+    assert(exK.getMessage.contains("overlap"))
+    lib.sortAndFinalizeStaged("k", Some("key"), mode = "append")
+    assert(lib.read("k").count() == 1000 + 300 + 300)
+    assert(lib.read("k").select("key").distinct().count() == 1500)
   }
 
   test("finalizeStaged rejects a file unsorted at row-group granularity") {
@@ -798,16 +865,20 @@ class LibrarySpec extends SparkSuite {
     lib.write("s", mk(0, 1000), Some("ts2"), targetRows = 300)
     // force multiple small row groups so a descending file has out-of-order
     // block bounds (one-block files are vacuously ordered at this granularity)
+    lib.write("k", keyed(0, 1000), Some("key"), targetRows = 300)
     val hc = spark.sparkContext.hadoopConfiguration
     val prior = hc.get("parquet.block.size")
     hc.setInt("parquet.block.size", 64 * 1024)
-    try
+    try {
       lib.stage("s", spark.range(1000, 200000).orderBy(desc("id"))
         .select(col("id").as("ts2"), (col("id") * 2).as("v")).coalesce(1))
-    finally
+      lib.stage("k", keyed(1000, 200000).orderBy(desc("key")).coalesce(1))
+    } finally
       if (prior == null) hc.unset("parquet.block.size") else hc.set("parquet.block.size", prior)
     val ex = intercept[IllegalArgumentException](lib.finalizeStaged("s", mode = "append"))
     assert(ex.getMessage.contains("not sorted"))
+    val exK = intercept[IllegalArgumentException](lib.finalizeStaged("k", mode = "append"))
+    assert(exK.getMessage.contains("not sorted"))
   }
 
   test("finalizeStaged tolerates empty staged deltas (streaming empty batches)") {

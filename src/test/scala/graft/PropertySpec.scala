@@ -280,9 +280,14 @@ class PropertySpec extends SparkSuite {
     // random count/size of disjoint pre-sorted staged deltas → append-mode
     // finalizeStaged must read back as the exact ordered union, flagged
     // sorted, regardless of how rows fall across delta and file boundaries.
+    // Each draw runs over a long index and over zero-padded string keys
+    // (string order = id order), the two index-key families.
     import graft.core.Library
+    val keyings: Seq[(org.apache.spark.sql.Column, Long => Any)] = Seq(
+      (col("id"), (i: Long) => i),
+      (format_string("k%06d", col("id")), (i: Long) => f"k$i%06d"))
     val seeds = sample(Gen.chooseNum(1L, Long.MaxValue), 5, 20260813L)
-    seeds.foreach { seed0 =>
+    for (seed0 <- seeds; (key, expect) <- keyings) {
       val rnd = new scala.util.Random(seed0)
       val nDeltas = 1 + rnd.nextInt(3)
       // cumulative cuts: base end, then each delta's end
@@ -291,7 +296,7 @@ class PropertySpec extends SparkSuite {
       val lib = new Library(
         java.nio.file.Files.createTempDirectory("graft-propspec-").toString, spark)
       def part(lo: Int, hi: Int) =
-        spark.range(lo, hi).select(col("id").as("ts2"), (col("id") * 3).as("v"))
+        spark.range(lo, hi).select(key.as("ts2"), (col("id") * 3).as("v"))
       lib.write("s", part(0, cuts.head), Some("ts2"), targetRows = 128)
       cuts.sliding(2).foreach {
         case Seq(lo, hi) =>
@@ -300,9 +305,9 @@ class PropertySpec extends SparkSuite {
       }
       lib.finalizeStaged("s", mode = "append")
       val m = lib.resolveVersion("s")
-      assert(m.sorted && m.rowCount == cuts.last.toLong, s"seed=$seed0")
-      val got = lib.read("s").orderBy("ts2").select("ts2").as[Long].collect().toSeq
-      assert(got == (0L until cuts.last.toLong), s"seed=$seed0")
+      assert(m.sorted && m.rowCount == cuts.last.toLong, s"seed=$seed0 key=$key")
+      val got = lib.read("s").orderBy("ts2").select("ts2").collect().map(_.get(0)).toSeq
+      assert(got == (0L until cuts.last.toLong).map(expect), s"seed=$seed0 key=$key")
     }
   }
 
