@@ -437,20 +437,28 @@ final class Library(
       val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, t); new LongKeys.Range(l, h)
     }.orElse(keyRange.map { case (lo, hi) => new StrKeys.Range(lo, hi) })
 
-  /** The range kind must match the STORED index type: a keyRange against a
-    * long index would otherwise prune nothing and null-cast the residual
-    * filter into a silent empty result.
+  /** The range kind must match the STORED index type `t` (None: the
+    * symbol has no index): a keyRange against a long index would otherwise
+    * prune nothing and null-cast the residual filter into a silent empty
+    * result, a range on an unindexed symbol would silently return every
+    * row, and a deleteRange of the other kind would commit a no-op version.
     */
   private def requireRangeKind(
       symbol: String,
-      t: DataType,
+      t: Option[DataType],
       dateRange: Option[(Long, Long)],
       keyRange: Option[(String, String)]): Unit = {
-    require(dateRange.isEmpty || !isStringIdx(t),
+    require((dateRange.isEmpty && keyRange.isEmpty) || t.isDefined,
+      s"$symbol has no index — dateRange/keyRange need an indexed symbol")
+    require(dateRange.isEmpty || !t.exists(isStringIdx),
       s"$symbol has a string index — use keyRange, not dateRange")
-    require(keyRange.isEmpty || isStringIdx(t),
-      s"$symbol has a ${t.simpleString} index — use dateRange, not keyRange")
+    require(keyRange.isEmpty || t.forall(isStringIdx),
+      s"$symbol has a ${t.fold("")(_.simpleString)} index — use dateRange, not keyRange")
   }
+
+  /** The stored index column's type; None for an unindexed symbol. */
+  private def idxTypeOf(m: VersionManifest): Option[DataType] =
+    m.indexCol.map(i => schemaOf(m.schemaDdl)(i).dataType)
 
   /** The range family comes from the STORED index type, never the patch
     * frame's: a mistyped patch (long keys against a string index) would
@@ -748,7 +756,7 @@ final class Library(
         val idx = m.indexCol.getOrElse(
           throw new IllegalArgumentException("update requires an indexed symbol"))
         val storedT = schemaOf(m.schemaDdl)(idx).dataType
-        requireRangeKind(symbol, storedT, dateRange, keyRange)
+        requireRangeKind(symbol, Some(storedT), dateRange, keyRange)
         val t = df.schema(idx).dataType
         requireSameIdxFamily(idx, t, storedT)
         explicitRange(storedT, dateRange, keyRange) match {
@@ -762,14 +770,12 @@ final class Library(
           throw new NoSuchElementException(s"symbol $symbol does not exist")
         // upsert-create honors the explicit range exactly like the
         // existing-symbol path: out-of-range patch rows are NOT stored
-        // (the same call against an existing symbol would discard them)
-        val rangeOnCreate = explicitRange(
-          indexCol.map(i => df.schema(i).dataType).getOrElse(LongType), dateRange, keyRange)
-        val data = rangeOnCreate match {
-          case Some(r) =>
-            val idx = indexCol.getOrElse(throw new IllegalArgumentException(
-              "update(dateRange/keyRange, upsert) on a missing symbol needs indexCol"))
-            df.filter(r.residual(idx, df.schema(idx).dataType))
+        // (the same call against an existing symbol would discard them),
+        // and the range kind must match the new index (indexCol)
+        val t = indexCol.map(df.schema(_).dataType)
+        requireRangeKind(symbol, t, dateRange, keyRange)
+        val data = explicitRange(t.getOrElse(LongType), dateRange, keyRange) match {
+          case Some(r) => df.filter(r.residual(indexCol.get, t.get))
           case None => df
         }
         write(symbol, data, indexCol, targetRows)
@@ -781,8 +787,9 @@ final class Library(
     val v = latestVersion(symbol).getOrElse(
       throw new NoSuchElementException(s"symbol $symbol does not exist"))
     val m = manifest(symbol, v)
-    val it = m.indexCol.map(i => schemaOf(m.schemaDdl)(i).dataType).getOrElse(LongType)
-    val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, it)
+    val it = idxTypeOf(m)
+    requireRangeKind(symbol, it, Some((lo, hi)), None)
+    val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, it.get)
     spliceRange(symbol, m, new LongKeys.Range(l, h), None, targetRows)
   }
 
@@ -792,7 +799,9 @@ final class Library(
   def deleteRange(symbol: String, lo: String, hi: String, targetRows: Long): Int = {
     val v = latestVersion(symbol).getOrElse(
       throw new NoSuchElementException(s"symbol $symbol does not exist"))
-    spliceRange(symbol, manifest(symbol, v), new StrKeys.Range(lo, hi), None, targetRows)
+    val m = manifest(symbol, v)
+    requireRangeKind(symbol, idxTypeOf(m), None, Some((lo, hi)))
+    spliceRange(symbol, m, new StrKeys.Range(lo, hi), None, targetRows)
   }
   def deleteRange(symbol: String, lo: String, hi: String): Int =
     deleteRange(symbol, lo, hi, DefaultTargetRows)
@@ -990,8 +999,8 @@ final class Library(
     val m = resolveVersion(symbol, asOf)
     require(dateRange.isEmpty || keyRange.isEmpty,
       "dateRange and keyRange are mutually exclusive")
-    val idxType = m.indexCol.map(i => schemaOf(m.schemaDdl)(i).dataType)
-    idxType.foreach(requireRangeKind(symbol, _, dateRange, keyRange))
+    val idxType = idxTypeOf(m)
+    requireRangeKind(symbol, idxType, dateRange, keyRange)
     val range = explicitRange(idxType.getOrElse(LongType), dateRange, keyRange)
     val byIndex = range match {
       case Some(r) => m.files.filter(r.intersects)
@@ -2511,7 +2520,7 @@ final class Library(
         dir, m.indexCol, targetRows)
     }
     // files are index-disjoint, so the one file order IS global row order
-    val keys = keysOf(m.indexCol.map(i => schemaOf(m.schemaDdl)(i).dataType))
+    val keys = keysOf(idxTypeOf(m))
     val ordered = renumber(keys.sorted(untouched ++ runOut.flatMap(_._2)))
     // Guard the invariant before committing: consecutive files must not
     // properly overlap.

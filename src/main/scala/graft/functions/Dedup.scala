@@ -61,7 +61,11 @@ object Dedup {
     * exchange is bounded and never appears at corpus scale, where the
     * file layout supplies the splits. Generate nodes are not pushed
     * through exchanges by the optimizer, so the kernel stays above the
-    * repartition (a plain Project would be pushed back down).
+    * repartition (a plain Project would be pushed back down). Only a
+    * shuffle-free input is probed: a joined or deduplicated input (the
+    * keepers' fingerprint survivors, lshJaccardPairs' candidate docs)
+    * keeps the parallelism its shuffle gives it, and building the kernel
+    * frame runs no job ([[Kernels.spread]]).
     */
   private def spreadForKernel(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // Parquet bin-packing targets ~defaultParallelism splits, so the
@@ -392,6 +396,8 @@ object Dedup {
       bands, maxBucket, portable)
     val ids = cand.select(col("id_a").as("__cid"))
       .unionByName(cand.select(col("id_b").as("__cid"))).distinct()
+    // `docs` sits below the candidate pipeline's exchanges, so the spread
+    // passes it through unprobed: the pipeline runs once, in the action.
     val docs = df.join(ids, df(idCol) === ids("__cid"), "left_semi")
     val sets = shinglePostings(
       spreadForKernel(docs, idCol, textCol), idCol, textCol, shingleLen)
@@ -1460,7 +1466,9 @@ object Dedup {
     * (`raw`), not the fingerprint-deduped survivors: the raw scan's stats
     * answer without a job, counting the survivors would force the
     * fingerprint aggregate early, and raw ≥ deduped so over-counting
-    * routes to the scale path — correct on any corpus.
+    * routes to the scale path — correct on any corpus. `deduped` sits
+    * below that aggregate's exchange, so neither tier's kernel spread
+    * runs it at build time ([[Kernels.spread]]).
     */
   private[graft] def nearDupPairs(
       raw: DataFrame,

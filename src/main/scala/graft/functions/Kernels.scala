@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 /** Shared plumbing for the codegen'd text kernels. */
@@ -16,6 +18,15 @@ private[graft] object Kernels {
     * file layout supplies the splits. (Extracted from Dedup's
     * spreadForKernel, round 9 — same thresholds, same PlanSpec pins.)
     *
+    * The decision never executes its input. Only a shuffle-free planned
+    * plan (no `Exchange`, no `AdaptiveSparkPlanExec` root) is probed for
+    * its split count: there `.rdd.getNumPartitions` is static and fires
+    * no job. An input below an exchange — a join, an aggregate, a
+    * distinct — is returned narrowed but unspread: its parallelism is
+    * whatever the shuffle and AQE give it. Under AQE the probe itself
+    * would run every upstream shuffle stage at build time, and the action
+    * would then run the same stages again.
+    *
     * r22 NEGATIVE RESULT, do not re-try: widening the gate to
     * `parts < cores` (so a 16-file sf1 corpus spreads on 32 cores) with
     * a 2×cores target made q30 at sf1 WORSE, 1.7-1.9 → 2.05-2.22 s warm
@@ -28,8 +39,11 @@ private[graft] object Kernels {
     */
   def spread(df: DataFrame, cols: Seq[String]): DataFrame = {
     val narrow = df.select(cols.map(col): _*)
+    val planned = narrow.queryExecution.executedPlan
+    val shuffled = planned.isInstanceOf[AdaptiveSparkPlanExec] ||
+      planned.exists(_.isInstanceOf[Exchange])
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (narrow.rdd.getNumPartitions >= math.min(8, cores)) narrow
+    if (shuffled || narrow.rdd.getNumPartitions >= math.min(8, cores)) narrow
     else narrow.repartition(math.min(16, 2 * cores))
   }
 }

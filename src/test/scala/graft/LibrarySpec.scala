@@ -364,6 +364,52 @@ class LibrarySpec extends SparkSuite {
     }
   }
 
+  test("deleteRange refuses bounds of the other index family without committing") {
+    // long bounds on a string index (or the reverse) match no file, so
+    // going ahead would commit a no-op version
+    val lib = newLib()
+    lib.write("k", keyed(0, 100), Some("key"), targetRows = 50)
+    lib.write("n", mk(0, 100), Some("ts2"), targetRows = 50)
+    intercept[IllegalArgumentException](lib.deleteRange("k", 0L, 50L))
+    intercept[IllegalArgumentException](lib.deleteRange("n", "k000000", "k000050"))
+    for (sym <- Seq("k", "n")) {
+      assert(lib.latestVersion(sym).contains(0))
+      assert(lib.read(sym).count() == 100)
+    }
+  }
+
+  test("a range read of an unindexed symbol refuses instead of returning every row") {
+    val lib = newLib()
+    lib.write("u", mk(0, 100), None, targetRows = 50)
+    intercept[IllegalArgumentException](lib.read("u", dateRange = Some((0L, 9L))))
+    intercept[IllegalArgumentException](lib.read("u", keyRange = Some(("a", "b"))))
+    intercept[IllegalArgumentException](lib.deleteRange("u", 0L, 9L))
+    assert(lib.read("u").count() == 100)
+    assert(lib.latestVersion("u").contains(0))
+  }
+
+  test("upsert-create checks the range kind against the new index, before writing") {
+    // the same refusal the existing-symbol branch raises, not a late
+    // CAST_INVALID_INPUT from the write's job (itself an
+    // IllegalArgumentException subclass, hence the message checks)
+    val lib = newLib()
+    def refusal(f: => Any) = intercept[IllegalArgumentException](f).getMessage
+    assert(refusal(lib.update("n", mk(0, 100), upsert = true,
+      indexCol = Some("ts2"), keyRange = Some(("a", "z"))))
+      .contains("n has a bigint index — use dateRange, not keyRange"))
+    assert(refusal(lib.update("k", keyed(0, 100), upsert = true,
+      indexCol = Some("key"), dateRange = Some((0L, 9L))))
+      .contains("k has a string index — use keyRange, not dateRange"))
+    // a range with no index to apply it to
+    assert(refusal(lib.update("m", mk(0, 100), upsert = true,
+      dateRange = Some((0L, 9L)))).contains("m has no index"))
+    assert(lib.listSymbols().isEmpty)
+    // the matching kind still creates, keeping only in-range rows
+    lib.update("n", mk(0, 100), upsert = true, indexCol = Some("ts2"),
+      dateRange = Some((10L, 19L)))
+    assert(lib.read("n").count() == 10)
+  }
+
   test("a millisecond timestamp index gets µs manifest bounds and prunes dateRange reads") {
     // footer stats carry the unit the writer chose: a session writing
     // TIMESTAMP_MILLIS (GraftSession pins MICROS; a bare Library takes any

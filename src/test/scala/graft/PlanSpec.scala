@@ -218,6 +218,38 @@ class PlanSpec extends SparkSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("kernel spread decides from the planned plan: a shuffled input runs no job") {
+    // Under AQE, asking a plan below an exchange for its partition count
+    // runs every upstream shuffle stage; the spread must pass such an
+    // input through instead of executing it at build time
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    def roundRobin(df: DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val joined = docs.join(
+      docs.groupBy("doc_id").count().filter(col("count") === 1), Seq("doc_id"))
+    val (spread, jobs) =
+      jobsDuring(functions.Kernels.spread(joined, Seq("doc_id", "text")))
+    assert(jobs == 0, s"spread over a joined frame fired $jobs job(s)")
+    assert(!roundRobin(spread), "a shuffled input keeps its shuffle's parallelism")
+    assert(spread.count() == docs.count())
+    // control: a split-starved shuffle-free input still round-robins
+    val (starved, starvedJobs) =
+      jobsDuring(functions.Kernels.spread(docs.coalesce(1), Seq("doc_id", "text")))
+    assert(starvedJobs == 0 && roundRobin(starved))
+  }
+
+  test("lshJaccardPairs builds over a parquet corpus without running a job") {
+    // the rescoring docs are a semi-join against the candidate pipeline;
+    // building the frame must not run that pipeline ahead of the action
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val (pairs, jobs) = jobsDuring(
+      functions.Dedup.lshJaccardPairs(docs, "doc_id", "text", threshold = 0.5))
+    assert(jobs == 0, s"building lshJaccardPairs fired $jobs job(s)")
+    assert(pairs.filter(col("id_a") >= col("id_b")).isEmpty)
+  }
+
   test("bucket-population caps plan as groupBy-count→join, never a window") {
     // A count().over(Window.partitionBy(key)) cap routes EVERY row of a
     // skewed bucket to one task before filtering — exactly the single-task
