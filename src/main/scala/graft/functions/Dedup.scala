@@ -50,29 +50,6 @@ object Dedup {
     df.select(col(idCol).as("id"), graft.plans.ShinglePostings(col(textCol), n))
       .select("id", "s", "sz")
 
-  /** The shingle kernels run fused with the scan, so their parallelism IS
-    * the scan's split count — and a small heavily-compressed text table
-    * often lands in ONE split (zstd packs text ~50×; the sf0.1 documents
-    * file is 5k docs in 0.6 MB), putting a compute-bound kernel on one
-    * core (measured: 250 ms of q30's ~600 ms wall). When the scan planned
-    * fewer splits than cores are worth, buy parallelism with one
-    * round-robin exchange of the two needed columns. A <8-split scan is
-    * ≤ ~1 GB of input by construction (maxPartitionBytes), so the
-    * exchange is bounded and never appears at corpus scale, where the
-    * file layout supplies the splits. Generate nodes are not pushed
-    * through exchanges by the optimizer, so the kernel stays above the
-    * repartition (a plain Project would be pushed back down). Only a
-    * shuffle-free input is probed: a joined or deduplicated input (the
-    * keepers' fingerprint survivors, lshJaccardPairs' candidate docs)
-    * keeps the parallelism its shuffle gives it, and building the kernel
-    * frame runs no job ([[Kernels.spread]]).
-    */
-  private def spreadForKernel(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    // Parquet bin-packing targets ~defaultParallelism splits, so the
-    // "enough splits" bar must be core-relative: an already-at-parallelism
-    // scan gains nothing from the exchange.
-    Kernels.spread(df, Seq(idCol, textCol))
-
   /** Within-document repetition ratio — the classic corpus-quality signal
     * (fraction of n-gram POSITIONS occupied by a repeated n-gram):
     * 1 - distinct/total. 0 = no internal repetition; → 1 for template spam.
@@ -81,7 +58,7 @@ object Dedup {
     * score 0.
     */
   def repetitionRatio(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    spreadForKernel(df, idCol, textCol)
+    Kernels.spread(df, Seq(idCol, textCol))
       .select(col(idCol).as("id"),
         Text.ngramCount(col(textCol), n).as("total_n"),
         size(graft.plans.DistinctShingles(col(textCol), n)).as("__d"))
@@ -140,7 +117,7 @@ object Dedup {
       shingleLen: Int,
       threshold: Double,
       maxDocFreq: Long = 0): DataFrame = {
-    // No spreadForKernel here: "corpus text never shuffles" is this
+    // No Kernels.spread here: "corpus text never shuffles" is this
     // operator's pinned scale property (PlanSpec q68) — the kernel keeps
     // scan-split parallelism, which the file layout supplies at corpus
     // scale.
@@ -329,16 +306,8 @@ object Dedup {
       bands: Int = 4,
       maxBucket: Int = 1000,
       portable: Boolean = false): DataFrame = {
-    val banded = bandedRows(df, idCol, textCol, shingleLen, numHashes, bands, portable)
-    // Cap via groupBy-count → anti-join on over-cap buckets (not a count
-    // window — see decontaminate): only (band, bandhash, count, min)
-    // partials shuffle for the cap decision, and a mega-bucket is never
-    // buffered on one task just to be discarded.
-    val counted = banded.groupBy("band", "bandhash")
-      .agg(count(lit(1)).as("__n"), min(col("id")).as("__rep"))
-    val over = counted.filter(col("__n") > maxBucket)
-    val bucketed = banded.join(
-      over.select("band", "bandhash"), Seq("band", "bandhash"), "left_anti")
+    val tagged = taggedBands(df, idCol, textCol, shingleLen, numHashes, bands, portable)
+    val bucketed = tagged.filter(col("__n") <= maxBucket)
     val pairwise = bucketed.as("a")
       .join(bucketed.as("b"),
         col("a.band") === col("b.band") &&
@@ -353,10 +322,31 @@ object Dedup {
     // bucket. Consumers that rescore (lshJaccardPairs) decide per-edge
     // survival exactly as for pairwise candidates; `__rep` is the min id,
     // so star edges satisfy the id_a < id_b contract by construction.
-    val star = banded.join(over, Seq("band", "bandhash"))
-      .filter(col("id") =!= col("__rep"))
+    val star = tagged.filter(col("__n") > maxBucket && col("id") =!= col("__rep"))
       .select(col("__rep").as("id_a"), col("id").as("id_b"))
     pairwise.unionByName(star).distinct()
+  }
+
+  /** [[bandedRows]] tagged with their bucket's population `__n` and min
+    * id `__rep`: the cap's groupBy-count joined back on (band, bandhash),
+    * never a count window (see decontaminate). The cap's pairwise/star
+    * split and lshJaccardPairs' rescoring docs all read this stream.
+    * Unbroadcast (corpus scale; checked with broadcast off, AQE on and
+    * off), the band rows shuffle once on (band, bandhash), every tag join
+    * reads that exchange, and the pairwise self-join adds none.
+    */
+  private def taggedBands(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleLen: Int,
+      numHashes: Int,
+      bands: Int,
+      portable: Boolean): DataFrame = {
+    val banded = bandedRows(df, idCol, textCol, shingleLen, numHashes, bands, portable)
+    val counted = banded.groupBy("band", "bandhash")
+      .agg(count(lit(1)).as("__n"), min(col("id")).as("__rep"))
+    banded.join(counted, Seq("band", "bandhash"))
   }
 
   /** Near-dup pairs at corpus scale: MinHash-LSH candidates verified by
@@ -372,14 +362,18 @@ object Dedup {
     * everything, never materializing all-pairs).
     *
     * Scale shape: candidate generation is the banded bucket join
-    * (bounded keys, `maxBucket` cap); rescoring restricts the corpus to
-    * docs that appear in some candidate pair (a sparse subset), collects
-    * each such doc's distinct shingle HASHES once (one keyed shuffle of
-    * 8-byte longs — text never shuffles), and joins the ~|shingles|-long
-    * arrays onto the pair stream by id. Per-pair cost is
-    * O(|a| + |b|) set intersection; total cost is candidate-pair mass,
-    * never corpus². Jaccard rounds to 6 before the threshold compare
-    * (the [[matchesAgainstIndex]] convention) and inherits the 64-bit
+    * (bounded keys, `maxBucket` cap). Rescoring restricts the corpus to
+    * docs sharing a band bucket with another doc (a superset of the docs
+    * the candidates name, taken from the bucket counts so the plan holds
+    * one candidate pipeline, not one per use), collects each such doc's
+    * distinct shingle HASHES once, and joins the arrays onto the pair
+    * stream by id. The restriction is a merge semi-join at every scale:
+    * the corpus rows shuffle once on id, the set aggregate adds no
+    * exchange, and a caller joining the same corpus on id (dropping the
+    * pairs' losers) reuses that exchange. Per-pair cost is O(|a| + |b|)
+    * set intersection; total cost is candidate-pair mass, never corpus².
+    * Jaccard rounds to 6 before the threshold compare (the
+    * [[matchesAgainstIndex]] convention) and inherits the 64-bit
     * shingle-hash almost-surely-exact caveat of [[ngramJaccardPairs]].
     */
   def lshJaccardPairs(
@@ -394,13 +388,12 @@ object Dedup {
       portable: Boolean = false): DataFrame = {
     val cand = minhashCandidates(df, idCol, textCol, shingleLen, numHashes,
       bands, maxBucket, portable)
-    val ids = cand.select(col("id_a").as("__cid"))
-      .unionByName(cand.select(col("id_b").as("__cid"))).distinct()
-    // `docs` sits below the candidate pipeline's exchanges, so the spread
-    // passes it through unprobed: the pipeline runs once, in the action.
-    val docs = df.join(ids, df(idCol) === ids("__cid"), "left_semi")
-    val sets = shinglePostings(
-      spreadForKernel(docs, idCol, textCol), idCol, textCol, shingleLen)
+    // Every id a pairwise or star edge names sits in a bucket of two or
+    // more members, so extra docs join no pair.
+    val ids = taggedBands(df, idCol, textCol, shingleLen, numHashes, bands, portable)
+      .filter(col("__n") > 1).select(col("id").as("__cid")).distinct()
+    val docs = df.join(ids.hint("merge"), df(idCol) === ids("__cid"), "left_semi")
+    val sets = shinglePostings(docs, idCol, textCol, shingleLen)
       .groupBy("id")
       .agg(collect_set(xxhash64(col("s"))).as("__set"))
     cand
@@ -794,7 +787,7 @@ object Dedup {
     // almost-surely exact rather than exact (odds become material only
     // near ~2^32 distinct shingles, per the birthday bound; the
     // ground-truth spec pins the fixed corpora).
-    val spreadIn = spreadForKernel(df, idCol, textCol)
+    val spreadIn = Kernels.spread(df, Seq(idCol, textCol))
     val posts = shinglePostings(spreadIn, idCol, textCol, shingleLen)
       .select(xxhash64(col("s")).as("s"),
         col("id").cast("long").as("id"), col("sz"))
@@ -1396,7 +1389,7 @@ object Dedup {
       textCol: String,
       n: Int): DataFrame = {
     val posts = shinglePostings(
-      spreadForKernel(df, idCol, textCol), idCol, textCol, n)
+      Kernels.spread(df, Seq(idCol, textCol)), idCol, textCol, n)
     val freq = posts.groupBy("s").agg(count(lit(1)).as("__df"))
     val perDoc = posts.join(freq, "s")
       .groupBy(col("id").as(idCol))
@@ -1467,8 +1460,9 @@ object Dedup {
     * answer without a job, counting the survivors would force the
     * fingerprint aggregate early, and raw ≥ deduped so over-counting
     * routes to the scale path — correct on any corpus. `deduped` sits
-    * below that aggregate's exchange, so neither tier's kernel spread
-    * runs it at build time ([[Kernels.spread]]).
+    * below that aggregate's exchange, so the exact tier's kernel spread
+    * does not run it at build time ([[Kernels.spread]]); the LSH tier
+    * spreads nothing.
     */
   private[graft] def nearDupPairs(
       raw: DataFrame,

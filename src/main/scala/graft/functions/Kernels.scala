@@ -15,8 +15,11 @@ private[graft] object Kernels {
     * ~50×), putting a fused kernel on one core; a <8-split scan is
     * ≤ ~1 GB of input by construction (maxPartitionBytes), so the
     * exchange is bounded and never appears at corpus scale, where the
-    * file layout supplies the splits. (Extracted from Dedup's
-    * spreadForKernel, round 9 — same thresholds, same PlanSpec pins.)
+    * file layout supplies the splits. The bar is core-relative because
+    * parquet bin-packing already targets ~defaultParallelism splits. A
+    * kernel applied to the result stays above the repartition: the
+    * optimizer does not push Generate nodes through an exchange (a plain
+    * Project would be pushed back down).
     *
     * The decision never executes its input. Only a shuffle-free planned
     * plan (no `Exchange`, no `AdaptiveSparkPlanExec` root) is probed for
@@ -25,7 +28,10 @@ private[graft] object Kernels {
     * distinct — is returned narrowed but unspread: its parallelism is
     * whatever the shuffle and AQE give it. Under AQE the probe itself
     * would run every upstream shuffle stage at build time, and the action
-    * would then run the same stages again.
+    * would then run the same stages again. Deciding still pays a full
+    * physical planning of the input, so a caller whose input always sits
+    * below an exchange (a semi-join's output) gains nothing from the call
+    * and does not make it.
     *
     * r22 NEGATIVE RESULT, do not re-try: widening the gate to
     * `parts < cores` (so a 16-file sf1 corpus spreads on 32 cores) with

@@ -653,6 +653,33 @@ class DedupGroundTruthSpec extends SparkSuite {
     assert(strict.contains((3L, 4L)), strict)
   }
 
+  test("lshJaccardPairs equals minhashCandidates cut by exact Jaccard, pairwise and star") {
+    // The rescore reads every doc of a bucket of two or more, a superset
+    // of the docs the candidates name: the output must be exactly the
+    // candidates whose driver-side Jaccard clears t, whether an edge
+    // comes from a pairwise bucket or from an over-cap star
+    val df = spark.read.parquet(s"$sf/documents.parquet")
+    val t = 0.97 // this corpus's candidates score 0.89–0.99: t cuts about half
+    def clears(p: (Long, Long)) =
+      BigDecimal(jaccard(truthSets(p._1), truthSets(p._2)))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP) >= t
+    val buckets = Dedup.bandedRows(df, "doc_id", "text", 3, 12, 4, portable = false)
+      .groupBy("band", "bandhash").count()
+    assert(buckets.filter(col("count") > 1000).isEmpty,
+      "the default cap must leave every bucket pairwise")
+    assert(!buckets.filter(col("count") > 2).isEmpty,
+      "no band bucket exceeds maxBucket=2 — the star branch would go untested")
+    for (cap <- Seq(1000, 2)) {
+      val cand = Dedup.minhashCandidates(df, "doc_id", "text", maxBucket = cap)
+        .as[(Long, Long)].collect().toSet
+      val lsh = Dedup.lshJaccardPairs(df, "doc_id", "text", threshold = t, maxBucket = cap)
+        .as[(Long, Long)].collect().toSet
+      assert(lsh == cand.filter(clears), s"maxBucket=$cap")
+      assert(lsh.nonEmpty && lsh.size < cand.size,
+        s"maxBucket=$cap: ${lsh.size} of ${cand.size} candidates kept — vacuous cut")
+    }
+  }
+
   test("keeper auto-dispatch: forced-LSH equals forced-exact on a total-recall corpus") {
     // identical + near-identical groups (LSH recall 1 on this fixture),
     // so both routes must produce the same survivor set — the dispatch

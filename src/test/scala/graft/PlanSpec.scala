@@ -190,7 +190,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("jaccard kernel buys parallelism only on split-starved scans") {
-    // spreadForKernel: a <8-split input round-robins (id, text) to 16
+    // Kernels.spread: a <8-split input round-robins (id, text) to 16
     // partitions so the shingle kernel is not single-core; an input whose
     // layout already supplies splits must NOT pay that exchange — at
     // corpus scale the file layout always supplies them, so the exchange
@@ -248,6 +248,30 @@ class PlanSpec extends SparkSuite {
       functions.Dedup.lshJaccardPairs(docs, "doc_id", "text", threshold = 0.5))
     assert(jobs == 0, s"building lshJaccardPairs fired $jobs job(s)")
     assert(pairs.filter(col("id_a") >= col("id_b")).isEmpty)
+  }
+
+  test("lshJaccardPairs plans one candidate pipeline, not one per use") {
+    // The rescoring docs come from the bucket counts, not from the
+    // candidate pairs. Pre-AQE, the corpus is scanned twice per tag join
+    // of band rows with their counts: three tag joins for the candidates
+    // (both pairwise sides and the star) and one under each side's
+    // shingle sets, plus each side's docs semi-join — 12 scans. Deriving
+    // the docs from the candidate pairs planned ~32.
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val plan = functions.Dedup.lshJaccardPairs(docs, "doc_id", "text", threshold = 0.5)
+      .queryExecution.sparkPlan
+    val scans = plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 12, s"${scans.size} corpus scans planned")
+    // the docs restriction is a merge semi-join at every scale, so the
+    // set aggregate reads its id partitioning and a caller's id join can
+    // reuse the corpus exchange
+    val semi = plan.collect {
+      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
+    }
+    assert(semi.size == 2, plan.toString.take(2000))
   }
 
   test("bucket-population caps plan as groupBy-count→join, never a window") {
