@@ -51,71 +51,74 @@ object SparkEntry {
       (k: (SparkSession, String)) => k._1.read.parquet(k._2))
   }
 
-  /** Deterministic total order for a provably-SMALL result (grouped /
-    * top-k outputs, ≤ a few hundred k rows): single partition +
-    * in-partition sort. A global `orderBy` pays RangePartitioner's
-    * sampling pass over the sort input — a whole extra job wave that
-    * dominates sub-second queries; for results this small the parallel
-    * sort buys nothing back. Large (unaggregated) results keep `orderBy`:
-    * at 100 TB those must range-partition.
+  /** An output's shape, as [[ordered]] sorts it: the one-partition
+    * funnel (`coalesce(1)` or `repartition(1)`) and the optimizer size
+    * estimate up to which that funnel applies (`None`: always).
     */
-  private def sortSmall(df: DataFrame, cols: String*): DataFrame =
-    df.repartition(1).sortWithinPartitions(cols.head, cols.tail: _*)
+  private[graft] final case class Shape(coalesce: Boolean, bound: Option[Long])
 
-  /** Deterministic-order tail for selectivity-dependent (UNAGGREGATED)
-    * outputs — filter/map results whose size scales with the corpus.
-    * While the source scan is provably small (optimizer size stats —
-    * parquet file bytes, no job) the cheap single-partition tail applies;
-    * past the threshold it becomes a true range-partitioned orderBy, so a
-    * 100×-scale run never funnels an unaggregated scan through one task.
-    * Grouped/top-k outputs (bounded by key cardinality) keep
-    * sortSmall/sortSmallAgg unconditionally.
-    */
   private[graft] val SmallScanBytes = 4L << 30
-  private[graft] def sortGuarded(df: DataFrame, cols: String*): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallScanBytes)
-      sortSmall(df, cols: _*)
-    else df.orderBy(cols.map(col): _*)
-
-  /** Deterministic-order tail for FULL-WIDTH map outputs (output ≈ input —
-    * no selective filter upstream, so sortGuarded's repartition(1) would
-    * funnel the whole table through one exchange). Below ~16 MB of
-    * estimated output ONE task scans and sorts in place: coalesce(1)
-    * plants no exchange, and the exchange plus RangePartitioner's
-    * sampling job is most of a sub-second query's wall (sf0.1 lineitem
-    * projection: coalesce 0.73s vs repartition(1) 1.04s vs orderBy
-    * 1.19s). Beyond the threshold a single task would carry ALL scan +
-    * sort work — the scale-killer funnel (sf1, 44 MB estimate: 6.1s
-    * coalesced vs 0.96s ranged) — so the true range-partitioned orderBy
-    * applies. 6 MB (of COMPRESSED-parquet-derived estimate, ~8× under
-    * in-memory size) splits the measured regimes with ~1.7× margin each
-    * side: the 9 MB sf1 window output funnelled through coalesce(1)
-    * walls 1.4s vs 0.5s ranged, while the 3.4 MB sf0.1 projection pays
-    * 2× for the range exchange.
-    */
   private[graft] val WideSortBytes = 6L << 20
-  private[graft] def sortWide(df: DataFrame, cols: String*): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= WideSortBytes)
-      df.coalesce(1).sortWithinPartitions(cols.head, cols.tail: _*)
-    else df.orderBy(cols.map(col): _*)
 
-  /** [[sortWide]] with a FUSED single long sort key — the caller
-    * guarantees the key is unique and monotone in the intended
-    * multi-column order (e.g. l_orderkey*8 + l_linenumber with
-    * l_linenumber < 8). A single long key keeps the WHOLE comparison
-    * inside the sorter's radix prefix; a two-column sort radixes the
-    * first column only and calls the record comparator for every
-    * first-key tie (sf0.1 lineitem projection: 593 → 376 ms, SURVEY.md
-    * §21 "Bench gate defended" #3). Past the size gate the same key
-    * drives the range orderBy — identical total order, still
-    * sampled/parallel at scale.
+  private[graft] val Small = Shape(coalesce = false, None)
+  private[graft] val Selective = Shape(coalesce = false, Some(SmallScanBytes))
+  private[graft] val Grouped = Shape(coalesce = true, Some(SmallScanBytes))
+  private[graft] val Wide = Shape(coalesce = true, Some(WideSortBytes))
+  private[graft] val Windowed = Shape(coalesce = false, Some(WideSortBytes))
+
+  /** The deterministic-order tail every query ends in. While the output's
+    * optimizer size estimate (parquet-file-derived stats, no job) is
+    * within the shape's bound, the output funnels to one partition and
+    * sorts in place: a global `orderBy` pays RangePartitioner's sampling
+    * pass, a whole extra job wave that dominates sub-second queries. Past
+    * the bound it is a true range-partitioned `orderBy`, so a 100×-scale
+    * run never sorts a large output in one task. An unbounded shape never
+    * asks for the estimate, which would cost an optimizer pass at build.
+    *
+    *  - [[Small]]: outputs small by construction (top-k, pair sets, at
+    *    most a few hundred k rows), where a parallel sort buys nothing.
+    *  - [[Selective]]: unaggregated filter/map outputs, whose size scales
+    *    with the corpus; 4 GiB bound.
+    *  - [[Grouped]]: grouped/resampled finals behind a shuffle.
+    *    `coalesce(1)` merges the final-agg partitions without a new
+    *    exchange (sf1: median 0.28 s → 0.17 s against `repartition(1)`).
+    *    Over a map-only or window pipeline it would collapse the whole
+    *    stage to one task (measured 2× slower), so only outputs with an
+    *    exchange below the tail take this shape. The 4 GiB bound
+    *    (VERDICT r21 #3) keeps a corpus-scaled group key from funnelling
+    *    every partial through one final hash-merge. The estimate is the
+    *    column-pruned input scaled by row width (no group counts without
+    *    CBO), so bounded-key outputs over a huge corpus range-sort too,
+    *    at the price of one sampling pass over a tiny aggregate.
+    *  - [[Wide]]: full-width map outputs (output ≈ input). `coalesce(1)`
+    *    plants no exchange: one task scans and sorts (sf0.1 lineitem
+    *    projection: coalesce 0.73 s, `repartition(1)` 1.04 s, `orderBy`
+    *    1.19 s). Past 6 MiB that task would carry all the scan and sort
+    *    work (sf1, 44 MB estimate: 6.1 s coalesced vs 0.96 s ranged).
+    *    6 MiB of compressed-parquet estimate (~8× under in-memory size)
+    *    splits the measured regimes with ~1.7× margin each side: the 9 MB
+    *    sf1 window output walls 1.4 s coalesced vs 0.5 s ranged, while the
+    *    3.4 MB sf0.1 projection pays 2× for the range exchange. One
+    *    [[fusedKey]] keeps the whole comparison inside the sorter's radix
+    *    prefix, where a two-column sort calls the record comparator on
+    *    every first-key tie (sf0.1 lineitem projection: 593 → 376 ms,
+    *    SURVEY.md §21 "Bench gate defended" #3).
+    *  - [[Windowed]]: window pipelines. Wide's bound, but `repartition(1)`:
+    *    coalesce would collapse the window stage itself to one task (sf0.1:
+    *    0.34 s coalesced vs 0.25 s with the window parallel behind the
+    *    funnel), and past the bound a 1-task funnel walls 3×.
     */
-  private[graft] def sortWideFused(df: DataFrame, key: Column): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= WideSortBytes)
-      df.coalesce(1).sortWithinPartitions(key)
-    else df.orderBy(key)
+  private[graft] def ordered(shape: Shape, key: Column, keys: Column*): DataFrame => DataFrame =
+    df =>
+      if (shape.bound.forall(df.queryExecution.optimizedPlan.stats.sizeInBytes <= _))
+        (if (shape.coalesce) df.coalesce(1) else df.repartition(1))
+          .sortWithinPartitions(key +: keys: _*)
+      else df.orderBy(key +: keys: _*)
 
-  /** hi·(loBound+2) + slot(lo) — [[sortWideFused]]'s key, with the
+  private[graft] def ordered(shape: Shape, key: String, keys: String*): DataFrame => DataFrame =
+    ordered(shape, col(key), keys.map(col): _*)
+
+  /** hi·(loBound+2) + slot(lo) — the [[Wide]] shape's fused key, with the
     * uniqueness precondition (lo ∈ [0, loBound] or NULL) enforced PER
     * ROW: a lo outside the band would silently collide/reorder the
     * fused key, so it raises instead (one codegen'd branch, no
@@ -136,48 +139,6 @@ object SparkEntry {
         .otherwise(raise_error(concat(
           lit(s"fused sort key: low component outside [0,$loBound]: "),
           lo.cast("string"))).cast("int"))
-
-  /** sortWide for WINDOW pipelines: same size gate, but the small branch
-    * is repartition(1), not coalesce(1) — coalesce would collapse the
-    * window stage itself to one task (the upstream exchange vanishes),
-    * serializing the per-key window compute (measured at sf0.1: 0.34s
-    * coalesced vs 0.25s with the window parallel behind a repartition(1)
-    * funnel of the small OUTPUT). Past the gate the range orderBy stands,
-    * as in sortWide (a 1-task funnel of a large window output walls 3×).
-    */
-  private[graft] def sortWindowed(df: DataFrame, cols: String*): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= WideSortBytes)
-      sortSmall(df, cols: _*)
-    else df.orderBy(cols.map(col): _*)
-
-  /** Deterministic order for a small POST-SHUFFLE result (grouped/
-    * resampled finals): coalesce(1) merges the final-agg partitions
-    * without a new exchange — one less shuffle + AQE round-trip than
-    * repartition(1) (measured at sf1: med 0.28s → 0.17s). Only valid
-    * when an exchange sits between the scan and this tail; coalesce(1)
-    * over a map-only or window pipeline would collapse that whole stage
-    * to one task (measured 2× slower) — those keep sortSmall.
-    *
-    * STATS-GATED for scale (VERDICT r21 #3): coalesce(1) also collapses
-    * the FINAL aggregate to one task — fine while the grouped output is
-    * provably small, but a corpus-scaled group key (q43's distinct
-    * user_id, per-doc groups, per-host graph scores) would funnel every
-    * partial through a single hash-merge at 100 TB. Past the same 4 GiB
-    * optimizer-estimate threshold sortGuarded uses, the tail becomes a
-    * true range-partitioned orderBy: the final aggregate stays parallel
-    * and the sort samples/ranges. The estimate is the column-pruned
-    * input size scaled by row width (Spark cannot see group counts
-    * without CBO), so bounded-key outputs over a huge corpus ALSO take
-    * the parallel branch — costing one sampling pass over a tiny
-    * aggregate, negligible against the corpus-sized scan below it. At
-    * every bench scale (≤ sf5) the estimates sit far under the gate, so
-    * the plan keeps the measured coalesce(1) shape (PlanSpec pins both
-    * branches).
-    */
-  private[graft] def sortSmallAgg(df: DataFrame, cols: String*): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallScanBytes)
-      df.coalesce(1).sortWithinPartitions(cols.head, cols.tail: _*)
-    else df.orderBy(cols.map(col): _*)
 
   /** The synthetic corpus carries no natural PII, so PII-sensitive
     * queries (q78 redaction, q92 corpus cleanup) plant a deterministic
@@ -345,26 +306,26 @@ object SparkEntry {
         .filter((e("l_quantity") < l(5.0)) && (e("l_discount") > l(0.05)))(
           t(s, dir, "lineitem"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_discount"))
-        .transform(sortGuarded(_, "l_orderkey", "l_linenumber"))
+        .transform(ordered(Selective, "l_orderkey", "l_linenumber"))
     },
     "q02_filter_string_eq" -> { (s, dir) =>
       QueryBuilder()
         .filter(e("o_orderstatus") === l("F"))(t(s, dir, "orders"))
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .transform(sortGuarded(_, "o_orderkey"))
+        .transform(ordered(Selective, "o_orderkey"))
     },
     "q03_filter_isin" -> { (s, dir) =>
       QueryBuilder()
         .filter(e("p_size").isin(1, 5, 9) && e("p_retailprice").isNotIn(0.0))(
           t(s, dir, "part"))
         .select(col("p_partkey"), col("p_size"), col("p_retailprice"))
-        .transform(sortGuarded(_, "p_partkey"))
+        .transform(ordered(Selective, "p_partkey"))
     },
     "q04_filter_regex" -> { (s, dir) =>
       QueryBuilder()
         .filter(e("event_type").regexMatch("^(cl|si)"))(t(s, dir, "events"))
         .select(col("event_id"), tsUs, col("event_type"))
-        .transform(sortGuarded(_, "event_id"))
+        .transform(ordered(Selective, "event_id"))
     },
     "q05_filter_null_ternary" -> { (s, dir) =>
       QueryBuilder()
@@ -372,7 +333,7 @@ object SparkEntry {
         .project("bucket", ternary(e("value") > l(100.0), l("high"), l("low")))(
           t(s, dir, "events"))
         .select(col("event_id"), col("value"), col("bucket"))
-        .transform(sortWide(_, "event_id"))
+        .transform(ordered(Wide, "event_id"))
     },
     "q06_project_arith" -> { (s, dir) =>
       QueryBuilder()
@@ -384,7 +345,7 @@ object SparkEntry {
         // l_linenumber ∈ [1,7]: the fused key is unique and replays the
         // (l_orderkey, l_linenumber) order with a pure-radix sort (the
         // band guard raises on any out-of-band line number)
-        .transform(sortWideFused(_,
+        .transform(ordered(Wide,
           fusedKey(col("l_orderkey"), col("l_linenumber"), 7)))
     },
     "q07_pow_abs_neg" -> { (s, dir) =>
@@ -393,7 +354,7 @@ object SparkEntry {
         .project("qsq", e("l_quantity").pow(l(2.0)))(t(s, dir, "lineitem"))
         .select(col("l_orderkey"), col("l_linenumber"),
           col("absneg"), round(col("qsq"), 6).as("qsq"))
-        .transform(sortWideFused(_,
+        .transform(ordered(Wide,
           fusedKey(col("l_orderkey"), col("l_linenumber"), 7)))
     },
     // ---------------- groupby + aggregation (SURVEY §2.1) -------------
@@ -413,7 +374,7 @@ object SparkEntry {
           round(col("sum_price"), 6).as("sum_price"),
           round(col("avg_disc"), 6).as("avg_disc"),
           col("max_tax"), col("min_price"), col("n"))
-        .transform(sortSmallAgg(_, "l_returnflag", "l_linestatus"))
+        .transform(ordered(Grouped, "l_returnflag", "l_linestatus"))
     },
     "q09_groupby_single" -> { (s, dir) =>
       QueryBuilder()
@@ -426,7 +387,7 @@ object SparkEntry {
             ("n", "o_orderkey", "count")))(t(s, dir, "orders"))
         .select(col("o_orderpriority"), round(col("total"), 6).as("total"),
           col("lo"), col("hi"), col("n"))
-        .transform(sortSmallAgg(_, "o_orderpriority"))
+        .transform(ordered(Grouped, "o_orderpriority"))
     },
     // ---------------- resample (SURVEY §2.1 ResampleClause) -----------
     "q10_resample_1h" -> { (s, dir) =>
@@ -437,7 +398,7 @@ object SparkEntry {
           ("n", "value", "count")))(t(s, dir, "events"))
         .select(tsUs, round(col("value_sum"), 6).as("value_sum"),
           round(col("value_mean"), 6).as("value_mean"), col("n"))
-        .transform(sortSmallAgg(_, "ts"))
+        .transform(ordered(Grouped, "ts"))
     },
     "q11_resample_right_offset" -> { (s, dir) =>
       QueryBuilder()
@@ -449,7 +410,7 @@ object SparkEntry {
           closed = Resample.Right, label = Resample.Right, offsetNs = 300000000000L)(
           t(s, dir, "events"))
         .select(tsUs, col("v_first"), col("v_last"), col("v_min"), col("v_max"))
-        .transform(sortSmallAgg(_, "ts"))
+        .transform(ordered(Grouped, "ts"))
     },
     "q47_resample_origin_start_day" -> { (s, dir) =>
       // 7h rule (does not divide a day) so the start_day anchor actually
@@ -461,7 +422,7 @@ object SparkEntry {
           ("n", "value", "count")),
           origin = Resample.StartDay)(t(s, dir, "events"))
         .select(tsUs, round(col("v_sum"), 6).as("v_sum"), col("v_last"), col("n"))
-        .transform(sortSmallAgg(_, "ts"))
+        .transform(ordered(Grouped, "ts"))
     },
     "q48_resample_origin_end" -> { (s, dir) =>
       QueryBuilder()
@@ -472,7 +433,7 @@ object SparkEntry {
           closed = Resample.Right, label = Resample.Right,
           origin = Resample.End)(t(s, dir, "events"))
         .select(tsUs, col("v_min"), col("v_max"), col("n"))
-        .transform(sortSmallAgg(_, "ts"))
+        .transform(ordered(Grouped, "ts"))
     },
     "q120_resample_subus_nslong" -> { (s, dir) =>
       // Sub-µs resampling is legal ONLY on the ns-long index (SURVEY
@@ -489,14 +450,14 @@ object SparkEntry {
         .resample("ts", "2500ns", Seq(
           ("v_sum", "value", "sum"), ("n", "value", "count")))(ev)
         .select(col("ts"), round(col("v_sum"), 6).as("v_sum"), col("n"))
-        .transform(sortGuarded(_, "ts"))
+        .transform(ordered(Selective, "ts"))
     },
     // ---------------- date_range / row ops (SURVEY §2.1) --------------
     "q12_date_range" -> { (s, dir) =>
       QueryBuilder()
         .dateRange("ts", 1704153600000000000L, 1704240000000000000L)(t(s, dir, "events"))
         .select(col("event_id"), tsUs, col("event_type"), col("value"))
-        .transform(sortGuarded(_, "event_id"))
+        .transform(ordered(Selective, "event_id"))
     },
     "q119_open_date_range" -> { (s, dir) =>
       // Open-ended date_range — the reference's (None, t1)/(t0, None)
@@ -515,7 +476,7 @@ object SparkEntry {
         .select(lit("ge").as("side"), col("event_id"), tsUs)
       val qb = QueryBuilder().dateRange("ts", None, Some(cut))(ev)
         .select(lit("qb").as("side"), col("event_id"), tsUs)
-      le.union(ge).union(qb).transform(sortGuarded(_, "side", "event_id"))
+      le.union(ge).union(qb).transform(ordered(Selective, "side", "event_id"))
     },
     "q13_head" -> { (s, dir) =>
       QueryBuilder().head(Seq("ts"), 20)(t(s, dir, "events"))
@@ -571,7 +532,7 @@ object SparkEntry {
       MergeUpdate.merge(target, source, Seq("event_id"))
         .select(col("event_id"), tsUs, col("user_id"), col("event_type"),
           col("value"), col("props"))
-        .transform(sortGuarded(_, "event_id"))
+        .transform(ordered(Selective, "event_id"))
     },
     // ---------------- versioned storage layer (SURVEY §1, §2.1) -------
     "q21_write_read_roundtrip" -> { (s, dir) =>
@@ -811,7 +772,7 @@ object SparkEntry {
     "q27_dedup_exact" -> { (s, dir) =>
       Dedup.exactDuplicateGroups(t(s, dir, "documents"), "doc_id", "text")
         .select(col("fp"), col("keep_id"), col("n_copies"))
-        .transform(sortSmallAgg(_, "fp"))
+        .transform(ordered(Grouped, "fp"))
     },
     "q28_dedup_minhash" -> { (s, dir) =>
       // portable=true: md5-derived signatures so the DuckDB oracle replays
@@ -833,12 +794,12 @@ object SparkEntry {
       // sort on a ~25-row result still pays rangepartitioning's sampling
       // job over the upstream stage (measured 0.26s vs 0.10s at sf0.1).
       Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.2)
-        .repartition(1).sortWithinPartitions("id_a", "id_b")
+        .transform(ordered(Small, "id_a", "id_b"))
     },
     "q56_repetition_ratio" -> { (s, dir) =>
       Dedup.repetitionRatio(t(s, dir, "documents"), "doc_id", "text", 3)
         .withColumnRenamed("id", "doc_id")
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q64_drop_near_duplicates" -> { (s, dir) =>
       // The complete removal pipeline: exact dedup → Jaccard pairs →
@@ -916,12 +877,12 @@ object SparkEntry {
       Dedup.decontaminate(docs, docs.filter(col("doc_id") < 50),
         "doc_id", "text", 3, 0.2)
         .select(col("doc_id"))
-        // sortGuarded, not orderBy: the survivor set is unaggregated and
+        // Selective, not orderBy: the survivor set is unaggregated and
         // corpus-scaled (guarded branch past 4 GiB), and below the gate
         // the single-partition sort skips orderBy's range sampling job —
         // which re-executes the whole decontamination pipeline for
         // bounds in the AQE-off small session
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q72_decontaminate_capped" -> { (s, dir) =>
       // The SCALE configuration of decontamination: maxDocFreq drops
@@ -949,7 +910,7 @@ object SparkEntry {
       // parity spec).
       Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.2,
         maxDocFreq = 9)
-        .repartition(1).sortWithinPartitions("id_a", "id_b")
+        .transform(ordered(Small, "id_a", "id_b"))
     },
     "q74_ngram_jaccard_capped_agg" -> { (s, dir) =>
       // Same capped-Jaccard answer as q73 but FORCING the incidence-bound
@@ -959,7 +920,7 @@ object SparkEntry {
       // q73's SQL verbatim: both physical shapes must hash-match it.
       Dedup.ngramJaccardPairsImpl(t(s, dir, "documents"), "doc_id", "text", 3, 0.2,
         maxDocFreq = 9, forceDense = Some(false))
-        .repartition(1).sortWithinPartitions("id_a", "id_b")
+        .transform(ordered(Small, "id_a", "id_b"))
     },
     "q121_ngram_jaccard_prefix" -> { (s, dir) =>
       // The PREFIX-FILTERED exact-Jaccard path (AllPairs/PPJoin shape,
@@ -973,7 +934,7 @@ object SparkEntry {
       // path measured 50× cheaper at sf10/t=0.8).
       Dedup.ngramJaccardPairsImpl(t(s, dir, "documents"), "doc_id", "text", 3, 0.5,
         maxDocFreq = 0, forceDense = Some(false), forcePrefix = Some(true))
-        .repartition(1).sortWithinPartitions("id_a", "id_b")
+        .transform(ordered(Small, "id_a", "id_b"))
     },
     "q133_bpe_fertility" -> { (s, dir) =>
       // Tokenizer evaluation: fertility (subwords per word) per source
@@ -985,7 +946,7 @@ object SparkEntry {
         .orderBy("rank").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       graft.functions.Bpe.fertility(docs, "doc_id", "text", "source", ranks)
-        .transform(sortGuarded(_, "source"))
+        .transform(ordered(Selective, "source"))
     },
     "q122_bpe_encode" -> { (s, dir) =>
       // The tokenizer's ENCODE half (Sennrich 2016 §3): train 3 merges
@@ -1003,7 +964,7 @@ object SparkEntry {
       graft.functions.Bpe.encode(docs, "doc_id", "text", ranks)
         .select(col("doc_id"), posexplode(col("tokens")).as(Seq("pos", "token")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("token"))
-        .transform(sortGuarded(_, "doc_id", "pos"))
+        .transform(ordered(Selective, "doc_id", "pos"))
     },
     "q77_decontamination_report" -> { (s, dir) =>
       // Per-eval-doc contamination health: which benchmark items are
@@ -1011,7 +972,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       Dedup.decontaminationReport(docs, docs.filter(col("doc_id") < 50),
         "doc_id", "text", 3, 0.2)
-        .transform(sortSmallAgg(_, "doc_id"))
+        .transform(ordered(Grouped, "doc_id"))
     },
     "q76_leakage_safe_splits" -> { (s, dir) =>
       // Train/val/test assignment hashed on the near-dup CLUSTER label:
@@ -1022,7 +983,7 @@ object SparkEntry {
       graft.functions.Sampling.leakageSafeSplits(docs, "doc_id", pairs,
         Seq(0.8, 0.1, 0.1))
         .select(col("doc_id"), col("split"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q75_token_budget_sample" -> { (s, dir) =>
       // Pretraining domain mix by TOKEN target: keep ≈600 tokens per
@@ -1032,7 +993,7 @@ object SparkEntry {
         t(s, dir, "documents"), "doc_id", "text", "source", 600L)
         .select(col("doc_id"), col("source"),
           graft.functions.Text.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q78_pii_redact" -> { (s, dir) =>
       // PII scrub: the synthetic corpus carries no natural PII, so the
@@ -1045,17 +1006,17 @@ object SparkEntry {
       Pii.scan(injected, "doc_id", "text")
         .select(col("doc_id"), col("n_emails"), col("n_phones"), col("n_ips"),
           md5(col("clean_text")).as("clean_md5"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q79_corpus_health" -> { (s, dir) =>
       CorpusStats.healthReport(t(s, dir, "documents"), "text", "source")
-        .transform(sortSmallAgg(_, "source"))
+        .transform(ordered(Grouped, "source"))
     },
     "q81_token_histogram" -> { (s, dir) =>
       // The scale-safe stand-in for token-count percentiles: pure counters
       // under partial aggregation at any corpus size.
       CorpusStats.tokenHistogram(t(s, dir, "documents"), "text", "source", 16)
-        .transform(sortSmallAgg(_, "source", "bucket_lo"))
+        .transform(ordered(Grouped, "source", "bucket_lo"))
     },
     "q82_decontaminate_substring" -> { (s, dir) =>
       // Exact-substring decontamination (one shared 5-gram burns the doc
@@ -1071,21 +1032,21 @@ object SparkEntry {
       // Top-25 most document-frequent 3-grams: what maxDocFreq-style
       // boilerplate caps should be capping, as a human-readable report.
       Dedup.boilerplateNgrams(t(s, dir, "documents"), "doc_id", "text", 3, 25)
-        .transform(sortSmall(_, "doc_freq", "shingle"))
+        .transform(ordered(Small, "doc_freq", "shingle"))
     },
     "q84_unigram_logprob" -> { (s, dir) =>
       // Self-trained perplexity proxy: per-doc mean unigram log-prob, with
       // a 0.5% relative-share vocab cutoff so the rare-token OOV floor
       // path is exercised (the 'dup' token falls below it at every sf).
       Unigram.logProbScore(t(s, dir, "documents"), "doc_id", "text", 0.005)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q85_coverage_vocab" -> { (s, dir) =>
       // Tokenizer-vocab construction: smallest (freq desc, tok) prefix
       // covering 90% of corpus token mass. The ordered window runs over
       // the vocab-sized aggregate only.
       Unigram.coverageVocab(t(s, dir, "documents"), "doc_id", "text", 0.9)
-        .transform(sortSmall(_, "freq", "tok"))
+        .transform(ordered(Small, "freq", "tok"))
     },
     "q91_missing_compare" -> { (s, dir) =>
       // Pandas missing-value comparison parity (reference
@@ -1159,7 +1120,7 @@ object SparkEntry {
         .select(col("lang"), col("text"))
       Unigram.nbLangId(docs, "doc_id", "text", train, "lang",
         n = 3, minShare = 0.0005)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q165_unigram_train" -> { (s, dir) =>
       // SentencePiece-style Unigram-LM tokenizer training (the other
@@ -1171,7 +1132,7 @@ object SparkEntry {
       graft.functions.UnigramLm.train(t(s, dir, "documents"), "text",
         vocabSize = 400, maxPieceLen = 4, maxWordLen = 16,
         seedSize = 1024, iters = 2)
-        .transform(sortGuarded(_, "piece"))
+        .transform(ordered(Selective, "piece"))
     },
     "q166_unigram_encode" -> { (s, dir) =>
       // The encode half: Viterbi-tokenize every document under the
@@ -1185,7 +1146,7 @@ object SparkEntry {
         seedSize = 1024, iters = 2)
       graft.functions.UnigramLm.encode(docs, "doc_id", "text", model)
         .select(col("doc_id"), col("n_pieces"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q161_minhash_compact" -> { (s, dir) =>
       // q123's build+append lifecycle with a COMPACT between fold and
@@ -1214,7 +1175,7 @@ object SparkEntry {
       batch.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("n_matches"), lit(0L)).as("n_matches"),
           col("best_jac"), col("first_match"), col("n_matches").isNull.as("kept"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q162_bm25_compact" -> { (s, dir) =>
       // q137's incremental lexical index with a compact of the
@@ -1234,7 +1195,7 @@ object SparkEntry {
       lib.compact("lex__postings", targetRows = 20000L)
       graft.functions.Retrieval.bm25Indexed(
         lib, "lex", Seq("dup", "vector", "merge"), k = 20)
-        .transform(sortGuarded(_, "rank"))
+        .transform(ordered(Selective, "rank"))
     },
     "q163_pq_compact" -> { (s, dir) =>
       // q156's split build+append PQ index with the codes symbol
@@ -1252,7 +1213,7 @@ object SparkEntry {
       lib.compact("pq__codes", targetRows = 2000L)
       graft.functions.Pq.pqSearchIndexed(lib, "pq",
         emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 5)
-        .transform(sortSmallAgg(_, "query_id", "rank"))
+        .transform(ordered(Grouped, "query_id", "rank"))
     },
     "q164_ivfpq_compact" -> { (s, dir) =>
       // q159's IVF+PQ fold with the cell-sorted cellcodes symbol
@@ -1273,7 +1234,7 @@ object SparkEntry {
       graft.functions.Pq.ivfPqSearch(lib, "ivfpq",
         emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 5,
         nProbe = 8)
-        .transform(sortSmallAgg(_, "query_id", "rank"))
+        .transform(ordered(Grouped, "query_id", "rank"))
     },
     "q160_autolsh_quality_dedup" -> { (s, dir) =>
       // The quality keeper's auto-dispatched LSH route pinned ON: past
@@ -1293,7 +1254,7 @@ object SparkEntry {
       Dedup.dropNearDuplicatesByQualityImpl(docs, "doc_id", "text",
         "__score", 3, 0.5, 0L, portable = true, forceLsh = Some(true))
         .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q159_ivfpq_append" -> { (s, dir) =>
       // Incremental IVF+PQ: both routing layers trained on the first
@@ -1316,7 +1277,7 @@ object SparkEntry {
       graft.functions.Pq.ivfPqSearch(lib, "ivfpq",
         emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 5,
         nProbe = 8)
-        .transform(sortSmallAgg(_, "query_id", "rank"))
+        .transform(ordered(Grouped, "query_id", "rank"))
     },
     "q158_stream_retrieval_index" -> { (s, dir) =>
       // Live-ingest retrieval indexing: the corpus streams through a
@@ -1337,7 +1298,7 @@ object SparkEntry {
       q.awaitTermination(120000L)
       graft.functions.Retrieval.bm25Indexed(
         lib, "lex", Seq("dup", "vector", "merge"), k = 20)
-        .transform(sortGuarded(_, "rank"))
+        .transform(ordered(Selective, "rank"))
     },
     "q157_ivfpq_search" -> { (s, dir) =>
       // IVF+PQ (IVFADC): cell-routed probes over cell-sorted PQ codes,
@@ -1354,7 +1315,7 @@ object SparkEntry {
       graft.functions.Pq.ivfPqSearch(lib, "ivfpq",
         emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 5,
         nProbe = 8)
-        .transform(sortSmallAgg(_, "query_id", "rank"))
+        .transform(ordered(Grouped, "query_id", "rank"))
     },
     "q156_pq_index_append" -> { (s, dir) =>
       // Persisted PQ index, incremental: train the codebooks on the
@@ -1376,7 +1337,7 @@ object SparkEntry {
         "pq", "vec_id", "embedding", targetRows = 200L)
       graft.functions.Pq.pqSearchIndexed(lib, "pq",
         emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 5)
-        .transform(sortSmallAgg(_, "query_id", "rank"))
+        .transform(ordered(Grouped, "query_id", "rank"))
     },
     "q155_pq_adc_search" -> { (s, dir) =>
       // Product quantization + asymmetric-distance search, portable
@@ -1391,7 +1352,7 @@ object SparkEntry {
       graft.functions.Pq.pqTopK(emb, emb.filter(col("vec_id") < 3),
         "vec_id", "embedding", k = 5, m = 2, ksub = 4, iters = 2,
         portable = true)
-        .transform(sortSmallAgg(_, "query_id", "rank"))
+        .transform(ordered(Grouped, "query_id", "rank"))
     },
     "q154_positional_compact" -> { (s, dir) =>
       // The fragmentation-then-compact index lifecycle, gated end to
@@ -1415,7 +1376,7 @@ object SparkEntry {
       lib.compact("pos__positions", targetRows = 50000L)
       graft.functions.Retrieval.phraseSearch(
         lib, "pos", Seq("batch", "batch"))
-        .transform(sortSmallAgg(_, "doc_id"))
+        .transform(ordered(Grouped, "doc_id"))
     },
     "q153_mmr_indexed" -> { (s, dir) =>
       // MMR over the PERSISTED IVF index: candidates and their
@@ -1430,7 +1391,7 @@ object SparkEntry {
         nlist = 8, iters = 2, targetRows = 200L)
       Vectors.mmrTopKIndexed(lib, "mmridx", emb.filter(col("vec_id") < 3),
         "vec_id", "embedding", candidates = 6, k = 3, nProbe = 8)
-        .transform(sortSmallAgg(_, "query_id", "step"))
+        .transform(ordered(Grouped, "query_id", "step"))
     },
     "q152_positional_incremental" -> { (s, dir) =>
       // Incremental positional index: build from one third of the
@@ -1450,7 +1411,7 @@ object SparkEntry {
         targetRows = 5000L)
       graft.functions.Retrieval.phraseSearch(
         lib, "pos", Seq("batch", "batch"))
-        .transform(sortSmallAgg(_, "doc_id"))
+        .transform(ordered(Grouped, "doc_id"))
     },
     "q151_lsh_quality_dedup" -> { (s, dir) =>
       // The LSH-fed quality keeper — the 100 TB spelling of q146's
@@ -1466,7 +1427,7 @@ object SparkEntry {
         portable = true)
       Dedup.dropNearDuplicatesByQuality(docs, pairs, "doc_id", "__score")
         .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q150_phrase_search" -> { (s, dir) =>
       // Positional-index phrase search: build the term-sorted
@@ -1482,7 +1443,7 @@ object SparkEntry {
         lib, docs, "pos", "doc_id", "text", targetRows = 5000L)
       graft.functions.Retrieval.phraseSearch(
         lib, "pos", Seq("batch", "batch"))
-        .transform(sortSmallAgg(_, "doc_id"))
+        .transform(ordered(Grouped, "doc_id"))
     },
     "q149_best_snippet" -> { (s, dir) =>
       // Snippet selection: one rolling-count kernel pass finds each
@@ -1492,7 +1453,7 @@ object SparkEntry {
       graft.functions.Retrieval.bestSnippet(
         t(s, dir, "documents"), "doc_id", "text",
         Seq("spark", "stream", "hash"), window = 5)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q148_canonical_url" -> { (s, dir) =>
       // Crawl-dedup URL hygiene: five residue classes of messy URLs —
@@ -1521,7 +1482,7 @@ object SparkEntry {
             lit(".example.com/x"))).as("url"))
       messy.select(col("doc_id"), col("url"),
           graft.functions.Clean.canonicalUrl(col("url")).as("canon"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q147_link_hits" -> { (s, dir) =>
       // HITS over the q141 host graph: 2 iterations of the
@@ -1539,7 +1500,7 @@ object SparkEntry {
       graft.functions.Graph.hits(edges, "src", "dst", iters = 2)
         .select(col("node").as("host"), col("hub_mu"), col("auth_mu"),
           col("hub"), col("auth"))
-        .transform(sortSmallAgg(_, "host"))
+        .transform(ordered(Grouped, "host"))
     },
     "q146_quality_dedup" -> { (s, dir) =>
       // Quality-aware keeper: near-dup clusters keep their longest
@@ -1553,7 +1514,7 @@ object SparkEntry {
       Dedup.dropNearDuplicatesByQuality(docs, "doc_id", "text", "__score",
         3, 0.2)
         .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q145_zipf_fit" -> { (s, dir) =>
       // One-number corpus-health check: least-squares Zipf slope of
@@ -1614,7 +1575,7 @@ object SparkEntry {
           col("p.n_hangul").as("n_hangul"), col("p.n_cjk").as("n_cjk"),
           col("p.n_space").as("n_space"), col("p.n_other").as("n_other"),
           col("p.dominant").as("dominant"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q142_mmr_rerank" -> { (s, dir) =>
       // Diversified retrieval: exact top-6 cosine pool per query, then
@@ -1626,7 +1587,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       Vectors.mmrTopK(emb, emb.filter(col("vec_id") < 3), "vec_id",
         "embedding", candidates = 6, k = 3)
-        .transform(sortSmallAgg(_, "query_id", "step"))
+        .transform(ordered(Grouped, "query_id", "step"))
     },
     "q140_link_extract" -> { (s, dir) =>
       // Web-graph front door: one regexp_extract_all pass per doc
@@ -1643,7 +1604,7 @@ object SparkEntry {
             .as(Seq("pos", "url")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("url"),
           graft.functions.Clean.linkHost(col("url")).as("host"))
-        .transform(sortGuarded(_, "doc_id", "pos"))
+        .transform(ordered(Selective, "doc_id", "pos"))
     },
     "q141_link_pagerank" -> { (s, dir) =>
       // Host-graph PageRank over the q140 edges, 4 damped iterations
@@ -1664,7 +1625,7 @@ object SparkEntry {
       graft.functions.Graph.pageRank(edges, "src", "dst", iters = 4)
         .select(col("node").as("host"), col("out_links"), col("rank_mu"),
           col("rank"))
-        .transform(sortSmallAgg(_, "host"))
+        .transform(ordered(Grouped, "host"))
     },
     "q139_bpe_decode_roundtrip" -> { (s, dir) =>
       // The tokenizer's DECODE half closes the encode↔decode loop:
@@ -1683,7 +1644,7 @@ object SparkEntry {
       val ids = graft.functions.Bpe.encodeIds(docs, "doc_id", "text", ranks)
       graft.functions.Bpe.decodeIds(ids, "doc_id", "ids", ranks)
         .select(col("doc_id"), col("text").as("decoded"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q138_unicode_normalize" -> { (s, dir) =>
       // Unicode hygiene: docs get a suffix of DECOMPOSED characters
@@ -1700,7 +1661,7 @@ object SparkEntry {
           graft.functions.Text.normalizeUnicode(col("raw")).as("norm"))
         .select(col("doc_id"), col("norm"),
           length(col("norm")).cast("long").as("n_chars"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q136_html_extract" -> { (s, dir) =>
       // Web-crawl text extraction: even docs get wrapped in realistic
@@ -1719,7 +1680,7 @@ object SparkEntry {
         .select(col("doc_id"), col("clean"),
           graft.functions.Text.tokenCount(col("clean")).cast("long")
             .as("n_tokens"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q135_video_header_meta" -> { (s, dir) =>
       // Video member of the metadata triad: MP4 ftyp+moov(mvhd, trak
@@ -1840,7 +1801,7 @@ object SparkEntry {
       q.awaitTermination(120000L)
       s.table(sink)
         .select(col("doc_id"), col("domain").as("source"), col("n_tokens"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q66_agg_then_filter_project" -> { (s, dir) =>
       // Clause chaining PAST a barrier (reference: clauses compose
@@ -1856,7 +1817,7 @@ object SparkEntry {
         .project("v_avg", e("v_sum") / e("n"))(t(s, dir, "events"))
         .select(col("user_id"), round(col("v_sum"), 6).as("v_sum"), col("n"),
           round(col("v_avg"), 6).as("v_avg"))
-        .transform(sortSmallAgg(_, "user_id"))
+        .transform(ordered(Grouped, "user_id"))
     },
     "q67_project_then_groupby" -> { (s, dir) =>
       // The reference's other canonical chain: apply() a computed column,
@@ -1869,7 +1830,7 @@ object SparkEntry {
           Seq(("total", "o_totalprice", "sum"), ("n", "o_orderkey", "count")))(
           t(s, dir, "orders"))
         .select(col("band"), round(col("total"), 6).as("total"), col("n"))
-        .transform(sortSmallAgg(_, "band"))
+        .transform(ordered(Grouped, "band"))
     },
     "q65_arrow_roundtrip" -> { (s, dir) =>
       // Arrow OUTPUT format (reference arctic.py OutputFormat, the
@@ -1929,7 +1890,7 @@ object SparkEntry {
       // and order are exact-integer decisions on both engines.
       graft.functions.Retrieval.topKeywords(
         t(s, dir, "documents"), "doc_id", "text", k = 3)
-        .transform(sortGuarded(_, "doc_id", "rank"))
+        .transform(ordered(Selective, "doc_id", "rank"))
     },
     "q115_bm25" -> { (s, dir) =>
       // BM25 over a 3-term query with a wide idf spread ('dup' df=25 of
@@ -1939,7 +1900,7 @@ object SparkEntry {
       graft.functions.Retrieval.bm25(
         t(s, dir, "documents"), "doc_id", "text",
         queryTerms = Seq("dup", "vector", "merge"), k = 20)
-        .transform(sortGuarded(_, "rank"))
+        .transform(ordered(Selective, "rank"))
     },
     "q118_array_column_versioned" -> { (s, dir) =>
       // Dim1 array cells through the FULL versioned path (reference:
@@ -1962,7 +1923,7 @@ object SparkEntry {
         .select(col("vec_id"), size(col("embedding")).cast("long").as("veclen"),
           round(element_at(col("embedding"), 1).cast("double"), 6).as("e0"),
           col("n"))
-        .transform(sortGuarded(_, "vec_id"))
+        .transform(ordered(Selective, "vec_id"))
     },
     "q123_minhash_index_dedup" -> { (s, dir) =>
       // The PERSISTED dedup index path (dedup twin of q110/q117):
@@ -1994,7 +1955,7 @@ object SparkEntry {
       batch.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("n_matches"), lit(0L)).as("n_matches"),
           col("best_jac"), col("first_match"), col("n_matches").isNull.as("kept"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q137_bm25_incremental" -> { (s, dir) =>
       // Incremental lexical index: build from one third of the corpus,
@@ -2015,7 +1976,7 @@ object SparkEntry {
         targetRows = 2000L)
       graft.functions.Retrieval.bm25Indexed(
         lib, "lex", Seq("dup", "vector", "merge"), k = 20)
-        .transform(sortGuarded(_, "rank"))
+        .transform(ordered(Selective, "rank"))
     },
     "q117_bm25_indexed" -> { (s, dir) =>
       // The PERSISTED lexical index path (retrieval twin of q110):
@@ -2031,7 +1992,7 @@ object SparkEntry {
         targetRows = 4000L)
       graft.functions.Retrieval.bm25Indexed(
         lib, "lex", Seq("dup", "vector", "merge"), k = 20)
-        .transform(sortGuarded(_, "rank"))
+        .transform(ordered(Selective, "rank"))
     },
     "q125_semdedup" -> { (s, dir) =>
       // SemDeDup over the embeddings: portable kmeans (k=8) generates
@@ -2042,7 +2003,7 @@ object SparkEntry {
       graft.functions.Vectors.semDedupReport(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         k = 8, eps = 0.3, iters = 2, portable = true)
-        .transform(sortGuarded(_, "vec_id"))
+        .transform(ordered(Selective, "vec_id"))
     },
     "q114_kmeans_topics" -> { (s, dir) =>
       // Portable-mode Lloyd k-means (k=8, 2 assignment passes) over the
@@ -2056,7 +2017,7 @@ object SparkEntry {
       graft.functions.Vectors.kmeansAssign(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         k = 8, iters = 2, portable = true)
-        .transform(sortGuarded(_, "vec_id"))
+        .transform(ordered(Selective, "vec_id"))
     },
     "q169_cluster_balanced_sample" -> { (s, dir) =>
       // Cluster-balanced diversity subsample: q114's portable kmeans
@@ -2068,7 +2029,7 @@ object SparkEntry {
       graft.functions.Vectors.clusterBalancedSample(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         k = 8, perCluster = 10, iters = 2, portable = true)
-        .transform(sortGuarded(_, "cluster", "rank"))
+        .transform(ordered(Selective, "cluster", "rank"))
     },
     "q176_incremental_export" -> { (s, dir) =>
       // The incremental pipeline tail: a crawl batch appends to a
@@ -2085,7 +2046,7 @@ object SparkEntry {
         .filter(col("op") === "+").drop("op")
       graft.functions.Export.jsonlShards(
         fresh, "doc_id", "text", tmpRoot() + "/inc_export", shards = 5)
-        .transform(sortGuarded(_, "shard"))
+        .transform(ordered(Selective, "shard"))
     },
     "q174_wordpiece_train" -> { (s, dir) =>
       // WordPiece training: BPE's merge loop with the likelihood score
@@ -2111,7 +2072,7 @@ object SparkEntry {
               pmod(conv(substring(md5(p.cast("binary")), 1, 15), 16, 10)
                 .cast("long"), lit(1000000007L))),
             lit(0L), (a, x) => a + x).as("piece_sum"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q173_version_diff" -> { (s, dir) =>
       // Manifest-aware version diff: v0 = full write, v1 = update splice
@@ -2140,7 +2101,7 @@ object SparkEntry {
       graft.functions.Export.jsonlShards(
         t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text")),
         "doc_id", "text", tmpRoot() + "/jsonl_export", shards = 7)
-        .transform(sortGuarded(_, "shard"))
+        .transform(ordered(Selective, "shard"))
     },
     "q171_hybrid_rrf" -> { (s, dir) =>
       // Hybrid retrieval: RRF fusion of the q115 BM25 leg and a
@@ -2153,7 +2114,7 @@ object SparkEntry {
         t(s, dir, "embeddings"), "vec_id", "embedding",
         queryTerms = Seq("dup", "vector", "merge"), queryId = 3L,
         k = 15, legK = 50)
-        .transform(sortGuarded(_, "rank"))
+        .transform(ordered(Selective, "rank"))
     },
     "q177_hybrid_rrf_indexed" -> { (s, dir) =>
       // q171's RRF fusion over the PERSISTED stores: BM25 term-pruned
@@ -2175,7 +2136,7 @@ object SparkEntry {
         queries = emb.filter(col("vec_id") === 3L),
         embIdCol = "vec_id", vecCol = "embedding",
         nProbe = 8, k = 15, legK = 50)
-        .transform(sortGuarded(_, "rank"))
+        .transform(ordered(Selective, "rank"))
     },
     "q184_hybrid_batch" -> { (s, dir) =>
       // BATCHED hybrid serving over the q177 stores: three queries
@@ -2202,7 +2163,7 @@ object SparkEntry {
       graft.functions.Retrieval.hybridTopKIndexedBatch(
         lib, "hyblex", "hybvec", queries, "vec_id", "terms", "embedding",
         nProbe = 8, k = 15, legK = 50)
-        .transform(sortGuarded(_, "query_id", "rank"))
+        .transform(ordered(Selective, "query_id", "rank"))
     },
     "q178_bpe_train_batched" -> { (s, dir) =>
       // The BATCHED trainer through the full selection machinery
@@ -2235,7 +2196,7 @@ object SparkEntry {
       graft.functions.Bpe.encode(docs, "doc_id", "text", ranks)
         .select(col("doc_id"), posexplode(col("tokens")).as(Seq("pos", "token")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("token"))
-        .transform(sortGuarded(_, "doc_id", "pos"))
+        .transform(ordered(Selective, "doc_id", "pos"))
     },
     "q181_wordpiece_persisted_encode" -> { (s, dir) =>
       // WordPiece's artifact lifecycle: vocab -> saveVocab (versioned
@@ -2254,7 +2215,7 @@ object SparkEntry {
               pmod(conv(substring(md5(p.cast("binary")), 1, 15), 16, 10)
                 .cast("long"), lit(1000000007L))),
             lit(0L), (a, x) => a + x).as("piece_sum"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q182_query_stats" -> { (s, dir) =>
       // The query_stats observability surface (reference:
@@ -2340,7 +2301,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"))
         .select(lit(-1L).as("doc_id"), lit("__corrupt__").as("lang"),
           col("n").cast("string").as("source"))
-      valid.unionByName(quarantined).transform(sortGuarded(_, "doc_id"))
+      valid.unionByName(quarantined).transform(ordered(Selective, "doc_id"))
     },
     "q113_chunk_documents" -> { (s, dir) =>
       // RAG sliding-window chunking: 32-token windows, stride 24
@@ -2349,7 +2310,7 @@ object SparkEntry {
       graft.functions.Pack.chunkDocuments(
         t(s, dir, "documents"), "doc_id", "text",
         chunkTokens = 32, strideTokens = 24)
-        .transform(sortGuarded(_, "doc_id", "chunk_idx"))
+        .transform(ordered(Selective, "doc_id", "chunk_idx"))
     },
     "q112_drop_repeated_spans" -> { (s, dir) =>
       // Cross-doc exact-substring dedup (ExactSubstr analog): sliding
@@ -2364,7 +2325,7 @@ object SparkEntry {
         .join(cleaned, "doc_id")
         .select(col("doc_id"), col("text"),
           (col("__olen") - length(col("text"))).cast("long").as("removed_chars"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q111_gopher_rules" -> { (s, dir) =>
       // The Gopher document-quality rule family over a corpus with
@@ -2393,7 +2354,7 @@ object SparkEntry {
           maxMeanWordLen = 5.5, maxSymbolRatio = 0.05,
           maxBulletLineFrac = 0.5, maxEllipsisLineFrac = 0.3,
           minAlphaWordFrac = 0.9, minRequiredStops = 1))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q110_ann_ivf_persisted" -> { (s, dir) =>
       // The PERSISTED index path: train once, write (cell, id, vec)
@@ -2446,7 +2407,7 @@ object SparkEntry {
           Text.stopwordRatioOf(st).as("stop_ratio"),
           Text.meanTokenLengthOf(st).as("mean_len"),
           Text.qualityScoreOf(st).as("quality"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q36_tokens_fingerprint" -> { (s, dir) =>
       t(s, dir, "documents")
@@ -2529,7 +2490,7 @@ object SparkEntry {
                       graft_normalize(text) AS norm,
                       graft_fingerprint(text) AS fp
                FROM docs_v""")
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q53_multimodal_frames" -> { (s, dir) =>
       // r22: spread the split-starved scan before the per-frame md5
@@ -2542,7 +2503,7 @@ object SparkEntry {
       Multimodal.frameSample(docs, "doc_id", "bin", 64)
         .select(col("id").as("doc_id"), col("frame_idx"), col("offset"),
           col("len"), col("frame_md5"))
-        .transform(sortGuarded(_, "doc_id", "frame_idx"))
+        .transform(ordered(Selective, "doc_id", "frame_idx"))
     },
     // ---------------- beyond-parity relational ops --------------------
     "q39_join_broadcast_agg" -> { (s, dir) =>
@@ -2551,7 +2512,7 @@ object SparkEntry {
         .groupBy("p_brand")
         .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 6)
           .as("revenue"), count(lit(1)).as("n"))
-        .transform(sortSmallAgg(_, "p_brand"))
+        .transform(ordered(Grouped, "p_brand"))
     },
     "q40_join_multi" -> { (s, dir) =>
       t(s, dir, "orders")
@@ -2560,7 +2521,7 @@ object SparkEntry {
         .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name", "n_name")
         .agg(round(sum("o_totalprice"), 6).as("total"), count(lit(1)).as("n"))
-        .transform(sortSmallAgg(_, "r_name", "n_name"))
+        .transform(ordered(Grouped, "r_name", "n_name"))
     },
     "q41_asof_join" -> { (s, dir) =>
       val ev = t(s, dir, "events")
@@ -2568,7 +2529,7 @@ object SparkEntry {
       val signups = ev.filter(col("event_type") === "signup")
       AsOfJoin.asofJoin(purchases, signups, "ts", Seq("user_id"), Seq("value"))
         .select(col("event_id"), tsUs, col("user_id"), col("right_value"))
-        .transform(sortGuarded(_, "event_id"))
+        .transform(ordered(Selective, "event_id"))
     },
     "q107_asof_join_chunked" -> { (s, dir) =>
       // The skew-safe as-of formulation (per-(key, time-chunk) windows +
@@ -2582,7 +2543,7 @@ object SparkEntry {
       AsOfJoin.asofJoinChunked(purchases, signups, "ts", Seq("user_id"),
           Seq("value"), chunks = 16)
         .select(col("event_id"), tsUs, col("user_id"), col("right_value"))
-        .transform(sortGuarded(_, "event_id"))
+        .transform(ordered(Selective, "event_id"))
     },
     "q108_pack_offsets" -> { (s, dir) =>
       // Sequence packing (concat-and-chunk): the per-document placement
@@ -2591,7 +2552,7 @@ object SparkEntry {
       // scan) — never a one-task corpus sort.
       graft.functions.Pack.packOffsets(
         t(s, dir, "documents"), "doc_id", "text", 512L)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q109_temperature_mixture" -> { (s, dir) =>
       // mT5-style temperature mixing at alpha = 0.5: head domains
@@ -2602,7 +2563,7 @@ object SparkEntry {
         .select(col("doc_id"), col("source"),
           graft.functions.Text.tokenCount(col("text")).cast("long")
             .as("n_tokens"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q55_hash_sample_stratified" -> { (s, dir) =>
       // Deterministic engine-portable sampling: md5-prefix thresholds give
@@ -2610,13 +2571,13 @@ object SparkEntry {
       graft.functions.Sampling.hashSampleBy(t(s, dir, "events"), "event_id",
         "event_type", Map("click" -> 0.5, "purchase" -> 1.0, "view" -> 0.1))
         .select(col("event_id"), tsUs, col("event_type"), col("value"))
-        .transform(sortGuarded(_, "event_id"))
+        .transform(ordered(Selective, "event_id"))
     },
     "q54_session_window" -> { (s, dir) =>
       // Tail was a plain orderBy: its range sampling re-executes the
       // whole session aggregation once more for bounds (the AQE-off
-      // small session materializes no reusable stages). sortWindowed is
-      // the right tail: the post-exchange stage does the real work
+      // small session materializes no reusable stages). Windowed is
+      // the right shape: the post-exchange stage does the real work
       // (Sort + MergingSessions + final agg), so the small branch is
       // repartition(1) — the session stage stays parallel and only the
       // tiny (user_id, session_start)-unique result funnels — and past
@@ -2624,7 +2585,7 @@ object SparkEntry {
       graft.operators.Sessionize.sessions(t(s, dir, "events"), "ts", Seq("user_id"),
         "30 minutes", Seq(("n", "value", "count"), ("v_sum", "value", "sum")))
         .withColumn("v_sum", round(col("v_sum"), 6))
-        .transform(sortWindowed(_, "user_id", "session_start"))
+        .transform(ordered(Windowed, "user_id", "session_start"))
     },
     "q42_window_running" -> { (s, dir) =>
       val w = Window.partitionBy("user_id").orderBy("ts")
@@ -2633,16 +2594,16 @@ object SparkEntry {
           row_number().over(w).as("rn"),
           round(sum("value").over(w.rowsBetween(Window.unboundedPreceding, 0)), 6)
             .as("running"))
-        .transform(sortWindowed(_, "event_id"))
+        .transform(ordered(Windowed, "event_id"))
     },
     "q43_distinct" -> { (s, dir) =>
       // distinct IS a grouped output with an exchange upstream, so the
       // coalesce(1) tail applies (one less exchange + AQE round-trip
-      // than repartition(1) — the sortSmallAgg contract; r21 10-run
+      // than repartition(1) — the Grouped shape; r21 10-run
       // A/B at sf1: 0.295s → 0.27s steady-state median, one stage
       // fewer; flat at sf0.1 where scheduling noise dominates)
       t(s, dir, "events").select("user_id", "event_type").distinct()
-        .transform(sortSmallAgg(_, "user_id", "event_type"))
+        .transform(ordered(Grouped, "user_id", "event_type"))
     },
     "q44_topk_per_group" -> { (s, dir) =>
       // Bounded partial top-k (TopKByScore) instead of
@@ -2660,8 +2621,8 @@ object SparkEntry {
         .select(col("event_type"), col("col.id").as("event_id"),
           col("col.score").as("value"), (col("pos") + 1).cast("int").as("rn"))
         // grouped output behind the agg exchange: coalesce(1) tail (one
-        // less exchange than repartition(1), same sortSmallAgg contract)
-        .transform(sortSmallAgg(_, "event_type", "rn"))
+        // less exchange than repartition(1): the Grouped shape)
+        .transform(ordered(Grouped, "event_type", "rn"))
     },
     "q106_drop_bad_blocks" -> { (s, dir) =>
       // Block-level quality cleanup: 10-token blocks must have ≥3 tokens
@@ -2669,7 +2630,7 @@ object SparkEntry {
       // reassemble in order, stripped docs come back empty.
       graft.functions.Clean.dropBadBlocks(
         t(s, dir, "documents"), "doc_id", "text", 10, 3)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q105_curriculum_order" -> { (s, dir) =>
       // Curriculum schedule: quality-decile buckets descend, docs
@@ -2679,7 +2640,7 @@ object SparkEntry {
         floor(Text.qualityScoreOf(Text.textStats(col("text"))) * 10)
           .cast("long").as("qb"))
       graft.functions.Sampling.curriculumOrder(docs, "doc_id", "qb", 42L)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q104_shuffle_order" -> { (s, dir) =>
       // Deterministic corpus shuffle for training order: global 1-based
@@ -2687,7 +2648,7 @@ object SparkEntry {
       // range-partition + offset scheme — no one-task global sort;
       // PlanSpec pins the window shape).
       graft.functions.Sampling.shuffleOrder(t(s, dir, "documents"), "doc_id", 42L)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q103_ann_quantized" -> { (s, dir) =>
       // Asymmetric quantized search: float queries against the
@@ -2705,7 +2666,7 @@ object SparkEntry {
       // the domain-mixing similarity matrix. Counter-bounded shuffles;
       // micro-nat term quantization before the pair sum (order-free).
       CorpusStats.domainDivergence(t(s, dir, "documents"), "text", "source")
-        .transform(sortSmallAgg(_, "domain_a", "domain_b"))
+        .transform(ordered(Grouped, "domain_a", "domain_b"))
     },
     "q101_embed_quantize" -> { (s, dir) =>
       // Scalar int8 embedding quantization: dimension-bounded stats
@@ -2716,7 +2677,7 @@ object SparkEntry {
         t(s, dir, "embeddings"), "vec_id", "embedding")
         .select(col("vec_id"), posexplode(col("codes")))
         .select(col("vec_id"), col("pos").as("dim"), col("col").as("code"))
-        .transform(sortGuarded(_, "vec_id", "dim"))
+        .transform(ordered(Selective, "vec_id", "dim"))
     },
     "q100_agg_types" -> { (s, dir) =>
       // Reference aggregator TYPE rules (unsorted_aggregation.cpp):
@@ -2736,7 +2697,7 @@ object SparkEntry {
           col("max_b"),
           unix_micros(col("mean_ts").cast("timestamp")).as("mean_ts_us"),
           col("n"))
-        .transform(sortSmallAgg(_, "event_type"))
+        .transform(ordered(Grouped, "event_type"))
     },
     "q99_bpe_merges" -> { (s, dir) =>
       // Distributed BPE training (Sennrich 2016): 3 merges over the
@@ -2754,7 +2715,7 @@ object SparkEntry {
       // model entries micro-nat-quantized so per-doc sums are integer
       // (order-free, exact DuckDB replay).
       Unigram.bigramLogProb(t(s, dir, "documents"), "doc_id", "text", 0.001)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q132_contrastive_pairs" -> { (s, dir) =>
       // Contrastive training pairs over the portable kmeans candidate
@@ -2766,7 +2727,7 @@ object SparkEntry {
         t(s, dir, "embeddings"), "vec_id", "embedding",
         k = 8, posLo = 0.2, negHi = 0.0, perAnchor = 3, iters = 2,
         portable = true)
-        .transform(sortGuarded(_, "anchor", "label", "rank"))
+        .transform(ordered(Selective, "anchor", "label", "rank"))
     },
     "q131_ledger_drift" -> { (s, dir) =>
       // Versioned time-travel analytics: drift between ledger VERSION 1
@@ -2783,7 +2744,7 @@ object SparkEntry {
       val v0 = lib.listVersions("led__stats").min
       graft.functions.CorpusStats.ledgerDrift(
         lib, "led", Library.AsOf.Version(v0))
-        .transform(sortGuarded(_, "domain"))
+        .transform(ordered(Selective, "domain"))
     },
     "q130_pipeline_e2e" -> { (s, dir) =>
       // The whole pretraining-data pipeline as ONE composed plan — the
@@ -2811,7 +2772,7 @@ object SparkEntry {
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum(nTok.cast("long")).as("n_tokens"))
-        .transform(sortGuarded(_, "source"))
+        .transform(ordered(Selective, "source"))
     },
     "q129_corpus_ledger" -> { (s, dir) =>
       // Incremental corpus-health ledger: per-domain mergeable stats +
@@ -2827,7 +2788,7 @@ object SparkEntry {
       graft.functions.CorpusStats.mergeIntoLedger(
         lib, docs.filter(col("doc_id") % 2 === 1), "text", "source", "led")
       graft.functions.CorpusStats.readLedger(lib, "led")
-        .transform(sortGuarded(_, "domain"))
+        .transform(ordered(Selective, "domain"))
     },
     "q128_bloom_novelty" -> { (s, dir) =>
       // Persisted n-gram Bloom filter (2^16 bits, k=4, portable md5
@@ -2851,7 +2812,7 @@ object SparkEntry {
       nov.join(kept, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_shingles"), col("novel_frac"),
           coalesce(col("kept"), lit(false)).as("kept"))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q127_hll_sketch" -> { (s, dir) =>
       // Persisted HyperLogLog distinct-3-shingle sketch (p=9, portable
@@ -2886,7 +2847,7 @@ object SparkEntry {
       Unigram.nbQualityScore(docs, "doc_id", "text", pos, neg)
         .withColumn("kept", Unigram.paretoAdmitCond(
           col("doc_id"), col("llr_mean"), alpha = 2.0, seed = 7L))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q124_perplexity_buckets" -> { (s, dir) =>
       // CCNet §4.4: LM trained on a TRUSTED slice (sources 0–3 standing
@@ -2899,7 +2860,7 @@ object SparkEntry {
       val ref = docs.filter(
         col("source").isin("src0", "src1", "src2", "src3"))
       Unigram.perplexityBuckets(docs, "doc_id", "text", "lang", ref)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q97_qb_compose" -> { (s, dir) =>
       // Pipelines are VALUES that compose (reference then/prepend,
@@ -2916,7 +2877,7 @@ object SparkEntry {
         Seq(("v_sum", "value", "sum"), ("n", "event_id", "count")))
       rollup.prepend(window.optimiseForMemory())(t(s, dir, "events"))
         .select(col("event_type"), round(col("v_sum"), 6).as("v_sum"), col("n"))
-        .transform(sortSmallAgg(_, "event_type"))
+        .transform(ordered(Grouped, "event_type"))
     },
     "q92_clean_corpus" -> { (s, dir) =>
       // Composite C4/Gopher-style cleanup over the PII-injected corpus
@@ -2938,7 +2899,7 @@ object SparkEntry {
           minTokens = 20, maxTokens = 95, minQuality = 0.55,
           maxRepetition = 0.01, repetitionN = 3, lang = Some("en"),
           maxPiiHits = 1))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q168_clean_trained_lang" -> { (s, dir) =>
       // q92's composite cleanup with the language rule upgraded from
@@ -2958,7 +2919,7 @@ object SparkEntry {
           maxRepetition = 0.01, repetitionN = 3, lang = Some("en"),
           maxPiiHits = 1),
         Unigram.nbLangIdColumn(m))
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q93_dsir_weights" -> { (s, dir) =>
       // DSIR importance weights toward the src0 "target domain": the
@@ -2968,14 +2929,14 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       graft.functions.Importance.dsirWeights(
         docs, docs.filter(col("source") === "src0"), "doc_id", "text", 256)
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q94_token_entropy" -> { (s, dir) =>
       // Per-doc bag-of-tokens Shannon entropy + type-token ratio: the
       // lexical-diversity quality signals. Micro-nat term quantization
       // before the doc sum keeps partial-agg order out of the result.
       Unigram.tokenEntropy(t(s, dir, "documents"), "doc_id", "text")
-        .transform(sortGuarded(_, "doc_id"))
+        .transform(ordered(Selective, "doc_id"))
     },
     "q95_domain_cap" -> { (s, dir) =>
       // Domain-mixing cap: top-10 docs per source by fused quality
@@ -2988,7 +2949,7 @@ object SparkEntry {
       graft.functions.Sampling.capPerDomain(
         scored, "doc_id", "source", col("quality"), 10)
         .withColumnRenamed("score", "quality")
-        .transform(sortSmall(_, "source", "rank"))
+        .transform(ordered(Small, "source", "rank"))
     },
     "q96_json_props" -> { (s, dir) =>
       // Semi-structured columns at scale: schema-on-read over the JSON
@@ -3009,7 +2970,7 @@ object SparkEntry {
           col("max_k"),
           round(col("sum_k").cast("double") / col("n").cast("double"), 6)
             .as("avg_k"))
-        .transform(sortSmallAgg(_, "event_type"))
+        .transform(ordered(Grouped, "event_type"))
     })
 
   // =================================================================

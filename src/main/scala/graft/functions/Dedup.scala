@@ -818,7 +818,7 @@ object Dedup {
     // more blocks than the tile gate intends: correct, not dense-optimal.
     val fallback = forceDense match {
       case Some(dense) => !dense
-      case None => pastDenseGate(df)
+      case None => pastDocGate(df, DenseMaxStatsBytes, DenseMaxDocs)
     }
     if (fallback) {
       val prefix = forcePrefix.getOrElse(threshold >= PrefixPathMinThreshold)
@@ -885,26 +885,24 @@ object Dedup {
     */
   private val DenseMaxStatsBytes = 1L << 30
 
-  /** The shared corpus-size gate of [[ngramJaccardPairsImpl]] AND the
-    * keeper auto-dispatch ([[dropNearDuplicates]] /
-    * [[dropNearDuplicatesByQuality]]): true when the corpus is past the
-    * dense-tile envelope (~520k docs / 1 GiB). Zero-job first — an
-    * optimizer size estimate above [[DenseMaxStatsBytes]] answers without
-    * any job (a 100 TB input never pays a dispatch count); an estimate
-    * under DenseMaxDocs × 8 bytes cannot hold more rows than the doc cap
-    * (8 B/row is below any real row with an id plus non-empty text), so
-    * tiny corpora skip the count too. Only the middle band runs one
-    * column-pruned count aggregate (partial counts from parquet page
-    * metadata). Over-counting is the safe direction everywhere: a
-    * past-gate answer routes to the scale path (incidence fallback /
-    * LSH), which is correct on any corpus, merely not dense-optimal on a
-    * small one.
+  /** The corpus-size gate of [[ngramJaccardPairsImpl]]'s dense path and
+    * of the keeper auto-dispatch ([[dropNearDuplicates]] /
+    * [[dropNearDuplicatesByQuality]]): true when `df` holds more than
+    * `maxDocs` rows. Zero-job first — an optimizer size estimate above
+    * `maxStatsBytes` answers without any job (a 100 TB input never pays a
+    * dispatch count); an estimate under `maxDocs` × 8 bytes cannot hold
+    * more rows than that (8 B/row is below any real row with an id plus
+    * non-empty text), so tiny corpora skip the count too. Only the middle
+    * band runs one column-pruned count aggregate (partial counts from
+    * parquet page metadata). Over-counting is the safe direction
+    * everywhere: a past-gate answer routes to the scale path (incidence
+    * fallback / LSH), which is correct on any corpus, merely not
+    * dense-optimal on a small one.
     */
-  private[graft] def pastDenseGate(df: DataFrame): Boolean = {
+  private[graft] def pastDocGate(df: DataFrame, maxStatsBytes: Long, maxDocs: Long): Boolean = {
     val statsBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    statsBytes > DenseMaxStatsBytes ||
-      (statsBytes > DenseMaxDocs * 8L &&
-        df.select(count(lit(1))).head.getLong(0) > DenseMaxDocs)
+    statsBytes > maxStatsBytes ||
+      (statsBytes > maxDocs * 8L && df.select(count(lit(1))).head.getLong(0) > maxDocs)
   }
 
   /** The blocked dense-tile strategy (see ngramJaccardPairs doc). */
@@ -1405,7 +1403,7 @@ object Dedup {
     * connected components → keep the canonical (min-id) doc per cluster.
     * Returns the surviving rows of df.
     *
-    * Pair tier AUTO-DISPATCH (the [[pastKeeperLshGate]] bar, ~64k docs
+    * Pair tier AUTO-DISPATCH (the [[KeeperLshMaxDocs]] bar, ~64k docs
     * / 256 MiB): below it, exact inverted-index Jaccard pairs; past it,
     * [[lshJaccardPairs]] — MinHash-LSH candidates exact-rescored —
     * because the exact tier's incidence cost is Σ|bucket|², quadratic
@@ -1474,7 +1472,7 @@ object Dedup {
       maxDocFreq: Long,
       portable: Boolean,
       forceLsh: Option[Boolean]): DataFrame =
-    if (forceLsh.getOrElse(pastKeeperLshGate(raw))) {
+    if (forceLsh.getOrElse(pastDocGate(raw, KeeperLshMaxStatsBytes, KeeperLshMaxDocs))) {
       if (maxDocFreq > 0)
         log.warn(s"near-dup pair tier routed to LSH: maxDocFreq=$maxDocFreq " +
           "does not apply on this route (the LSH maxBucket cap bounds " +
@@ -1486,26 +1484,19 @@ object Dedup {
       ngramJaccardPairs(deduped, idCol, textCol, shingleLen, threshold,
         maxDocFreq)
 
-  /** The keeper auto-dispatch bar: past it, the pair tier is LSH. Same
-    * zero-job-first shape as [[pastDenseGate]] but a LOWER bar: both
-    * exact pair strategies are quadratic-ish at the keepers' typical low
-    * thresholds (dense tiles scan O(n²/2) cells; the incidence aggregate
-    * scales with Σ|bucket|²), and the measured exact-vs-LSH crossover is
-    * ~50k docs (sf1: exact keeper 5.8 s vs LSH keeper 5.2 s; by 250k
-    * docs exact is 85.9 s / 9.2 GB vs LSH ~11 s — SURVEY §16/§17 rows).
-    * The bar sits at the next power of two above the crossover. The
-    * stats shortcut (256 MiB ≈ tens-of-GB of text at parquet's ~50×
-    * text compression) keeps a big corpus from ever paying the count.
+  /** The keeper auto-dispatch bar of [[pastDocGate]]: past it, the pair
+    * tier is LSH. A LOWER bar than the dense gate's: both exact pair
+    * strategies are quadratic-ish at the keepers' typical low thresholds
+    * (dense tiles scan O(n²/2) cells; the incidence aggregate scales
+    * with Σ|bucket|²), and the measured exact-vs-LSH crossover is ~50k
+    * docs (sf1: exact keeper 5.8 s vs LSH keeper 5.2 s; by 250k docs
+    * exact is 85.9 s / 9.2 GB vs LSH ~11 s — SURVEY §16/§17 rows). The
+    * bar sits at the next power of two above the crossover. The stats
+    * shortcut (256 MiB ≈ tens-of-GB of text at parquet's ~50× text
+    * compression) keeps a big corpus from ever paying the count.
     */
-  private[graft] def pastKeeperLshGate(df: DataFrame): Boolean = {
-    val statsBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    statsBytes > KeeperLshMaxStatsBytes ||
-      (statsBytes > KeeperLshMaxDocs * 8L &&
-        df.select(count(lit(1))).head.getLong(0) > KeeperLshMaxDocs)
-  }
-
-  private val KeeperLshMaxDocs = 65536L
-  private val KeeperLshMaxStatsBytes = 1L << 28
+  private[graft] val KeeperLshMaxDocs = 65536L
+  private[graft] val KeeperLshMaxStatsBytes = 1L << 28
 
   /** Quality-aware near-duplicate removal: the cluster discovery of
     * [[dropNearDuplicates]], but every duplicate group keeps its BEST
@@ -1537,7 +1528,7 @@ object Dedup {
       shingleLen, threshold, maxDocFreq, portable = false, forceLsh = lsh)
 
   /** Test/gate hook — see [[dropNearDuplicatesImpl]]. The pair tier
-    * auto-dispatches at the [[pastKeeperLshGate]] bar exactly like
+    * auto-dispatches at the [[KeeperLshMaxDocs]] bar exactly like
     * [[dropNearDuplicates]]; the exact-fingerprint keeper tier runs
     * first on both routes (so a >maxBucket identical-text group, whose
     * LSH buckets the cap would drop, still collapses to its best copy).

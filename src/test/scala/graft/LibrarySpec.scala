@@ -378,6 +378,30 @@ class LibrarySpec extends SparkSuite {
     }
   }
 
+  test("deleteRange on a soft-deleted symbol refuses without committing") {
+    val lib = newLib()
+    lib.write("n", mk(0, 100), Some("ts2"), targetRows = 50)
+    lib.write("k", keyed(0, 100), Some("key"), targetRows = 50)
+    for (sym <- Seq("n", "k")) lib.delete(sym)
+    val before = Seq("n", "k").map(lib.listVersions)
+    intercept[IllegalArgumentException](lib.deleteRange("n", 0L, 50L))
+    intercept[IllegalArgumentException](lib.deleteRange("k", "k000000", "k000050"))
+    assert(Seq("n", "k").map(lib.listVersions) == before)
+  }
+
+  test("an index equality read returns a present key's row and nothing for an absent one") {
+    // even keys only: an odd key inside a file's [min, max] is absent, so
+    // only the row-level filter can drop it (the index has no bloom filter)
+    val lib = newLib()
+    lib.write("p", mk(0, 1000).filter(col("ts2") % 2 === 0), Some("ts2"), targetRows = 100)
+    val f = lib.resolveVersion("p").files(2)
+    val present = f.minIdx.get + 2
+    assert(present + 1 < f.maxIdx.get)
+    assert(lib.read("p").filter(col("ts2") === present + 1).count() == 0)
+    assert(lib.read("p").filter(col("ts2") === present).collect().toSeq ==
+      Seq(org.apache.spark.sql.Row(present, present * 2)))
+  }
+
   test("a range read of an unindexed symbol refuses instead of returning every row") {
     val lib = newLib()
     lib.write("u", mk(0, 100), None, targetRows = 50)

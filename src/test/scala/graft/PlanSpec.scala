@@ -302,13 +302,14 @@ class PlanSpec extends SparkSuite {
 
   test("sortGuarded tails stay scale-honest: orderBy past the stats threshold") {
     // below the guard: cheap single-partition tail (no range sampling pass)
-    val small = SparkEntry.sortGuarded(spark.range(1000).toDF("event_id"), "event_id")
+    val small =
+      SparkEntry.ordered(SparkEntry.Selective, "event_id")(spark.range(1000).toDF("event_id"))
     assert(small.rdd.getNumPartitions == 1)
     // above it (range stats = 8 bytes/row, no job needed): a true
     // range-partitioned orderBy — an unaggregated 100×-scale scan must
     // never funnel through one task just for output determinism
-    val big = SparkEntry.sortGuarded(
-      spark.range(2L * SparkEntry.SmallScanBytes / 8).toDF("event_id"), "event_id")
+    val big = SparkEntry.ordered(SparkEntry.Selective, "event_id")(
+      spark.range(2L * SparkEntry.SmallScanBytes / 8).toDF("event_id"))
     assert(big.queryExecution.optimizedPlan.collect {
       case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s
     }.nonEmpty, big.queryExecution.optimizedPlan.toString)
@@ -324,15 +325,15 @@ class PlanSpec extends SparkSuite {
     }.isEmpty, q06.queryExecution.executedPlan.toString.take(1000))
     // beyond it: a full-width output must range-partition, never funnel
     // the whole scan through one task (measured 6.1s vs 0.96s on 6M rows)
-    val big = SparkEntry.sortWide(
-      spark.range(4L * SparkEntry.WideSortBytes / 8).toDF("event_id"), "event_id")
+    val big = SparkEntry.ordered(SparkEntry.Wide, "event_id")(
+      spark.range(4L * SparkEntry.WideSortBytes / 8).toDF("event_id"))
     assert(big.queryExecution.optimizedPlan.collect {
       case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s
     }.nonEmpty, big.queryExecution.optimizedPlan.toString)
   }
 
   test("grouped-result tails coalesce, adding no exchange (q09, q39)") {
-    // sortSmallAgg: the deterministic-order tail on a post-shuffle result
+    // Grouped: the deterministic-order tail on a post-shuffle result
     // must merge the final-agg partitions via Coalesce, not pay a second
     // shuffle (repartition(1)) — one exchange for q09's groupBy, and for
     // q39 one shuffle exchange (agg) + one broadcast exchange (dim).
@@ -364,17 +365,49 @@ class PlanSpec extends SparkSuite {
         .groupBy("k").agg(count("*").as("n"))
       assert(big.queryExecution.optimizedPlan.stats.sizeInBytes >
         SparkEntry.SmallScanBytes)
-      val bigPlan = SparkEntry.sortSmallAgg(big, "k").queryExecution
+      val bigPlan = SparkEntry.ordered(SparkEntry.Grouped, "k")(big).queryExecution
         .executedPlan.toString
       assert(!bigPlan.contains("Coalesce 1"), bigPlan.take(2000))
       assert(bigPlan.contains("rangepartitioning"), bigPlan.take(2000))
       val small = spark.range(1000)
         .select((col("id") % 10).as("k"))
         .groupBy("k").agg(count("*").as("n"))
-      val smallPlan = SparkEntry.sortSmallAgg(small, "k").queryExecution
+      val smallPlan = SparkEntry.ordered(SparkEntry.Grouped, "k")(small).queryExecution
         .executedPlan.toString
       assert(smallPlan.contains("Coalesce 1"), smallPlan.take(2000))
       assert(!smallPlan.contains("rangepartitioning"), smallPlan.take(2000))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("Windowed tails: the window stays parallel under a one-partition funnel, ranged orderBy big") {
+    // below the bound: repartition(1) funnels only the window's OUTPUT —
+    // a Coalesce 1 would pull the window stage itself into one task
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      import org.apache.spark.sql.execution.{CoalesceExec, window}
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("id") % 10).orderBy("id")
+      def windowed(n: Long) =
+        spark.range(n).select(col("id"), row_number().over(w).as("rn"))
+      val small = SparkEntry.ordered(SparkEntry.Windowed, "id")(windowed(1000))
+        .queryExecution.executedPlan
+      val funnels = small.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+      }
+      assert(funnels.size == 1, small.toString)
+      assert(funnels.head.collect { case x: window.WindowExec => x }.size == 1, small.toString)
+      assert(funnels.head.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }.size == 1, small.toString)
+      assert(small.collect { case c: CoalesceExec => c }.isEmpty, small.toString)
+      // past the bound (range stats = 8 bytes/row, no job): a global sort
+      val big = SparkEntry.ordered(SparkEntry.Windowed, "id")(
+        windowed(4L * SparkEntry.WideSortBytes / 8))
+      assert(big.queryExecution.optimizedPlan.collect {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s
+      }.nonEmpty, big.queryExecution.optimizedPlan.toString)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -668,7 +701,9 @@ class PlanSpec extends SparkSuite {
       concat_ws(" ", lit("alpha"), col("id").cast("string"),
         lit("beta gamma delta epsilon")).as("text"))
     val big = mk(70000L)
-    assert(graft.functions.Dedup.pastKeeperLshGate(big),
+    def pastKeeperBar(df: org.apache.spark.sql.DataFrame) = graft.functions.Dedup.pastDocGate(
+      df, graft.functions.Dedup.KeeperLshMaxStatsBytes, graft.functions.Dedup.KeeperLshMaxDocs)
+    assert(pastKeeperBar(big),
       "70k-doc corpus must be past the keeper LSH bar")
     val lshPlan = graft.functions.Dedup.nearDupPairs(big, big, "id", "text",
       3, 0.8, 0L, portable = false, forceLsh = None)
@@ -678,7 +713,7 @@ class PlanSpec extends SparkSuite {
     assert(!lshPlan.contains("BucketPairs") && !lshPlan.contains("__ss"),
       "LSH route must contain no incidence aggregate / prefix machinery")
     val small = mk(50L)
-    assert(!graft.functions.Dedup.pastKeeperLshGate(small))
+    assert(!pastKeeperBar(small))
     val exactPlan = graft.functions.Dedup.nearDupPairs(small, small, "id",
       "text", 3, 0.8, 0L, portable = false, forceLsh = None)
       .queryExecution.optimizedPlan.toString
