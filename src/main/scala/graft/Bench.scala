@@ -110,7 +110,7 @@ object Bench {
     */
   private def oracleTimes(
       sfDir: String, passes: Int,
-      exclude: Set[String] = Set.empty): Map[String, Double] = {
+      exclude: Set[String]): Map[String, Double] = {
     def jq(s: String): String = JsonUtil.quote(s)
     try {
       val sqls = SparkEntry.oracleSql

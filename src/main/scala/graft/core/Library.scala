@@ -96,8 +96,8 @@ final class Library(
   }
 
   /** Atomic manifest commit (compare-and-set on version existence).
-    * Returns false if the version already exists (lost race) — caller
-    * bumps (pure writes) or aborts (derived commits). The per-backend
+    * Returns false if the version already exists (lost race); its one
+    * caller, [[commitVersion]], applies the lost-race rule. The per-backend
     * atomic no-overwrite primitive lives in [[CommitCas]] (link on local
     * FS, rename on HDFS, conditional PUT on S3A) and is race-tested
     * directly by the six-writer specs.
@@ -240,6 +240,45 @@ final class Library(
     */
   private def nextVersion(symbol: String, base: Int): Int =
     math.max(base, highWater(symbol)) + 1
+
+  /** The one version commit: every new version of a symbol lands here.
+    * `build(first)` runs once, with the first version number tried — a
+    * caller that writes data before committing does it there and names
+    * its dir after `first` (manifests reference files by full relative
+    * path, so the name need not match the number that wins). It returns
+    * the per-attempt builder, which gets the latest version number the
+    * attempt builds on. `version` and `createdAtMs` are stamped here on
+    * every attempt, so builders leave them at any value.
+    *
+    * What a lost CAS does depends on whether the caller pins a base:
+    *  - pinned (`base` = the version its files were computed against:
+    *    append, update, deleteRange, merge, compact, an appending
+    *    finalizeStaged): one attempt at the number after the base, and a
+    *    loss throws. Re-committing on top of the winner would publish the
+    *    stale base's file list and silently drop the winner's rows; the
+    *    caller re-reads and re-runs the operation. The builder gets None.
+    *  - no base (write, a writing finalizeStaged, writeMetadata,
+    *    restoreVersion, delete): a loss re-reads the latest version and
+    *    builds the next manifest on top of it, so no commit is lost. Pure
+    *    writes ignore the latest version (last writer wins, the
+    *    reference's model); the others rebuild from its manifest.
+    */
+  private def commitVersion(symbol: String, op: String, base: Option[Int])(
+      build: Int => Option[Int] => VersionManifest): Int = {
+    def latest() = if (base.isDefined) None else latestVersion(symbol)
+    var top = latest()
+    var v = nextVersion(symbol, base.orElse(top).getOrElse(-1))
+    val next = build(v)
+    while (!commitManifest(symbol,
+        next(top).copy(version = v, createdAtMs = System.currentTimeMillis()))) {
+      if (base.isDefined)
+        throw new java.util.ConcurrentModificationException(
+          s"$symbol: version $v was committed concurrently; re-run $op")
+      top = latest()
+      v = nextVersion(symbol, top.getOrElse(-1))
+    }
+    v
+  }
 
   /** Concurrent: the batch APIs submit per-symbol jobs from a driver
     * thread pool, so the cache must tolerate concurrent readers/writers.
@@ -585,8 +624,7 @@ final class Library(
       indexCol: Option[String] = None,
       targetRows: Long = options.rowsPerSegment,
       metadata: Map[String, String] = Map.empty): Int =
-    commitNew(symbol, df, indexCol, targetRows, priorFiles = Vector.empty, metadata,
-      derived = false)
+    commitNew(symbol, df, indexCol, targetRows, priorFiles = Vector.empty, metadata)
 
   /** `append` — new version = prior files + new files; new index values
     * must start at/after the prior max (reference: library.py:1361).
@@ -629,7 +667,7 @@ final class Library(
     }
     commitNew(symbol, data, m.indexCol, targetRows, priorFiles = m.files,
       m.metadata ++ extraMetadata,
-      priorDirSchemas = m.dirSchemas, derived = true, baseVersion = Some(m.version))
+      priorDirSchemas = m.dirSchemas, baseVersion = Some(m.version))
   }
 
   /** Union of two schemas with common-type promotion on shared columns —
@@ -667,14 +705,10 @@ final class Library(
     }: _*)
   }
 
-  /** `baseVersion` (required when derived): the manifest version the new
-    * files were computed AGAINST. A derived commit attempts exactly
-    * baseVersion+1 — re-resolving latestVersion at commit time would leave
-    * a window (spanning the validate/schema-merge Spark jobs, i.e.
-    * seconds) where a concurrent winner's version is adopted as "latest"
-    * and the stale base's file list silently drops the winner's rows. The
-    * CAS then catches ANY commit that landed after the base was read
-    * (same rule commitRewrite applies with m.version+1).
+  /** Write df as a new version after `priorFiles`. `baseVersion`: the
+    * manifest version those files come from, pinned for [[commitVersion]]
+    * (an append onto an empty base is still pinned); `op` names the
+    * operation a lost race re-runs.
     */
   private[graft] def commitNew( // private[graft]: the stale-base CAS regression spec drives it directly
       symbol: String,
@@ -684,42 +718,23 @@ final class Library(
       priorFiles: Vector[FileEntry],
       metadata: Map[String, String],
       priorDirSchemas: Map[String, String] = Map.empty,
-      derived: Boolean = false,
-      baseVersion: Option[Int] = None): Int = {
-    require(!derived || baseVersion.isDefined,
-      "derived commits must pin the base manifest version")
-    var v = nextVersion(symbol,
-      baseVersion.getOrElse(latestVersion(symbol).getOrElse(-1)))
-    val dir = dataDir(symbol, v)
-    val all = priorFiles ++ renumber(writeData(df, dir, indexCol, targetRows), priorFiles)
-    val m = VersionManifest(
-      version = v,
-      indexCol = indexCol,
-      sorted = indexCol.isDefined,
-      files = all,
-      rowCount = all.map(_.rows).sum,
-      createdAtMs = System.currentTimeMillis(),
-      schemaDdl = df.schema.toDDL,
-      metadata = metadata,
-      dirSchemas = priorDirSchemas + (dir.getName -> df.schema.toDDL))
-    var committed = commitManifest(symbol, m)
-    while (!committed) {
-      // Lost a commit race. A pure write's manifest references ONLY its own
-      // new files, so bumping the version and re-committing is sound
-      // (last-writer-wins, the reference's model). A DERIVED manifest
-      // (append — keyed on the operation, not on whether the base happened
-      // to have files: an append onto an empty base is still derived) must
-      // NOT silently re-commit — it would resurrect the stale base and
-      // orphan whatever the winner committed. Fail loudly; the caller
-      // re-reads and retries the operation.
-      if (derived)
-        throw new java.util.ConcurrentModificationException(
-          s"$symbol: version $v was committed concurrently; re-run the append")
-      v += 1
-      committed = commitManifest(symbol, m.copy(version = v))
+      baseVersion: Option[Int] = None,
+      op: String = "append"): Int =
+    commitVersion(symbol, op, baseVersion) { first =>
+      val dir = dataDir(symbol, first)
+      val all = priorFiles ++ renumber(writeData(df, dir, indexCol, targetRows), priorFiles)
+      val m = VersionManifest(
+        version = first,
+        indexCol = indexCol,
+        sorted = indexCol.isDefined,
+        files = all,
+        rowCount = all.map(_.rows).sum,
+        createdAtMs = 0L,
+        schemaDdl = df.schema.toDDL,
+        metadata = metadata,
+        dirSchemas = priorDirSchemas + (dir.getName -> df.schema.toDDL))
+      _ => m
     }
-    v
-  }
 
   /** `update` — splice df into the index range it covers: files wholly
     * outside [lo, hi] are reused untouched; intersecting files are read,
@@ -758,9 +773,9 @@ final class Library(
         requireSameIdxFamily(idx, t, storedT)
         explicitRange(storedT, dateRange, keyRange) match {
           case Some(r) =>
-            spliceRange(symbol, m, r, Some(df.filter(r.residual(idx, t))), targetRows)
+            spliceRange(symbol, m, r, Some(df.filter(r.residual(idx, t))), targetRows, "update")
           case None =>
-            spliceRange(symbol, m, keyRangeFor(m, df, idx), Some(df), targetRows)
+            spliceRange(symbol, m, keyRangeFor(m, df, idx), Some(df), targetRows, "update")
         }
       case None =>
         if (!upsert)
@@ -785,7 +800,7 @@ final class Library(
     val it = idxTypeOf(m)
     requireRangeKind(symbol, it, Some((lo, hi)), None)
     val (l, h) = Ts.nsRangeToIdxUnit(lo, hi, it.get)
-    spliceRange(symbol, m, new LongKeys.Range(l, h), None, targetRows)
+    spliceRange(symbol, m, new LongKeys.Range(l, h), None, targetRows, "deleteRange")
   }
 
   /** delete_data_in_range over a string-keyed index (inclusive bounds,
@@ -794,7 +809,7 @@ final class Library(
   def deleteRange(symbol: String, lo: String, hi: String, targetRows: Long): Int = {
     val m = resolveVersion(symbol)
     requireRangeKind(symbol, idxTypeOf(m), None, Some((lo, hi)))
-    spliceRange(symbol, m, new StrKeys.Range(lo, hi), None, targetRows)
+    spliceRange(symbol, m, new StrKeys.Range(lo, hi), None, targetRows, "deleteRange")
   }
   def deleteRange(symbol: String, lo: String, hi: String): Int =
     deleteRange(symbol, lo, hi, DefaultTargetRows)
@@ -804,7 +819,8 @@ final class Library(
       m: VersionManifest,
       range: KeyRange,
       replacement: Option[DataFrame],
-      targetRows: Long): Int = {
+      targetRows: Long,
+      op: String): Int = {
     val idx = m.indexCol.get
     val (touched, untouched) = m.files.partition(range.intersectsStrict)
     val keptRows: Option[DataFrame] =
@@ -820,12 +836,13 @@ final class Library(
       case (None, Some(r)) => Some(align(r, schemaOf(m.schemaDdl)))
       case (None, None) => None
     }
-    commitRewrite(symbol, m, combined, untouched, range, targetRows)
+    commitRewrite(symbol, m, combined, untouched, range, targetRows, op)
   }
 
   /** Shared tail of every range rewrite (update/deleteRange/merge): write
     * the combined frame as the new version's delta, keep global index
-    * order untouched-before ++ rewritten ++ untouched-after, commit.
+    * order untouched-before ++ rewritten ++ untouched-after, commit
+    * pinned to base m.
     */
   private def commitRewrite(
       symbol: String,
@@ -833,28 +850,22 @@ final class Library(
       combined: Option[DataFrame],
       untouched: Vector[FileEntry],
       range: KeyRange,
-      targetRows: Long): Int = {
-    var v = nextVersion(symbol, m.version)
-    val newDir = dataDir(symbol, v)
-    val rewritten = combined match {
-      case Some(d) => writeData(d, newDir, m.indexCol, targetRows)
-      case None => Vector.empty
+      targetRows: Long,
+      op: String): Int =
+    commitVersion(symbol, op, Some(m.version)) { first =>
+      val newDir = dataDir(symbol, first)
+      val rewritten = combined match {
+        case Some(d) => writeData(d, newDir, m.indexCol, targetRows)
+        case None => Vector.empty
+      }
+      val (before, after) = untouched.partition(range.wholeFileBelow)
+      val ordered = renumber(before ++ rewritten ++ after)
+      val nm = m.copy(
+        files = ordered,
+        rowCount = ordered.map(_.rows).sum,
+        dirSchemas = m.dirSchemas + (newDir.getName -> m.schemaDdl))
+      _ => nm
     }
-    val (before, after) = untouched.partition(range.wholeFileBelow)
-    val ordered = renumber(before ++ rewritten ++ after)
-    val nm = m.copy(
-      version = v,
-      files = ordered,
-      rowCount = ordered.map(_.rows).sum,
-      createdAtMs = System.currentTimeMillis(),
-      dirSchemas = m.dirSchemas + (newDir.getName -> m.schemaDdl))
-    if (!commitManifest(symbol, nm))
-      // the rewrite was computed against base version m — re-committing at
-      // a bumped number would orphan the concurrent winner's data
-      throw new java.util.ConcurrentModificationException(
-        s"$symbol: version $v was committed concurrently; re-run the operation")
-    v
-  }
 
   /** merge_experimental (reference: library.py:3411, MergeStrategy
     * _store.py:117): SQL-MERGE df into the symbol by index key — matched
@@ -882,7 +893,7 @@ final class Library(
       else readFiles(symbol, m, touched, None, None, withRowId = false)
     val merged = graft.operators.MergeUpdate.merge(
       old, align(df, target), Seq(idx), matched, notMatchedByTarget)
-    commitRewrite(symbol, m, Some(merged), untouched, range, targetRows)
+    commitRewrite(symbol, m, Some(merged), untouched, range, targetRows, "merge")
   }
 
   // ------------------------------------------------------------- read
@@ -1208,30 +1219,22 @@ final class Library(
     * not exist … creates it with none", library.py:2534 docstring) —
     * reads of such a version return an empty zero-column frame.
     */
-  def writeMetadata(symbol: String, metadata: Map[String, String]): Int = {
-    // Rebase-on-race: metadata-only commits depend on the base only for its
-    // file list, so on a lost race we RE-RESOLVE the winner's manifest and
-    // reapply — never re-committing a stale file list over new data.
-    while (true) {
-      val nm = latestVersion(symbol).map(v => manifest(symbol, v)) match {
-        case Some(m) if !m.deleted =>
-          m.copy(version = nextVersion(symbol, m.version), metadata = metadata,
-            createdAtMs = System.currentTimeMillis())
-        case prior => // absent or tombstoned: metadata-only empty version
+  def writeMetadata(symbol: String, metadata: Map[String, String]): Int =
+    commitVersion(symbol, "writeMetadata", None) { first => latest =>
+      latest.map(manifest(symbol, _)).filterNot(_.deleted) match {
+        case Some(m) => m.copy(metadata = metadata)
+        case None => // absent or tombstoned: metadata-only empty version
           VersionManifest(
-            version = nextVersion(symbol, prior.map(_.version).getOrElse(-1)),
+            version = first,
             indexCol = None,
             sorted = false,
             files = Vector.empty,
             rowCount = 0L,
-            createdAtMs = System.currentTimeMillis(),
+            createdAtMs = 0L,
             schemaDdl = "",
             metadata = metadata)
       }
-      if (commitManifest(symbol, nm)) return nm.version
     }
-    -1 // unreachable
-  }
 
   def writeMetadataBatch(
       items: Seq[(String, Map[String, String])],
@@ -1248,9 +1251,8 @@ final class Library(
     * restored files alive because a live manifest references them.
     * Also the undelete: restoring a pre-tombstone version of a deleted
     * symbol resurrects it (the reference's restore-over-tombstone
-    * behavior). Rebase-on-race like [[writeMetadata]]: a lost CAS
-    * re-reads the winner's version counter and recommits the same
-    * restored content.
+    * behavior). A lost CAS recommits the same restored content on top
+    * of the winner ([[commitVersion]]).
     *
     * Streaming caveat (matches the reference's restore semantics, which
     * copy metadata verbatim): on a streaming-fed symbol the restored
@@ -1267,20 +1269,10 @@ final class Library(
   def restoreVersion(symbol: String, asOf: AsOf): Int = {
     val src = resolveVersion(symbol, asOf) // delta chains resolved
     require(!src.deleted, s"$symbol@${src.version} is a tombstone")
-    while (true) {
-      val base = latestVersion(symbol).getOrElse(
-        throw new NoSuchElementException(s"symbol $symbol does not exist"))
-      val nm = src.copy(
-        version = nextVersion(symbol, base),
-        createdAtMs = System.currentTimeMillis(),
-        deleted = false,
-        baseVersion = None,
-        addedFiles = Vector.empty,
-        removedPaths = Vector.empty,
-        chainDepth = 0)
-      if (commitManifest(symbol, nm)) return nm.version
+    commitVersion(symbol, "restoreVersion", None) { _ => latest =>
+      if (latest.isEmpty) throw new NoSuchElementException(s"symbol $symbol does not exist")
+      src
     }
-    -1 // unreachable
   }
 
   /** The write_pickle analog (reference: library.py:1148): version an
@@ -1583,24 +1575,12 @@ final class Library(
   /** Soft-delete: a tombstone version (reference keeps version history the
     * same way; prune_previous_versions is the hard delete).
     */
-  def delete(symbol: String): Int = {
-    // Rebase-on-race like writeMetadata: a tombstone's content doesn't
-    // depend on the base, but its version number must land ON TOP of
-    // whatever won the race.
-    while (true) {
-      val v = latestVersion(symbol).getOrElse(
-        throw new NoSuchElementException(s"symbol $symbol does not exist"))
-      val m = manifest(symbol, v)
-      val nm = m.copy(
-        version = nextVersion(symbol, v),
-        files = Vector.empty,
-        rowCount = 0,
-        deleted = true,
-        createdAtMs = System.currentTimeMillis())
-      if (commitManifest(symbol, nm)) return nm.version
+  def delete(symbol: String): Int =
+    commitVersion(symbol, "delete", None) { _ => latest =>
+      manifest(symbol, latest.getOrElse(
+        throw new NoSuchElementException(s"symbol $symbol does not exist")))
+        .copy(files = Vector.empty, rowCount = 0, deleted = true)
     }
-    -1 // unreachable
-  }
 
   /** delete(symbol, versions=...) (reference: library.py:2673-2702 →
     * delete_versions): hard-remove SPECIFIC version manifests — the
@@ -2044,64 +2024,50 @@ final class Library(
     // refusal mid-loop, a commit IO error, a lost append race) moves the
     // already-moved dirs back into staging: a re-run must see the full
     // staged set, or it would silently publish only the leftover subset.
-    var v = nextVersion(symbol,
-      prior.map(_.version).getOrElse(latestVersion(symbol).getOrElse(-1)))
     val dataRoot = new Path(symDir(symbol), "data")
     val dfs = fs(dataRoot)
     dfs.mkdirs(dataRoot)
     val moved = scala.collection.mutable.ArrayBuffer.empty[(String, Vector[FileEntry], StructType)]
     val markers = scala.collection.mutable.ArrayBuffer.empty[Path]
     val keepMarkers = scala.collection.mutable.Set.empty[Path]
-    var published = false
-    try {
-      stats.zip(deltaSchemas).foreach { case ((d, fsx), (_, schema)) =>
-        val destName = f"v$v%05d" + s"_${d.getName}"
-        // In-flight marker BEFORE the rename: between here and the
-        // manifest commit the moved files are referenced by nothing, and
-        // a concurrent delete/prune's GC would otherwise destroy the only
-        // copy of the staged data. The marker's own mtime is fresh (file
-        // mtimes survive rename, so they can't serve as the age signal);
-        // GC skips marked dirs until the marker goes stale (crashed
-        // finalize), then collects normally.
-        val mk = new Path(dataRoot, s"$InFlightPrefix$destName")
-        writeString(mk, "")
-        markers += mk
-        require(dfs.rename(d, new Path(dataRoot, destName)),
-          s"failed to move staged delta $d into $dataRoot")
-        moved += ((destName, fsx.map(_._1), schema))
-      }
+    val v = try {
+      commitVersion(symbol, "finalizeStaged", prior.map(_.version)) { first =>
+        stats.zip(deltaSchemas).foreach { case ((d, fsx), (_, schema)) =>
+          val destName = f"v$first%05d" + s"_${d.getName}"
+          // In-flight marker BEFORE the rename: between here and the
+          // manifest commit the moved files are referenced by nothing, and
+          // a concurrent delete/prune's GC would otherwise destroy the only
+          // copy of the staged data. The marker's own mtime is fresh (file
+          // mtimes survive rename, so they can't serve as the age signal);
+          // GC skips marked dirs until the marker goes stale (crashed
+          // finalize), then collects normally.
+          val mk = new Path(dataRoot, s"$InFlightPrefix$destName")
+          writeString(mk, "")
+          markers += mk
+          require(dfs.rename(d, new Path(dataRoot, destName)),
+            s"failed to move staged delta $d into $dataRoot")
+          moved += ((destName, fsx.map(_._1), schema))
+        }
 
-      val priorFiles = prior.map(_.files).getOrElse(Vector.empty)
-      val shifted = renumber(keys.sorted(moved.toSeq.flatMap { case (dir, entries, _) =>
-        entries.map(e => e.copy(path = s"$dir/${e.path}"))
-      }), priorFiles)
-      val unifiedDdl = unified.toDDL
-      val m = VersionManifest(
-        version = v,
-        indexCol = idxCol,
-        // validated at row-group granularity; an unvalidated splice makes no
-        // sortedness claim (the reference marks such versions UNSORTED too)
-        sorted = idxCol.isDefined && validateIndex && prior.forall(_.sorted),
-        files = priorFiles ++ shifted,
-        rowCount = priorFiles.map(_.rows).sum + shifted.map(_.rows).sum,
-        createdAtMs = System.currentTimeMillis(),
-        schemaDdl = unifiedDdl,
-        metadata = prior.map(_.metadata).getOrElse(Map.empty),
-        dirSchemas = prior.map(_.dirSchemas).getOrElse(Map.empty) ++
-          moved.map { case (dir, _, schema) => dir -> schema.toDDL })
-      var committed = commitManifest(symbol, m)
-      while (!committed && !appending) {
-        // pure write: last-writer-wins — bump and retry (dir names embed the
-        // attempted version but manifests reference full paths, names are free)
-        v += 1
-        committed = commitManifest(symbol, m.copy(version = v))
+        val priorFiles = prior.map(_.files).getOrElse(Vector.empty)
+        val shifted = renumber(keys.sorted(moved.toSeq.flatMap { case (dir, entries, _) =>
+          entries.map(e => e.copy(path = s"$dir/${e.path}"))
+        }), priorFiles)
+        val m = VersionManifest(
+          version = first,
+          indexCol = idxCol,
+          // validated at row-group granularity; an unvalidated splice makes no
+          // sortedness claim (the reference marks such versions UNSORTED too)
+          sorted = idxCol.isDefined && validateIndex && prior.forall(_.sorted),
+          files = priorFiles ++ shifted,
+          rowCount = priorFiles.map(_.rows).sum + shifted.map(_.rows).sum,
+          createdAtMs = 0L,
+          schemaDdl = unified.toDDL,
+          metadata = prior.map(_.metadata).getOrElse(Map.empty),
+          dirSchemas = prior.map(_.dirSchemas).getOrElse(Map.empty) ++
+            moved.map { case (dir, _, schema) => dir -> schema.toDDL })
+        _ => m
       }
-      if (!committed)
-        throw new java.util.ConcurrentModificationException(
-          s"$symbol: version $v was committed concurrently; re-run finalizeStaged")
-      published = true
-      sfs.delete(sDir, true)
-      v
     } catch {
       case t: Throwable =>
         // move everything back so a re-run sees the full staged set; a
@@ -2132,6 +2098,10 @@ final class Library(
       markers.filterNot(keepMarkers.contains)
         .foreach(mk => try dfs.delete(mk, false) catch { case _: Exception => () })
     }
+    // outside the try: once the version is committed, a failure here must
+    // not move the published dirs back to staging
+    sfs.delete(sDir, true)
+    v
   }
 
   // ------------------------------------------------------- column stats
@@ -2489,49 +2459,38 @@ final class Library(
 
   def compact(symbol: String, targetRows: Long = options.rowsPerSegment): Int = {
     val m = resolveVersion(symbol)
-    if (m.indexCol.isEmpty)
-      return write(symbol, read(symbol), None, targetRows, m.metadata) // unsorted: full rewrite
+    if (m.indexCol.isEmpty) // unsorted: full rewrite of m's files, pinned to m
+      return commitNew(symbol, readFiles(symbol, m, m.files, None, None, withRowId = false),
+        None, targetRows, priorFiles = Vector.empty, m.metadata,
+        baseVersion = Some(m.version), op = "compact")
 
     val runs = fragmentedRuns(m, targetRows)
     if (runs.isEmpty) return m.version
 
     val inRuns = runs.flatten.map(_.path).toSet
     val untouched = m.files.filterNot(f => inRuns(f.path))
-    var v = nextVersion(symbol, m.version)
-    val dataRoot = new Path(symDir(symbol), "data")
-    // Run-dir names carry a uuid: the version number chosen here can be
-    // bumped by the commit-retry loop below, and a later compaction that
-    // reuses the number must not collide with these dirs (manifests
-    // reference files by full relative path, so the name itself is free).
-    val runTag = UUID.randomUUID().toString.take(8)
-    val runOut = runs.toVector.zipWithIndex.map { case (run, ri) =>
-      val dir = new Path(dataRoot, f"v$v%05d" + s"_c${ri}_$runTag")
-      dir -> writeData(readFiles(symbol, m, run, None, None, withRowId = false),
-        dir, m.indexCol, targetRows)
+    commitVersion(symbol, "compact", Some(m.version)) { first =>
+      val runOut = runs.zipWithIndex.map { case (run, ri) =>
+        val dir = dataDir(symbol, first).suffix(s"_c$ri")
+        dir -> writeData(readFiles(symbol, m, run, None, None, withRowId = false),
+          dir, m.indexCol, targetRows)
+      }
+      // files are index-disjoint, so the one file order IS global row order
+      val keys = keysOf(idxTypeOf(m))
+      val ordered = renumber(keys.sorted(untouched ++ runOut.flatMap(_._2)))
+      // Guard the invariant before committing: consecutive files must not
+      // properly overlap.
+      val clash = keys.firstOverlap(ordered)
+      require(clash.isEmpty, clash.fold("") { case (a, b) =>
+        s"compact would overlap file index ranges: ${a.path} [..${keys.hi(a).get}] vs " +
+          s"${b.path} [${keys.lo(b).get}..]"
+      })
+      val nm = m.copy(
+        files = ordered,
+        rowCount = ordered.map(_.rows).sum,
+        dirSchemas = m.dirSchemas ++ runOut.map(_._1.getName -> m.schemaDdl))
+      _ => nm
     }
-    // files are index-disjoint, so the one file order IS global row order
-    val keys = keysOf(idxTypeOf(m))
-    val ordered = renumber(keys.sorted(untouched ++ runOut.flatMap(_._2)))
-    // Guard the invariant before committing: consecutive files must not
-    // properly overlap.
-    val clash = keys.firstOverlap(ordered)
-    require(clash.isEmpty, clash.fold("") { case (a, b) =>
-      s"compact would overlap file index ranges: ${a.path} [..${keys.hi(a).get}] vs " +
-        s"${b.path} [${keys.lo(b).get}..]"
-    })
-    val nm = m.copy(
-      version = v,
-      files = ordered,
-      rowCount = ordered.map(_.rows).sum,
-      createdAtMs = System.currentTimeMillis(),
-      schemaDdl = m.schemaDdl,
-      dirSchemas = m.dirSchemas ++ runOut.map(_._1.getName -> m.schemaDdl))
-    if (!commitManifest(symbol, nm))
-      // derived from base m: re-committing at a bumped number would orphan
-      // the concurrent winner's commit (same rule as commitRewrite)
-      throw new java.util.ConcurrentModificationException(
-        s"$symbol: version $v was committed concurrently; re-run compact")
-    v
   }
 }
 

@@ -334,6 +334,13 @@ object Dedup {
     * Unbroadcast (corpus scale; checked with broadcast off, AQE on and
     * off), the band rows shuffle once on (band, bandhash), every tag join
     * reads that exchange, and the pairwise self-join adds none.
+    *
+    * `__rep <= id` is always true (`__rep` is the bucket's min id and
+    * bandedRows drops null ids). It makes every reader use `__rep`, so
+    * column pruning cannot split the aggregate into a count-only variant
+    * for the pairwise and rescoring-ids branches and a count-plus-min one
+    * for the star edges: one aggregate, one exchange of its partials,
+    * reused by every branch.
     */
   private def taggedBands(
       df: DataFrame,
@@ -346,7 +353,7 @@ object Dedup {
     val banded = bandedRows(df, idCol, textCol, shingleLen, numHashes, bands, portable)
     val counted = banded.groupBy("band", "bandhash")
       .agg(count(lit(1)).as("__n"), min(col("id")).as("__rep"))
-    banded.join(counted, Seq("band", "bandhash"))
+    banded.join(counted, Seq("band", "bandhash")).filter(col("__rep") <= col("id"))
   }
 
   /** Near-dup pairs at corpus scale: MinHash-LSH candidates verified by

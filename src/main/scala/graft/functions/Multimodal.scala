@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -216,8 +216,6 @@ object Multimodal {
     Array(w.toFloat, h.toFloat, sr / n, sg / n, sb / n,
       (sr + sg + sb) / (3f * n), nb / n, w.toFloat / math.max(h, 1))
   }
-
-  private val featuresSchema = ArrayType(FloatType)
 
   /** Batch feature extraction: one decoder per partition, binary column
     * pruned from the output (features + id only), so downstream ops

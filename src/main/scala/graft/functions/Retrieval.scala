@@ -727,7 +727,7 @@ object Retrieval {
       k: Int,
       k1: Double = 1.2,
       b: Double = 0.75,
-      idCol: String = "doc_id"): DataFrame = {
+      idCol: String): DataFrame = {
     require(k >= 1, s"bad k $k")
     // every query must carry >= 1 term — the per-query loop's bm25Indexed
     // throws on an empty query; a silent vector-only fallback here would

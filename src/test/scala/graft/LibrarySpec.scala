@@ -540,10 +540,68 @@ class LibrarySpec extends SparkSuite {
       lib.commitNew("s",
         spark.range(30, 40).select(col("id").as("ts2"), col("id").as("v")),
         Some("ts2"), 100, priorFiles = m0.files, m0.metadata,
-        derived = true, baseVersion = Some(m0.version))
+        baseVersion = Some(m0.version))
     }
     // the winner's data is intact and still latest
     assert(lib.resolveVersion("s").version == 1 && lib.read("s").count() == 20)
+  }
+
+  /** Runs `body` with [[RaceHookFs]] as the `file:` filesystem and `race`
+    * armed to run once, on the first `exists` probe of a path named
+    * `name` — a commit's manifest CAS probes its target version file, so
+    * `race` lands a concurrent commit inside that window. Restores the
+    * filesystem conf whatever `body` does.
+    */
+  private def withRaceOn[T](name: String)(race: => Unit)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val prior = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[RaceHookFs].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    RaceHookFs.armed.set((name, () => race))
+    try body
+    finally {
+      RaceHookFs.armed.set(null)
+      prior.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+  }
+
+  test("unindexed compact commits pinned to its base: a concurrent append survives") {
+    val root = java.nio.file.Files.createTempDirectory("graft-libspec-").toString
+    val lib = new Library(root, spark, LibraryOptions(gcGraceMs = 0))
+    val other = new Library(root, spark, LibraryOptions(gcGraceMs = 0))
+    lib.write("s", spark.range(100).toDF("v")) // v0
+    lib.append("s", spark.range(100, 110).toDF("v")) // v1
+    // the full rewrite is computed from v1; an append landing v2 first
+    // must make compact fail, not land v3 without the appended rows
+    intercept[java.util.ConcurrentModificationException] {
+      withRaceOn("v00002.json")(other.append("s", spark.range(110, 115).toDF("v"))) {
+        lib.compact("s")
+      }
+    }
+    assert(lib.resolveVersion("s").version == 2)
+    assert(lib.read("s").count() == 115)
+  }
+
+  test("concurrent writeMetadata calls through separate handles each land over the base's files") {
+    val root = java.nio.file.Files.createTempDirectory("graft-libspec-").toString
+    val a = new Library(root, spark, LibraryOptions(gcGraceMs = 0))
+    val b = new Library(root, spark, LibraryOptions(gcGraceMs = 0))
+    a.write("s", spark.range(50).select(col("id").as("ts2"), col("id").as("v")),
+      Some("ts2"), 10) // v0
+    val base = a.resolveVersion("s")
+    var vb = -1
+    // b commits v1 while a is between choosing v1 and its CAS: a must
+    // rebuild on top of b's version, not fail and not drop b's commit
+    val va = withRaceOn("v00001.json") { vb = b.writeMetadata("s", Map("by" -> "b")) } {
+      a.writeMetadata("s", Map("by" -> "a"))
+    }
+    assert((va, vb) == ((2, 1)))
+    for ((v, by) <- Seq(va -> "a", vb -> "b")) {
+      val m = a.manifest("s", v)
+      assert(m.files.map(_.path) == base.files.map(_.path) && m.rowCount == 50)
+      assert(m.metadata == Map("by" -> by))
+    }
+    assert(a.read("s").count() == 50)
   }
 
   test("writeMetadata creates a metadata-only empty version for missing/tombstoned symbols") {
@@ -1693,4 +1751,20 @@ class LibrarySpec extends SparkSuite {
     intercept[Exception](lib.read("s", columns = Some(Seq("v"))).collect())
     intercept[Exception](lib.tail("s", 250).collect())
   }
+}
+
+/** A local filesystem whose `exists` runs a one-shot hook (see
+  * LibrarySpec's `withRaceOn`) before answering.
+  */
+class RaceHookFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = {
+    val armed = RaceHookFs.armed.get
+    if (armed != null && p.getName == armed._1 && RaceHookFs.armed.compareAndSet(armed, null))
+      armed._2()
+    super.exists(p)
+  }
+}
+
+object RaceHookFs {
+  val armed = new java.util.concurrent.atomic.AtomicReference[(String, () => Unit)]()
 }

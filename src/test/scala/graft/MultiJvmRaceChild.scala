@@ -90,7 +90,7 @@ object MultiJvmRaceChild {
           lib.commitNew("race", batch, base.indexCol, targetRows = 1000,
             priorFiles = base.files, metadata = base.metadata,
             priorDirSchemas = base.dirSchemas,
-            derived = true, baseVersion = Some(base.version))
+            baseVersion = Some(base.version))
         else
           lib.append("race", batch, targetRows = 1000)
         committed += 1

@@ -274,6 +274,45 @@ class PlanSpec extends SparkSuite {
     assert(semi.size == 2, plan.toString.take(2000))
   }
 
+  test("minhashCandidates shuffles its bucket-count partials once") {
+    // The pairwise, star and rescoring-ids branches read one
+    // groupBy(band, bandhash) count. Unbroadcast (corpus scale), its
+    // partials cross one exchange that every other branch reuses; a
+    // count-only variant pruned apart from the count-plus-min one would
+    // shuffle them twice.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    def partialCount(p: org.apache.spark.sql.execution.SparkPlan): Boolean = p match {
+      case w: WholeStageCodegenExec => partialCount(w.child)
+      case a: HashAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[Count])
+      case _ => false
+    }
+    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      for (df <- Seq(
+          functions.Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = 3),
+          functions.Dedup.lshJaccardPairs(docs, "doc_id", "text", maxBucket = 3))) {
+        val plan = df.queryExecution.executedPlan
+        val counts = plan.collect {
+          case e: ShuffleExchangeExec if partialCount(e.child) => e
+        }
+        assert(counts.size == 1, plan.toString.take(4000))
+        assert(plan.collect {
+          case r: ReusedExchangeExec if partialCount(r.child.child) => r
+        }.nonEmpty, plan.toString.take(4000))
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+    }
+  }
+
   test("bucket-population caps plan as groupBy-count→join, never a window") {
     // A count().over(Window.partitionBy(key)) cap routes EVERY row of a
     // skewed bucket to one task before filtering — exactly the single-task
