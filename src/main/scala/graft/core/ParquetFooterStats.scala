@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Subque
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.LongType
 
+import scala.util.control.NonFatal
+
 /** Driver-side min/max of an int64 parquet column read from file FOOTERS
   * instead of a data scan.
   *
@@ -91,6 +93,8 @@ object ParquetFooterStats {
     * one would mis-read the file), so this equals count(*). Any filter,
     * computed projection or non-parquet source returns None (caller runs
     * the aggregate). At corpus scale this deletes a full count pass.
+    * An unreadable footer returns None too; an interrupt or a fatal
+    * error propagates.
     */
   def rowCount(df: DataFrame): Option[Long] =
     try {
@@ -109,7 +113,7 @@ object ParquetFooterStats {
         } finally reader.close()
       }
       Some(total)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   private def minMaxLongImpl(
       df: DataFrame, colName: String,
@@ -169,7 +173,7 @@ object ParquetFooterStats {
         } finally reader.close()
       }
       if (any) Some((mn, mx)) else None
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** The HadoopFsRelation under nothing but aliases and prune-only
     * projections (plain attribute lists — no filters, no computed

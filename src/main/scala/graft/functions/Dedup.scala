@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, each designed as a
@@ -9,8 +10,9 @@ import org.apache.spark.sql.functions._
   *  - exact: hash-groupBy on a normalized fingerprint — one shuffle on a
   *    16-byte key, no text movement when only ids are needed.
   *  - minhash LSH: shingle → k minhashes → b bands; candidate pairs come
-  *    from a self-join on (band, bandHash) so the shuffle key space is tiny
-  *    and no O(n²) compare ever happens.
+  *    from sorted runs of one shuffle on (band, bandhash), each bucket
+  *    pairing its members below a size cap and star-linking above it, so
+  *    no O(n²) compare ever happens across buckets.
   *  - simhash: 64-bit near-dup signature; hamming-adjacent buckets via
   *    band rotation.
   *  - n-gram Jaccard: per-pair verification on LSH candidates (or
@@ -282,20 +284,36 @@ object Dedup {
       posts: DataFrame,
       numHashes: Int,
       portable: Boolean = false): DataFrame = {
-    val mins = (0 until numHashes).map { seed =>
+    val mins = minhashes(numHashes, portable)
+    posts.groupBy("id").agg(mins.head, mins.tail: _*)
+  }
+
+  /** The k `min` aggregates h0..h(k-1) of [[minhashSignatures]]. */
+  private def minhashes(numHashes: Int, portable: Boolean): Seq[Column] =
+    (0 until numHashes).map { seed =>
       val h =
         if (portable) h60(concat_ws(":", lit(seed), col("s")))
         else xxhash64(lit(seed), col("s"))
       min(h).as(s"h$seed")
     }
-    posts.groupBy("id").agg(mins.head, mins.tail: _*)
-  }
 
   /** Candidate near-duplicate pairs via MinHash LSH.
     * Output: (id_a, id_b) distinct pairs with id_a < id_b.
-    * Shuffle is on (band, bandHash) — bounded-size keys; the classic
-    * skew risk (a boilerplate shingle shared by millions of docs) is
-    * handled by capping bucket size (`maxBucket`).
+    *
+    * Scale shape: the band rows of [[bandedRows]] shuffle ONCE, on
+    * (band, bandhash), and each partition sorts by (band, bandhash, id),
+    * so every bucket arrives as one run of ascending ids. A run of at
+    * most `maxBucket` ids emits all its id_a < id_b pairs; a larger run
+    * STAR-LINKS to its first (min) id instead of dropping: |bucket|
+    * edges, never |bucket|², so a crawl's 500k-copy near-identical
+    * boilerplate cluster (the mega-group a dropping cap would silently
+    * un-dedup) still reaches downstream as ONE connected component.
+    * At most `maxBucket + 1` ids of a run are buffered at once, however
+    * large the bucket. Consumers that rescore (lshJaccardPairs) decide
+    * per-edge survival exactly as for pairwise candidates. No count
+    * aggregate, tag join, self-join or window: one scan, one shuffle of
+    * the signature partials on id, one of the band rows, and the final
+    * distinct over pairs that several bands share.
     */
   def minhashCandidates(
       df: DataFrame,
@@ -305,56 +323,55 @@ object Dedup {
       numHashes: Int = 12,
       bands: Int = 4,
       maxBucket: Int = 1000,
-      portable: Boolean = false): DataFrame = {
-    val tagged = taggedBands(df, idCol, textCol, shingleLen, numHashes, bands, portable)
-    val bucketed = tagged.filter(col("__n") <= maxBucket)
-    val pairwise = bucketed.as("a")
-      .join(bucketed.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bandhash") === col("b.bandhash") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    // Over-cap buckets STAR-LINK to their min-id member instead of
-    // dropping: |bucket| edges, never |bucket|² — so a crawl's 500k-copy
-    // near-identical boilerplate cluster (the exact mega-group the cap
-    // used to silently un-dedup) still reaches downstream as ONE
-    // connected component, while the peak join task stays linear in the
-    // bucket. Consumers that rescore (lshJaccardPairs) decide per-edge
-    // survival exactly as for pairwise candidates; `__rep` is the min id,
-    // so star edges satisfy the id_a < id_b contract by construction.
-    val star = tagged.filter(col("__n") > maxBucket && col("id") =!= col("__rep"))
-      .select(col("__rep").as("id_a"), col("id").as("id_b"))
-    pairwise.unionByName(star).distinct()
+      portable: Boolean = false): DataFrame =
+    bucketPairs(
+      bandedRows(df, idCol, textCol, shingleLen, numHashes, bands, portable),
+      maxBucket)
+
+  /** The candidate pairs of (id, band, bandhash) rows: one shuffle on
+    * (band, bandhash), a sort within each partition, and
+    * [[bucketRunPairs]] over the sorted runs (see [[minhashCandidates]]).
+    */
+  private def bucketPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
+    val id = banded.schema("id")
+    val pairs = StructType(Seq(id.copy(name = "id_a"), id.copy(name = "id_b")))
+    banded.select("band", "bandhash", "id")
+      .repartition(col("band"), col("bandhash"))
+      .sortWithinPartitions("band", "bandhash", "id")
+      .mapPartitions(rows => bucketRunPairs(rows.buffered, maxBucket))(Encoders.row(pairs))
+      .distinct()
   }
 
-  /** [[bandedRows]] tagged with their bucket's population `__n` and min
-    * id `__rep`: the cap's groupBy-count joined back on (band, bandhash),
-    * never a count window (see decontaminate). The cap's pairwise/star
-    * split and lshJaccardPairs' rescoring docs all read this stream.
-    * Unbroadcast (corpus scale; checked with broadcast off, AQE on and
-    * off), the band rows shuffle once on (band, bandhash), every tag join
-    * reads that exchange, and the pairwise self-join adds none.
-    *
-    * `__rep <= id` is always true (`__rep` is the bucket's min id and
-    * bandedRows drops null ids). It makes every reader use `__rep`, so
-    * column pruning cannot split the aggregate into a count-only variant
-    * for the pairwise and rescoring-ids branches and a count-plus-min one
-    * for the star edges: one aggregate, one exchange of its partials,
-    * reused by every branch.
+  /** Pairs of (band, bandhash, id) rows sorted on all three: per run of
+    * one (band, bandhash), every id_a < id_b pair when the run holds at
+    * most `maxBucket` ids, else (first id, id) star edges, streamed past
+    * the `maxBucket + 1` ids buffered to tell the two apart. Ids are
+    * unique within a run (one signature row per id, one band row per
+    * band), so ascending order is strict.
     */
-  private def taggedBands(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleLen: Int,
-      numHashes: Int,
-      bands: Int,
-      portable: Boolean): DataFrame = {
-    val banded = bandedRows(df, idCol, textCol, shingleLen, numHashes, bands, portable)
-    val counted = banded.groupBy("band", "bandhash")
-      .agg(count(lit(1)).as("__n"), min(col("id")).as("__rep"))
-    banded.join(counted, Seq("band", "bandhash")).filter(col("__rep") <= col("id"))
-  }
+  private def bucketRunPairs(rows: BufferedIterator[Row], maxBucket: Int): Iterator[Row] =
+    new Iterator[Iterator[Row]] {
+      def hasNext: Boolean = rows.hasNext
+      def next(): Iterator[Row] = {
+        val first = rows.next()
+        val (band, key) = (first.get(0), first.get(1))
+        def inRun = rows.hasNext && rows.head.get(0) == band && rows.head.get(1) == key
+        val ids = scala.collection.mutable.ArrayBuffer(first.get(2))
+        while (ids.length <= maxBucket && inRun) ids += rows.next().get(2)
+        if (ids.length <= maxBucket)
+          ids.indices.iterator.flatMap(i =>
+            (i + 1 until ids.length).iterator.map(j => Row(ids(i), ids(j))))
+        else {
+          val rep = ids.head
+          // flatten drains this iterator, and with it the run, before
+          // it asks for the next run
+          ids.iterator.drop(1).map(Row(rep, _)) ++ new Iterator[Row] {
+            def hasNext: Boolean = inRun
+            def next(): Row = Row(rep, rows.next().get(2))
+          }
+        }
+      }
+    }.flatten
 
   /** Near-dup pairs at corpus scale: MinHash-LSH candidates verified by
     * EXACT n-gram Jaccard rescoring — the candidates→verify pipeline as a
@@ -368,20 +385,18 @@ object Dedup {
     * incidence-quadratic (reference posture: `grouper.hpp:16-60` buckets
     * everything, never materializing all-pairs).
     *
-    * Scale shape: candidate generation is the banded bucket join
-    * (bounded keys, `maxBucket` cap). Rescoring restricts the corpus to
-    * docs sharing a band bucket with another doc (a superset of the docs
-    * the candidates name, taken from the bucket counts so the plan holds
-    * one candidate pipeline, not one per use), collects each such doc's
-    * distinct shingle HASHES once, and joins the arrays onto the pair
-    * stream by id. The restriction is a merge semi-join at every scale:
-    * the corpus rows shuffle once on id, the set aggregate adds no
-    * exchange, and a caller joining the same corpus on id (dropping the
-    * pairs' losers) reuses that exchange. Per-pair cost is O(|a| + |b|)
-    * set intersection; total cost is candidate-pair mass, never corpus².
-    * Jaccard rounds to 6 before the threshold compare (the
-    * [[matchesAgainstIndex]] convention) and inherits the 64-bit
-    * shingle-hash almost-surely-exact caveat of [[ngramJaccardPairs]].
+    * Scale shape: the corpus is shingled once. One groupBy(id) computes
+    * each doc's k minhashes AND its distinct shingle-hash set, so only
+    * ids and hashes cross the one shuffle of its partials; the band rows
+    * of the signatures feed [[minhashCandidates]]' sorted bucket runs
+    * (one shuffle on (band, bandhash), `maxBucket` cap, at most
+    * `maxBucket + 1` ids buffered per bucket), and the sets join onto
+    * the pair stream by id, reading the aggregate's id partitioning.
+    * Per-pair cost is O(|a| + |b|) set intersection; total cost is
+    * candidate-pair mass, never corpus². Jaccard rounds to 6 before the
+    * threshold compare (the [[matchesAgainstIndex]] convention) and
+    * inherits the 64-bit shingle-hash almost-surely-exact caveat of
+    * [[ngramJaccardPairs]].
     */
   def lshJaccardPairs(
       df: DataFrame,
@@ -393,19 +408,18 @@ object Dedup {
       bands: Int = 4,
       maxBucket: Int = 1000,
       portable: Boolean = false): DataFrame = {
-    val cand = minhashCandidates(df, idCol, textCol, shingleLen, numHashes,
-      bands, maxBucket, portable)
-    // Every id a pairwise or star edge names sits in a bucket of two or
-    // more members, so extra docs join no pair.
-    val ids = taggedBands(df, idCol, textCol, shingleLen, numHashes, bands, portable)
-      .filter(col("__n") > 1).select(col("id").as("__cid")).distinct()
-    val docs = df.join(ids.hint("merge"), df(idCol) === ids("__cid"), "left_semi")
-    val sets = shinglePostings(docs, idCol, textCol, shingleLen)
-      .groupBy("id")
-      .agg(collect_set(xxhash64(col("s"))).as("__set"))
-    cand
-      .join(sets.select(col("id").as("id_a"), col("__set").as("__sa")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("__set").as("__sb")), Seq("id_b"))
+    val mins = minhashes(numHashes, portable)
+    // The filter holds for every doc (each has a shingle, so a set and
+    // minhashes) but reads every column: column pruning keeps ONE
+    // aggregate for the band rows and both set lookups, not a
+    // minhash-only and a set-only variant each shingling the corpus.
+    val sig = signaturePostings(df, idCol, textCol, shingleLen).groupBy("id")
+      .agg(collect_set(xxhash64(col("s"))).as("__set"), mins: _*)
+      .filter(size(col("__set")) > 0 &&
+        coalesce(mins.indices.map(i => col(s"h$i")): _*).isNotNull)
+    bucketPairs(signatureBands(sig, numHashes, bands, portable), maxBucket)
+      .join(sig.select(col("id").as("id_a"), col("__set").as("__sa")), Seq("id_a"))
+      .join(sig.select(col("id").as("id_b"), col("__set").as("__sb")), Seq("id_b"))
       .filter(round(jaccard(col("__sa"), col("__sb")), 6) >= threshold)
       .select("id_a", "id_b")
   }
@@ -413,19 +427,8 @@ object Dedup {
   /** The (id, band, bandhash) LSH band rows of a corpus — the shared
     * front half of [[minhashCandidates]] and the persisted-index pair
     * ([[buildMinhashIndex]] / [[minhashCandidatesAgainstIndex]]), so the
-    * self-join and index paths bucket IDENTICALLY by construction.
-    *
-    * Explicit id prefilter: the self-join's a.id < b.id would infer
-    * isnotnull(id) on the join sides only, leaving the cap's count branch
-    * with a DIFFERENT scan subtree — breaking AQE stage reuse and
-    * re-executing the whole shingle→signature pipeline for the count.
-    * With the filter shared, the signature exchange materializes ONCE
-    * (verified: count branch plans a ReusedExchange).
-    *
-    * One key per band of r consecutive signature slots; docs sharing ANY
-    * band key are candidates. Production: a 64-bit xxhash64 of the slots.
-    * Portable: the slots themselves, ':'-joined — no re-hash, so the
-    * verification engine reproduces the exact bucket partition.
+    * bucket-run and index paths bucket IDENTICALLY by construction.
+    * One row per (doc, band): a bucket holds each id at most once.
     */
   private[graft] def bandedRows(
       df: DataFrame,
@@ -434,13 +437,29 @@ object Dedup {
       shingleLen: Int,
       numHashes: Int,
       bands: Int,
-      portable: Boolean): DataFrame = {
+      portable: Boolean): DataFrame =
+    signatureBands(
+      minhashSignatures(signaturePostings(df, idCol, textCol, shingleLen), numHashes, portable),
+      numHashes, bands, portable)
+
+  /** Shingle postings of the docs with a non-null id: a null id names
+    * no document, and its signature group would bucket with real ones.
+    */
+  private def signaturePostings(
+      df: DataFrame, idCol: String, textCol: String, shingleLen: Int): DataFrame =
+    shinglePostings(df.filter(col(idCol).isNotNull), idCol, textCol, shingleLen)
+
+  /** (id, band, bandhash) rows of a frame holding id and h0..h(k-1).
+    * One key per band of r consecutive signature slots; docs sharing ANY
+    * band key are candidates. Production: a 64-bit xxhash64 of the slots.
+    * Portable: the slots themselves, ':'-joined — no re-hash, so the
+    * verification engine reproduces the exact bucket partition.
+    */
+  private def signatureBands(
+      sig: DataFrame, numHashes: Int, bands: Int, portable: Boolean): DataFrame = {
     require(bands > 0 && numHashes % bands == 0,
       s"numHashes $numHashes must divide into bands $bands")
     val rows = numHashes / bands
-    val sig = minhashSignatures(
-      shinglePostings(df.filter(col(idCol).isNotNull), idCol, textCol, shingleLen),
-      numHashes, portable)
     val bandHashes = (0 until bands).map { b =>
       val slots = (0 until rows).map(r => col(s"h${b * rows + r}"))
       if (portable) concat_ws(":", lit(b) +: slots: _*)
@@ -586,8 +605,7 @@ object Dedup {
     // Combined bucket population (index members + batch members): a key
     // yields pairs only when BOTH sides hold it, so the cap decision
     // joins the two counter aggregates inner — counter rows only, the
-    // mega-bucket is never buffered to be discarded (minhashCandidates'
-    // cap argument).
+    // mega-bucket is never buffered to be discarded.
     val iCnt = idx.groupBy("band", "bandkey").agg(count(lit(1)).as("__ni"))
     val bCnt = bb.groupBy("band", "bandkey").agg(count(lit(1)).as("__nb"))
     val bad = iCnt.join(bCnt, Seq("band", "bandkey"))
@@ -1798,8 +1816,9 @@ object Dedup {
     * join on (chunk index, chunk value), verify with exact hamming.
     *
     * `maxBucket` drops (chunk, chunkval) buckets holding more than that
-    * many docs before the self-join — the same skew guard as
-    * minhashCandidates. The 4×2¹⁶ chunk key space saturates at ≫65k docs
+    * many docs before the self-join, counted by a groupBy-count → join
+    * (minhashCandidates caps its sorted bucket runs instead, with no
+    * count). The 4×2¹⁶ chunk key space saturates at ≫65k docs
     * (every bucket then grows linearly with the corpus and pair
     * generation quadratically), so an uncapped run is a scale-killer on
     * reference-size corpora. A capped-out bucket usually means a huge
@@ -1818,7 +1837,9 @@ object Dedup {
       portable: Boolean = false): DataFrame = {
     val chunkBits = simhashBits(portable) / 4
     val mask = (1L << chunkBits) - 1
-    // id prefilter shared by all branches — see minhashCandidates
+    // id prefilter shared by all branches: the self-join's a.id < b.id
+    // would infer isnotnull(id) on the join sides only, leaving the cap's
+    // count branch a different signature subtree that AQE cannot reuse
     val sigs = simhashSignatures(
       shinglePostings(df.filter(col(idCol).isNotNull), idCol, textCol, shingleLen),
       portable)
@@ -1847,8 +1868,9 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         hammingDistance(col("a.sig"), col("b.sig")).as("hamming"))
     // over-cap buckets star-link to the min-id member — |bucket| edges
-    // bound the mega-cluster blowup while the group still pairs (see
-    // minhashCandidates); the hamming filter applies per star edge
+    // bound the mega-cluster blowup while the group still pairs (the
+    // minhashCandidates semantics); the hamming filter applies per star
+    // edge
     val star = chunks.join(over, Seq("chunk", "chunkval"))
       .filter(col("id") =!= col("__rid"))
       .select(col("__rid").as("id_a"), col("id").as("id_b"),

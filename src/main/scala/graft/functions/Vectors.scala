@@ -746,9 +746,9 @@ object Vectors {
     * k failing n/k ≤ maxMeanCluster throws before the pair join runs —
     * a fixed k on a growing corpus is a quadratic, not a parameter
     * choice. `maxCluster` skips
-    * pathological clusters via the groupBy-count → anti-join cap (the
-    * minhashCandidates argument: counter rows shuffle, a mega-cluster
-    * is never buffered) — capped clusters keep all their members.
+    * pathological clusters via the groupBy-count → anti-join cap
+    * (counter rows shuffle, a mega-cluster is never buffered on one
+    * task) — capped clusters keep all their members.
     * Groups come from [[graft.functions.Dedup.duplicateClusters]]
     * (iterative min-label propagation, no driver graph).
     *
@@ -808,8 +808,8 @@ object Vectors {
     * assignment — MATERIALIZED once, since it feeds several consumers
     * and iterative loops whose analysis would otherwise re-walk the
     * kmeans lineage exponentially — plus the capped (cluster, __sid,
-    * dist, __v) row set (groupBy-count → anti-join population cap, the
-    * minhashCandidates argument).
+    * dist, __v) row set (groupBy-count → anti-join population cap:
+    * counter rows shuffle, no cluster is buffered on one task).
     */
   private def clusteredVectors(
       df: DataFrame,
@@ -945,8 +945,10 @@ object Vectors {
     * per band.
     *
     * `maxBucket` skips (chunk, chunkval) buckets holding more than that
-    * many vectors — the skew/saturation guard (same as minhashCandidates):
-    * a capped-out bucket usually means a mass of EXACT duplicates or a
+    * many vectors — the skew/saturation guard, a groupBy-count →
+    * anti-join cap like simhashPairs' (Dedup.minhashCandidates caps its
+    * sorted bucket runs instead, star-linking past the cap): a capped-out
+    * bucket usually means a mass of EXACT duplicates or a
     * degenerate embedding (all-zero vectors hash identically); the cap
     * bounds pair generation at the cost of recall only within those
     * over-populated buckets.
@@ -985,8 +987,9 @@ object Vectors {
     val d = if (dim > 0) dim else inferDim(df, vecCol)
     val chunkBits = bits / bands
     val mask = (1L << chunkBits) - 1
-    // id prefilter shared by all branches so the cap's count branch reuses
-    // the signature subtree (see Dedup.minhashCandidates)
+    // id prefilter shared by all branches: the self-join's a.id < b.id
+    // would infer isnotnull(id) on the join sides only, leaving the cap's
+    // count branch a different signature subtree that AQE cannot reuse
     val sigs = df.filter(col(idCol).isNotNull)
       .select(col(idCol).as("id"), col(vecCol).as("vec"),
         hyperplaneSignature(col(vecCol), bits, d).as("sig"))

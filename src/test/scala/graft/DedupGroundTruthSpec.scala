@@ -680,6 +680,51 @@ class DedupGroundTruthSpec extends SparkSuite {
     }
   }
 
+  test("minhashCandidates' sorted bucket runs equal the count-and-join cap formulation") {
+    // Reference: every a < b pair of a bucket of at most cap ids, the
+    // (min id, id) star edges of a larger bucket, distinct over bands —
+    // recomputed on the driver from the same band rows. Planted groups
+    // of identical text fill one bucket per band with exactly cap and
+    // cap + 1 members.
+    val corpus = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    def reference[A: Ordering](rows: Seq[(Int, String, A)], cap: Int): Set[(A, A)] =
+      rows.groupBy(r => (r._1, r._2)).valuesIterator.flatMap { run =>
+        val ids = run.map(_._3).sorted
+        if (ids.length <= cap)
+          ids.indices.iterator.flatMap(i => (i + 1 until ids.length).iterator.map(j => (ids(i), ids(j))))
+        else ids.iterator.drop(1).map(ids.head -> _)
+      }.toSet
+    for (cap <- Seq(1000, 2); portable <- Seq(false, true)) {
+      val planted = Seq(cap, cap + 1).zipWithIndex.flatMap { case (n, g) =>
+        val text = (0 until 6).map(w => s"planted${g}w$w").mkString(" ")
+        (0 until n).map(i => (1000000L * (g + 1) + i, text))
+      }.toDF("doc_id", "text")
+      val df = corpus.unionByName(planted)
+      def bandRows(d: org.apache.spark.sql.DataFrame) =
+        Dedup.bandedRows(d, "doc_id", "text", 3, 12, 4, portable)
+          .select(col("band"), col("bandhash").cast("string"), col("id"))
+      val got = Dedup.minhashCandidates(df, "doc_id", "text", maxBucket = cap,
+        portable = portable).as[(Long, Long)].collect()
+      assert(got.length == got.toSet.size, s"cap=$cap portable=$portable: duplicate pairs")
+      assert(got.toSet == reference(bandRows(df).as[(Int, String, Long)].collect().toSeq, cap),
+        s"cap=$cap portable=$portable")
+      val group = (id: Long) => id / 1000000L
+      assert(got.count(p => group(p._1) == 1 && group(p._2) == 1) == cap * (cap - 1) / 2,
+        s"cap=$cap: the exactly-cap group must pair all its members")
+      assert(got.filter(p => group(p._1) == 2 && group(p._2) == 2).toSet ==
+        (1 to cap).map(i => (2000000L, 2000000L + i)).toSet,
+        s"cap=$cap: the cap + 1 group must star-link to its min id")
+      if (cap == 2) { // string ids: the runs sort and pair any id type
+        val named = df.select(format_string("d%07d", col("doc_id")).as("doc_id"), col("text"))
+        val gotNamed = Dedup.minhashCandidates(named, "doc_id", "text", maxBucket = cap,
+          portable = portable).as[(String, String)].collect().toSet
+        assert(gotNamed == reference(bandRows(named).as[(Int, String, String)].collect().toSeq, cap),
+          s"string ids, cap=$cap portable=$portable")
+        assert(gotNamed.map { case (a, b) => (a.tail.toLong, b.tail.toLong) } == got.toSet)
+      }
+    }
+  }
+
   test("keeper auto-dispatch: forced-LSH equals forced-exact on a total-recall corpus") {
     // identical + near-identical groups (LSH recall 1 on this fixture),
     // so both routes must produce the same survivor set — the dispatch

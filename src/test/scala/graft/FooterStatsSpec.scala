@@ -73,6 +73,21 @@ class FooterStatsSpec extends SparkSuite {
     assert(ParquetFooterStats.rowCount(Seq((1L, 2L)).toDF("a", "b")).isEmpty)
   }
 
+  test("an interrupt while reading footers propagates instead of falling back") {
+    // A swallowed interrupt would turn a thread that was asked to stop
+    // into one that quietly runs the fallback aggregate job
+    val scan = spark.read.parquet(s"$sf/events.parquet") // lists files before the hook
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    spark.conf.set("fs.file.impl", classOf[InterruptingFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      intercept[InterruptedException](ParquetFooterStats.rowCount(scan))
+      intercept[InterruptedException](ParquetFooterStats.minMaxLong(scan, "ts"))
+    } finally keys.foreach(spark.conf.unset)
+    // the restored filesystem reads the footers again
+    assert(ParquetFooterStats.rowCount(scan).contains(events.count()))
+  }
+
   test("resample origins agree between the footer path and the aggregate path") {
     // bare scan → footer anchor; filtered frame → aggregate anchor. The
     // filter keeps every row, so both must produce identical buckets.
@@ -88,4 +103,10 @@ class FooterStatsSpec extends SparkSuite {
       assert(viaFooter == viaAgg, s"origin $origin diverged")
     }
   }
+}
+
+/** A local filesystem whose every status lookup is interrupted. */
+class InterruptingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def getFileStatus(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus =
+    throw new InterruptedException(s"interrupted reading $p")
 }

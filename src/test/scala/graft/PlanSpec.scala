@@ -240,8 +240,8 @@ class PlanSpec extends SparkSuite {
   }
 
   test("lshJaccardPairs builds over a parquet corpus without running a job") {
-    // the rescoring docs are a semi-join against the candidate pipeline;
-    // building the frame must not run that pipeline ahead of the action
+    // the rescoring sets come from the signature aggregate; building the
+    // frame must not run that pipeline ahead of the action
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val (pairs, jobs) = jobsDuring(
@@ -250,62 +250,74 @@ class PlanSpec extends SparkSuite {
     assert(pairs.filter(col("id_a") >= col("id_b")).isEmpty)
   }
 
+  test("minhashCandidates builds over a parquet corpus without running a job") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val (_, jobs) = jobsDuring(functions.Dedup.minhashCandidates(docs, "doc_id", "text"))
+    assert(jobs == 0, s"building minhashCandidates fired $jobs job(s)")
+  }
+
   test("lshJaccardPairs plans one candidate pipeline, not one per use") {
-    // The rescoring docs come from the bucket counts, not from the
-    // candidate pairs. Pre-AQE, the corpus is scanned twice per tag join
-    // of band rows with their counts: three tag joins for the candidates
-    // (both pairwise sides and the star) and one under each side's
-    // shingle sets, plus each side's docs semi-join — 12 scans. Deriving
-    // the docs from the candidate pairs planned ~32.
+    // One signature aggregate (k minhashes plus the shingle-hash set per
+    // doc) feeds the band rows and both sides' set lookups: pre-AQE the
+    // corpus is scanned once under each of those three reads, and no
+    // semi-join restricts the rescored docs.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val plan = functions.Dedup.lshJaccardPairs(docs, "doc_id", "text", threshold = 0.5)
       .queryExecution.sparkPlan
     val scans = plan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
-    assert(scans.size == 12, s"${scans.size} corpus scans planned")
-    // the docs restriction is a merge semi-join at every scale, so the
-    // set aggregate reads its id partitioning and a caller's id join can
-    // reuse the corpus exchange
+    assert(scans.size == 3, s"${scans.size} corpus scans planned")
     val semi = plan.collect {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec
           if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
     }
-    assert(semi.size == 2, plan.toString.take(2000))
+    assert(semi.isEmpty, plan.toString.take(2000))
   }
 
-  test("minhashCandidates shuffles its bucket-count partials once") {
-    // The pairwise, star and rescoring-ids branches read one
-    // groupBy(band, bandhash) count. Unbroadcast (corpus scale), its
-    // partials cross one exchange that every other branch reuses; a
-    // count-only variant pruned apart from the count-plus-min one would
-    // shuffle them twice.
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
-    import org.apache.spark.sql.execution.WholeStageCodegenExec
-    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+  test("minhashCandidates shuffles its signature partials and band rows once each") {
+    // Unbroadcast (corpus scale): the signature partials cross one
+    // exchange on id, and lshJaccardPairs' set lookups reuse it because
+    // one aggregate carries both the minhashes and the sets. The band
+    // rows cross one exchange on (band, bandhash) into sorted bucket
+    // runs; no count aggregate, tag join or self-join re-reads them.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectSet, Min, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    def partialCount(p: org.apache.spark.sql.execution.SparkPlan): Boolean = p match {
-      case w: WholeStageCodegenExec => partialCount(w.child)
-      case a: HashAggregateExec => a.aggregateExpressions.exists(e =>
-        e.mode == Partial && e.aggregateFunction.isInstanceOf[Count])
-      case _ => false
+    def partials(p: SparkPlan): Seq[Class[_]] = p match {
+      case w: WholeStageCodegenExec => partials(w.child)
+      case a: BaseAggregateExec => a.aggregateExpressions.collect {
+        case e if e.mode == Partial => e.aggregateFunction.getClass
+      }
+      case _ => Nil
+    }
+    def keys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case _ => Nil
     }
     val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val docs = spark.read.parquet(s"$sf/documents.parquet")
-      for (df <- Seq(
-          functions.Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = 3),
-          functions.Dedup.lshJaccardPairs(docs, "doc_id", "text", maxBucket = 3))) {
+      for ((df, sets) <- Seq(
+          functions.Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = 3) -> false,
+          functions.Dedup.lshJaccardPairs(docs, "doc_id", "text", maxBucket = 3) -> true)) {
         val plan = df.queryExecution.executedPlan
-        val counts = plan.collect {
-          case e: ShuffleExchangeExec if partialCount(e.child) => e
-        }
-        assert(counts.size == 1, plan.toString.take(4000))
+        val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+        val sig = shuffles.filter(e => partials(e.child).contains(classOf[Min]))
+        assert(sig.size == 1 && keys(sig.head) == Seq("id"), plan.toString.take(4000))
+        assert(partials(sig.head.child).contains(classOf[CollectSet]) == sets,
+          plan.toString.take(4000))
+        assert(shuffles.count(e => keys(e) == Seq("band", "bandhash")) == 1,
+          plan.toString.take(4000))
         assert(plan.collect {
-          case r: ReusedExchangeExec if partialCount(r.child.child) => r
-        }.nonEmpty, plan.toString.take(4000))
+          case r: ReusedExchangeExec if partials(r.child.child).contains(classOf[Min]) => r
+        }.nonEmpty == sets, plan.toString.take(4000))
       }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
