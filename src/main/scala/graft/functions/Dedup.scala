@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, each designed as a
@@ -13,8 +12,8 @@ import org.apache.spark.sql.functions._
   *    from sorted runs of one shuffle on (band, bandhash), each bucket
   *    pairing its members below a size cap and star-linking above it, so
   *    no O(n²) compare ever happens across buckets.
-  *  - simhash: 64-bit near-dup signature; hamming-adjacent buckets via
-  *    band rotation.
+  *  - simhash: 64-bit near-dup signature; 4 chunk buckets (pigeonhole:
+  *    hamming ≤ 3 shares a chunk), pairs verified by exact hamming.
   *  - n-gram Jaccard: per-pair verification on LSH candidates (or
   *    exhaustive on small slices); exact up to a negligible 64-bit
   *    bucket-hash collision (see ngramJaccardPairs).
@@ -300,20 +299,21 @@ object Dedup {
   /** Candidate near-duplicate pairs via MinHash LSH.
     * Output: (id_a, id_b) distinct pairs with id_a < id_b.
     *
-    * Scale shape: the band rows of [[bandedRows]] shuffle ONCE, on
-    * (band, bandhash), and each partition sorts by (band, bandhash, id),
-    * so every bucket arrives as one run of ascending ids. A run of at
-    * most `maxBucket` ids emits all its id_a < id_b pairs; a larger run
-    * STAR-LINKS to its first (min) id instead of dropping: |bucket|
-    * edges, never |bucket|², so a crawl's 500k-copy near-identical
-    * boilerplate cluster (the mega-group a dropping cap would silently
-    * un-dedup) still reaches downstream as ONE connected component.
-    * At most `maxBucket + 1` ids of a run are buffered at once, however
-    * large the bucket. Consumers that rescore (lshJaccardPairs) decide
-    * per-edge survival exactly as for pairwise candidates. No count
-    * aggregate, tag join, self-join or window: one scan, one shuffle of
-    * the signature partials on id, one of the band rows, and the final
-    * distinct over pairs that several bands share.
+    * Scale shape: the band rows of [[bandedRows]] go through
+    * [[Kernels.bucketPairs]]: one shuffle on (band, bandhash) into sorted
+    * bucket runs. `maxBucket` means pairwise at or below, star-linked
+    * above: a run of at most `maxBucket` ids emits all its id_a < id_b
+    * pairs; a larger run STAR-LINKS to its first (min) id instead of
+    * dropping: |bucket| edges, never |bucket|², so a crawl's 500k-copy
+    * near-identical boilerplate cluster (the mega-group a dropping cap
+    * would silently un-dedup) still reaches downstream as ONE connected
+    * component. At most `maxBucket + 1` ids of a run are buffered at
+    * once, however large the bucket. Consumers that rescore
+    * (lshJaccardPairs) decide per-edge survival exactly as for pairwise
+    * candidates. No count aggregate, tag join, self-join or window: one
+    * scan, one shuffle of the signature partials on id, one of the band
+    * rows, and one of the pairs on id_a for the distinct over pairs that
+    * several bands share.
     */
   def minhashCandidates(
       df: DataFrame,
@@ -324,54 +324,9 @@ object Dedup {
       bands: Int = 4,
       maxBucket: Int = 1000,
       portable: Boolean = false): DataFrame =
-    bucketPairs(
+    Kernels.bucketPairs(
       bandedRows(df, idCol, textCol, shingleLen, numHashes, bands, portable),
       maxBucket)
-
-  /** The candidate pairs of (id, band, bandhash) rows: one shuffle on
-    * (band, bandhash), a sort within each partition, and
-    * [[bucketRunPairs]] over the sorted runs (see [[minhashCandidates]]).
-    */
-  private def bucketPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
-    val id = banded.schema("id")
-    val pairs = StructType(Seq(id.copy(name = "id_a"), id.copy(name = "id_b")))
-    banded.select("band", "bandhash", "id")
-      .repartition(col("band"), col("bandhash"))
-      .sortWithinPartitions("band", "bandhash", "id")
-      .mapPartitions(rows => bucketRunPairs(rows.buffered, maxBucket))(Encoders.row(pairs))
-      .distinct()
-  }
-
-  /** Pairs of (band, bandhash, id) rows sorted on all three: per run of
-    * one (band, bandhash), every id_a < id_b pair when the run holds at
-    * most `maxBucket` ids, else (first id, id) star edges, streamed past
-    * the `maxBucket + 1` ids buffered to tell the two apart. Ids are
-    * unique within a run (one signature row per id, one band row per
-    * band), so ascending order is strict.
-    */
-  private def bucketRunPairs(rows: BufferedIterator[Row], maxBucket: Int): Iterator[Row] =
-    new Iterator[Iterator[Row]] {
-      def hasNext: Boolean = rows.hasNext
-      def next(): Iterator[Row] = {
-        val first = rows.next()
-        val (band, key) = (first.get(0), first.get(1))
-        def inRun = rows.hasNext && rows.head.get(0) == band && rows.head.get(1) == key
-        val ids = scala.collection.mutable.ArrayBuffer(first.get(2))
-        while (ids.length <= maxBucket && inRun) ids += rows.next().get(2)
-        if (ids.length <= maxBucket)
-          ids.indices.iterator.flatMap(i =>
-            (i + 1 until ids.length).iterator.map(j => Row(ids(i), ids(j))))
-        else {
-          val rep = ids.head
-          // flatten drains this iterator, and with it the run, before
-          // it asks for the next run
-          ids.iterator.drop(1).map(Row(rep, _)) ++ new Iterator[Row] {
-            def hasNext: Boolean = inRun
-            def next(): Row = Row(rep, rows.next().get(2))
-          }
-        }
-      }
-    }.flatten
 
   /** Near-dup pairs at corpus scale: MinHash-LSH candidates verified by
     * EXACT n-gram Jaccard rescoring — the candidates→verify pipeline as a
@@ -388,10 +343,12 @@ object Dedup {
     * Scale shape: the corpus is shingled once. One groupBy(id) computes
     * each doc's k minhashes AND its distinct shingle-hash set, so only
     * ids and hashes cross the one shuffle of its partials; the band rows
-    * of the signatures feed [[minhashCandidates]]' sorted bucket runs
-    * (one shuffle on (band, bandhash), `maxBucket` cap, at most
-    * `maxBucket + 1` ids buffered per bucket), and the sets join onto
-    * the pair stream by id, reading the aggregate's id partitioning.
+    * of the signatures feed [[Kernels.scoredBucketPairs]]: the sorted
+    * bucket runs of [[minhashCandidates]] (one shuffle on (band,
+    * bandhash); `maxBucket` means pairwise at or below, star-linked
+    * above; at most `maxBucket + 1` ids buffered per bucket), then the
+    * sets join onto the pair stream by id_a and id_b, reading the
+    * aggregate's id partitioning and the pairs' id_a partitioning.
     * Per-pair cost is O(|a| + |b|) set intersection; total cost is
     * candidate-pair mass, never corpus². Jaccard rounds to 6 before the
     * threshold compare (the [[matchesAgainstIndex]] convention) and
@@ -417,10 +374,10 @@ object Dedup {
       .agg(collect_set(xxhash64(col("s"))).as("__set"), mins: _*)
       .filter(size(col("__set")) > 0 &&
         coalesce(mins.indices.map(i => col(s"h$i")): _*).isNotNull)
-    bucketPairs(signatureBands(sig, numHashes, bands, portable), maxBucket)
-      .join(sig.select(col("id").as("id_a"), col("__set").as("__sa")), Seq("id_a"))
-      .join(sig.select(col("id").as("id_b"), col("__set").as("__sb")), Seq("id_b"))
-      .filter(round(jaccard(col("__sa"), col("__sb")), 6) >= threshold)
+    Kernels.scoredBucketPairs(sig.select("id", "__set"),
+        signatureBands(sig, numHashes, bands, portable), maxBucket)(
+        (a, b) => round(jaccard(a, b), 6).as("__j"))
+      .filter(col("__j") >= threshold)
       .select("id_a", "id_b")
   }
 
@@ -574,7 +531,10 @@ object Dedup {
     * 1%-scale band table — still never touching corpus text; past the cap
     * the fallback join has the same bound). Same-id pairs are dropped: an
     * id present on both sides is the same record re-observed, not a
-    * duplicate of itself.
+    * duplicate of itself. The bucket cap stays a groupBy-count →
+    * anti-join that drops an over-cap bucket, not [[Kernels.bucketPairs]]'
+    * sorted runs and star rule: it counts the index and batch sides
+    * together and pairs across them only, never within one side.
     */
   def minhashCandidatesAgainstIndex(
       lib: graft.core.Library,
@@ -1813,19 +1773,24 @@ object Dedup {
 
   /** SimHash near-dup candidate pairs: band the 64 bits into 4×16-bit
     * chunks (pigeonhole: hamming ≤ 3 ⇒ at least one identical chunk),
-    * join on (chunk index, chunk value), verify with exact hamming.
+    * pair within (chunk index, chunk value) buckets, verify with exact
+    * hamming. Output: (id_a, id_b, hamming), id_a < id_b.
     *
-    * `maxBucket` drops (chunk, chunkval) buckets holding more than that
-    * many docs before the self-join, counted by a groupBy-count → join
-    * (minhashCandidates caps its sorted bucket runs instead, with no
-    * count). The 4×2¹⁶ chunk key space saturates at ≫65k docs
-    * (every bucket then grows linearly with the corpus and pair
-    * generation quadratically), so an uncapped run is a scale-killer on
-    * reference-size corpora. A capped-out bucket usually means a huge
-    * cluster of EXACT duplicates (identical signatures) — run
-    * dropExactDuplicates first, as the production pipeline does; the cap
-    * only trades recall on pairs whose every shared chunk is
-    * over-populated.
+    * Candidates come from [[Kernels.scoredBucketPairs]], the sorted
+    * bucket runs [[minhashCandidates]] uses, with the signature as the
+    * payload joined onto both ids. `maxBucket` means pairwise at or
+    * below, star-linked above: a bucket of more than `maxBucket` docs
+    * links each member to its min id (|bucket| edges, the hamming
+    * filter applying per edge) instead of pairing all-ways. The 4×2¹⁶
+    * chunk key space saturates at ≫65k docs (every bucket then grows
+    * linearly with the corpus and all-ways pairing quadratically), so
+    * an uncapped run is a scale-killer on reference-size corpora. A
+    * saturated bucket usually means a huge cluster of EXACT duplicates
+    * (identical signatures), which the star keeps one connected
+    * component; run dropExactDuplicates first, as the production
+    * pipeline does. The cap only trades recall on near pairs whose
+    * every shared chunk is over-populated and that are not the star's
+    * centre.
     */
   def simhashPairs(
       df: DataFrame,
@@ -1835,48 +1800,10 @@ object Dedup {
       maxHamming: Int = 3,
       maxBucket: Int = 1000,
       portable: Boolean = false): DataFrame = {
-    val chunkBits = simhashBits(portable) / 4
-    val mask = (1L << chunkBits) - 1
-    // id prefilter shared by all branches: the self-join's a.id < b.id
-    // would infer isnotnull(id) on the join sides only, leaving the cap's
-    // count branch a different signature subtree that AQE cannot reuse
-    val sigs = simhashSignatures(
-      shinglePostings(df.filter(col(idCol).isNotNull), idCol, textCol, shingleLen),
-      portable)
-    val chunks = sigs.select(
-      col("id"), col("sig"),
-      posexplode(array((0 until 4).map(i =>
-        shiftright(col("sig"), i * chunkBits).bitwiseAND(mask)): _*)))
-      .toDF("id", "sig", "chunk", "chunkval")
-    // groupBy-count → anti-join cap (see decontaminate for why not a
-    // window, and why anti beats the semi form); min(struct) carries the
-    // over-cap bucket's representative id AND signature in the same
-    // aggregate pass (id is unique, so the struct min orders by id)
-    val counted = chunks.groupBy("chunk", "chunkval")
-      .agg(count(lit(1)).as("__n"),
-        min(struct(col("id"), col("sig"))).as("__rep"))
-    val over = counted.filter(col("__n") > maxBucket)
-      .select(col("chunk"), col("chunkval"),
-        col("__rep.id").as("__rid"), col("__rep.sig").as("__rsig"))
-    val bucketed = chunks.join(
-      over.select("chunk", "chunkval"), Seq("chunk", "chunkval"), "left_anti")
-    val pairwise = bucketed.as("a")
-      .join(bucketed.as("b"),
-        col("a.chunk") === col("b.chunk") &&
-          col("a.chunkval") === col("b.chunkval") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        hammingDistance(col("a.sig"), col("b.sig")).as("hamming"))
-    // over-cap buckets star-link to the min-id member — |bucket| edges
-    // bound the mega-cluster blowup while the group still pairs (the
-    // minhashCandidates semantics); the hamming filter applies per star
-    // edge
-    val star = chunks.join(over, Seq("chunk", "chunkval"))
-      .filter(col("id") =!= col("__rid"))
-      .select(col("__rid").as("id_a"), col("id").as("id_b"),
-        hammingDistance(col("__rsig"), col("sig")).as("hamming"))
-    pairwise.unionByName(star)
-      .distinct()
+    val sigs = simhashSignatures(signaturePostings(df, idCol, textCol, shingleLen), portable)
+    val chunks = sigs.select(col("id"), Kernels.bandKeys(col("sig"), simhashBits(portable), 4))
+      .toDF("id", "chunk", "chunkval")
+    Kernels.scoredBucketPairs(sigs, chunks, maxBucket)(hammingDistance(_, _).as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 }

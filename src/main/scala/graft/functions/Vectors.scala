@@ -260,8 +260,11 @@ object Vectors {
     }.toArray
 
   /** Approximate top-k: score only same-LSH-bucket (query, corpus) pairs.
-    * Multi-probe via `bands` signature chunks (as in Dedup.simhashPairs)
-    * keeps recall up without widening the shuffle.
+    * Multi-probe via `bands` signature chunks ([[Kernels.bandKeys]], the
+    * split Dedup.simhashPairs and [[cosineNearDupPairs]] use; `bands`
+    * must divide `bits`) keeps recall up without widening the shuffle.
+    * No bucket cap: the query side broadcasts into a bucket join, so a
+    * corpus row meets only the queries of its own buckets.
     */
   def lshTopK(
       corpus: DataFrame,
@@ -273,14 +276,11 @@ object Vectors {
       bands: Int = 4,
       dim: Int = -1): DataFrame = {
     val d = if (dim > 0) dim else inferDim(corpus, vecCol)
-    val chunkBits = bits / bands
-    val mask = (1L << chunkBits) - 1
     def banded(df: DataFrame, side: String) =
       df.select(col(idCol).as(s"${side}_id"), col(vecCol).as(s"${side}_vec"),
         hyperplaneSignature(col(vecCol), bits, d).as("sig"))
         .select(col(s"${side}_id"), col(s"${side}_vec"),
-          posexplode(array((0 until bands).map(i =>
-            shiftright(col("sig"), i * chunkBits).bitwiseAND(mask)): _*)))
+          Kernels.bandKeys(col("sig"), bits, bands))
         .toDF(s"${side}_id", s"${side}_vec", "chunk", "chunkval")
     val qb = banded(queries, "query")
     val cb = banded(corpus, "corpus")
@@ -809,7 +809,10 @@ object Vectors {
     * and iterative loops whose analysis would otherwise re-walk the
     * kmeans lineage exponentially — plus the capped (cluster, __sid,
     * dist, __v) row set (groupBy-count → anti-join population cap:
-    * counter rows shuffle, no cluster is buffered on one task).
+    * counter rows shuffle, no cluster is buffered on one task). Not
+    * [[Kernels.bucketPairs]]' star rule: an over-cap cluster is dropped
+    * whole, since its consumers pick keepers and contrastive pairs per
+    * cluster rather than connecting components.
     */
   private def clusteredVectors(
       df: DataFrame,
@@ -930,29 +933,6 @@ object Vectors {
         .filter(col("kept")).select(col(idCol)),
       Seq(idCol), "left_semi")
 
-  /** Embedding-cosine near-duplicate pairs: all (a, b) with cosine ≥
-    * threshold, via LSH buckets (exact within-bucket scoring — precision
-    * is always 1; bits/bands set recall).
-    *
-    * Defaults (64 bits / 8 bands ⇒ 8-bit chunks, 8×256 buckets) target
-    * the TRUE near-dup regime: a cosine-0.9 pair shares some chunk with
-    * p ≈ 0.93, cosine-0.95 with p ≈ 0.99. The old 16/4 default (4-bit
-    * chunks — 64 buckets total) made every bucket's population grow
-    * linearly in the corpus, trending the bucket join to O(n²/64). For
-    * LOW thresholds (broad clustering, e.g. ≤0.5) pass narrower chunks —
-    * more bands per bit, e.g. bits=16, bands=8 — and accept deeper
-    * buckets; sub-0.9 recall math: p = (1 − arccos(t)/π)^(bits/bands)
-    * per band.
-    *
-    * `maxBucket` skips (chunk, chunkval) buckets holding more than that
-    * many vectors — the skew/saturation guard, a groupBy-count →
-    * anti-join cap like simhashPairs' (Dedup.minhashCandidates caps its
-    * sorted bucket runs instead, star-linking past the cap): a capped-out
-    * bucket usually means a mass of EXACT duplicates or a
-    * degenerate embedding (all-zero vectors hash identically); the cap
-    * bounds pair generation at the cost of recall only within those
-    * over-populated buckets.
-    */
   /** Embedding-space decontamination: drop every corpus row whose cosine
     * against ANY eval vector reaches `threshold`. EXACT by construction —
     * the eval set is benchmark-sized, so it broadcasts and the corpus is
@@ -975,6 +955,35 @@ object Vectors {
     corpus.join(hits, corpus(idCol) === hits("__cid"), "left_anti")
   }
 
+  /** Embedding-cosine near-duplicate pairs: all (a, b) with cosine ≥
+    * threshold, via LSH buckets (exact within-bucket scoring — precision
+    * is always 1; bits/bands set recall). Output: (id_a, id_b, sim),
+    * id_a < id_b, sim rounded to 6 places.
+    *
+    * Defaults (64 bits / 8 bands ⇒ 8-bit chunks, 8×256 buckets) target
+    * the TRUE near-dup regime: a cosine-0.9 pair shares some chunk with
+    * p ≈ 0.93, cosine-0.95 with p ≈ 0.99. The old 16/4 default (4-bit
+    * chunks — 64 buckets total) made every bucket's population grow
+    * linearly in the corpus, trending the bucket pairing to O(n²/64). For
+    * LOW thresholds (broad clustering, e.g. ≤0.5) pass narrower chunks —
+    * more bands per bit, e.g. bits=16, bands=8 — and accept deeper
+    * buckets; sub-0.9 recall math: p = (1 − arccos(t)/π)^(bits/bands)
+    * per band. `bands` must divide `bits`.
+    *
+    * Candidates come from [[Kernels.scoredBucketPairs]], the sorted
+    * bucket runs Dedup's MinHash and SimHash pairs use, and each vector
+    * joins onto its pairs by id, so it crosses a shuffle once per id,
+    * not once per band. `maxBucket` means pairwise at or below,
+    * star-linked above: a (chunk, chunkval) bucket of more than
+    * `maxBucket` vectors links each member to its min id instead of
+    * pairing all-ways — the skew/saturation guard. A saturated bucket
+    * usually means a mass of EXACT duplicates or a degenerate embedding
+    * (all-zero vectors hash identically); the star bounds pair
+    * generation while the mass stays one connected component for
+    * [[dropEmbeddingNearDuplicates]], trading recall only on near pairs
+    * inside over-populated buckets. A repeated id never pairs with
+    * itself.
+    */
   def cosineNearDupPairs(
       df: DataFrame,
       idCol: String,
@@ -985,37 +994,15 @@ object Vectors {
       dim: Int = -1,
       maxBucket: Int = 10000): DataFrame = {
     val d = if (dim > 0) dim else inferDim(df, vecCol)
-    val chunkBits = bits / bands
-    val mask = (1L << chunkBits) - 1
-    // id prefilter shared by all branches: the self-join's a.id < b.id
-    // would infer isnotnull(id) on the join sides only, leaving the cap's
-    // count branch a different signature subtree that AQE cannot reuse
-    val sigs = df.filter(col(idCol).isNotNull)
-      .select(col(idCol).as("id"), col(vecCol).as("vec"),
-        hyperplaneSignature(col(vecCol), bits, d).as("sig"))
-    val chunks = sigs.select(col("id"), col("vec"),
-      posexplode(array((0 until bands).map(i =>
-        shiftright(col("sig"), i * chunkBits).bitwiseAND(mask)): _*)))
-      .toDF("id", "vec", "chunk", "chunkval")
-    // groupBy-count → anti-join cap, not a count window: a partitionBy
-    // window buffers every member of a saturated bucket on one task
-    // before the filter. The pre-aggregate shuffles only (chunk,
-    // chunkval, count) partials, and the anti side holds only over-cap
-    // buckets (same shape and rationale as Dedup.bucketAggJaccardPairs).
-    val bucketBad = chunks.groupBy("chunk", "chunkval")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket)
-      .select("chunk", "chunkval")
-    val bucketed = chunks.join(bucketBad, Seq("chunk", "chunkval"), "left_anti")
-    bucketed.as("a")
-      .join(bucketed.as("b"),
-        col("a.chunk") === col("b.chunk") &&
-          col("a.chunkval") === col("b.chunkval") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(cosine(col("a.vec"), col("b.vec")), 6).as("sim"))
-      .distinct()
+    val vecs = df.filter(col(idCol).isNotNull).select(col(idCol).as("id"), col(vecCol).as("vec"))
+    val chunks = vecs.select(col("id"),
+        Kernels.bandKeys(hyperplaneSignature(col("vec"), bits, d), bits, bands))
+      .toDF("id", "chunk", "chunkval")
+    Kernels.scoredBucketPairs(vecs, chunks, maxBucket)(
+        (a, b) => round(cosine(a, b), 6).as("sim"))
       .filter(col("sim") >= threshold)
+      // a repeated id joins once per copy; identical copies score alike
+      .distinct()
   }
 
   /** Scalar int8 quantization of an embedding column — the 4×

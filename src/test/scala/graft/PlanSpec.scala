@@ -325,6 +325,68 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("LSH pair streams shuffle once: on id_a above the run walk, never on (id_a, id_b)") {
+    // Kernels.bucketPairs merges the pairs that several bands share in
+    // one exchange on id_a, and the first payload join reads that
+    // partitioning: no exchange on (id_a, id_b) for the distinct and no
+    // second one on id_a for the join. Unbroadcast, AQE off: the plan as
+    // it would run at corpus scale.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.functions.{Dedup, Vectors}
+    def keys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case _ => Nil
+    }
+    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      for (df <- Seq(
+          Dedup.minhashCandidates(docs, "doc_id", "text"),
+          Dedup.lshJaccardPairs(docs, "doc_id", "text", threshold = 0.5),
+          Dedup.simhashPairs(docs, "doc_id", "text"),
+          Vectors.cosineNearDupPairs(emb, "vec_id", "embedding", 0.45,
+            bits = 16, bands = 8, dim = 64))) {
+        val plan = df.queryExecution.executedPlan
+        val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+        assert(!shuffles.exists(e => keys(e) == Seq("id_a", "id_b")), plan.toString.take(4000))
+        val overRuns = shuffles.filter(e =>
+          keys(e) == Seq("id_a") && e.exists(_.isInstanceOf[MapPartitionsExec]))
+        assert(overRuns.size == 1, plan.toString.take(4000))
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+    }
+  }
+
+  test("simhash and cosine pairs build without a job and join on no bucket key") {
+    // the bucket runs replace the (chunk, chunkval) self-join, count cap
+    // and star join; with dim given, building runs nothing
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.functions.{Dedup, Vectors}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    for ((name, build) <- Seq[(String, () => DataFrame)](
+        "simhashPairs" -> (() => Dedup.simhashPairs(docs, "doc_id", "text")),
+        "cosineNearDupPairs" -> (() => Vectors.cosineNearDupPairs(emb, "vec_id", "embedding",
+          0.45, bits = 16, bands = 8, dim = 64)))) {
+      val (df, jobs) = jobsDuring(build())
+      assert(jobs == 0, s"building $name fired $jobs job(s)")
+      val joinKeys = df.queryExecution.sparkPlan.collect {
+        case j: BaseJoinExec => (j.leftKeys ++ j.rightKeys).collect { case a: Attribute => a.name }
+      }
+      assert(joinKeys.nonEmpty && !joinKeys.exists(_.exists(Set("chunk", "chunkval"))),
+        s"$name joins on $joinKeys")
+    }
+  }
+
   test("bucket-population caps plan as groupBy-count→join, never a window") {
     // A count().over(Window.partitionBy(key)) cap routes EVERY row of a
     // skewed bucket to one task before filtering — exactly the single-task

@@ -107,8 +107,10 @@ class VectorsGroundTruthSpec extends SparkSuite {
 
   test("cosineNearDupPairs maxBucket bounds pair generation under mass duplication") {
     // 40 identical vectors share every LSH bucket (C(40,2)=780 pairs
-    // uncapped); with maxBucket=10 those saturated buckets are skipped
-    // while a distinct small-bucket near-dup pair still comes through
+    // uncapped); with maxBucket=10 those saturated buckets STAR-LINK
+    // instead: every clone pairs with the min-id representative only
+    // (39 edges, so the whole mass stays one component) while a distinct
+    // small-bucket near-dup pair still comes through pairwise
     val clone = Array.tabulate(8)(i => math.sin(i + 1.0).toFloat)
     val nearA = Array.tabulate(8)(i => math.cos(i + 1.0).toFloat)
     val nearB = nearA.updated(0, nearA(0) + 0.01f)
@@ -116,13 +118,55 @@ class VectorsGroundTruthSpec extends SparkSuite {
     val df = rows.toDF("vec_id", "embedding")
     val capped = Vectors.cosineNearDupPairs(df, "vec_id", "embedding", 0.99, maxBucket = 10)
       .as[(Long, Long, Double)].collect()
-    assert(!capped.exists { case (a, b, _) => a < 100 && b < 100 },
-      "saturated clone buckets leaked pairs")
+    val clonePairs = capped.filter { case (a, b, _) => a < 100 && b < 100 }
+    assert(clonePairs.length == 39 && clonePairs.forall(_._1 == 0L),
+      s"saturated buckets must star-link to the min id: got ${clonePairs.length} edges")
+    assert(clonePairs.forall(_._3 == 1.0), "clone star edges are cosine 1")
     assert(capped.exists { case (a, b, _) => a == 100L && b == 101L },
       "small-bucket near-dup pair must survive the cap")
     val uncapped = Vectors.cosineNearDupPairs(df, "vec_id", "embedding", 0.99)
       .as[(Long, Long, Double)].collect()
     assert(uncapped.count { case (a, b, _) => a < 100 && b < 100 } == 780)
+  }
+
+  test("dropEmbeddingNearDuplicates keeps one copy of a mass past maxBucket") {
+    // the clones share every bucket, all of them past the cap: the star
+    // edges must still join them into one component with one keeper
+    val clone = Array.tabulate(8)(i => math.sin(i + 1.0).toFloat)
+    val other = Array.tabulate(8)(i => math.cos(i + 1.0).toFloat)
+    val df = ((0 until 40).map(i => (i.toLong, clone)) :+ ((100L, other)))
+      .toDF("vec_id", "embedding")
+    val kept = Vectors.dropEmbeddingNearDuplicates(df, "vec_id", "embedding", 0.99,
+      maxBucket = 10).select("vec_id").as[Long].collect().toSet
+    assert(kept == Set(0L, 100L))
+  }
+
+  test("cosineNearDupPairs: a repeated vec_id never pairs with itself") {
+    val v = Array.tabulate(8)(i => math.sin(i + 1.0).toFloat)
+    val df = Seq((1L, v), (1L, v), (2L, v)).toDF("vec_id", "embedding")
+    for (cap <- Seq(1, 10000)) {
+      val got = Vectors.cosineNearDupPairs(df, "vec_id", "embedding", 0.99, maxBucket = cap)
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(got == Seq((1L, 2L, 1.0)), s"maxBucket $cap")
+    }
+  }
+
+  test("one 64-bit band keys on the whole signature; uneven splits refuse") {
+    // 64 hyperplanes in 8 dims: distinct vectors get distinct signatures,
+    // so only the identical pair shares the one full-width bucket (a
+    // zero mask would put all 21 vectors in one over-cap bucket)
+    val vs = (0 until 20).map { i =>
+      val rng = new scala.util.Random(i)
+      (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat))
+    }
+    val df = (vs :+ ((99L, vs.head._2))).toDF("vec_id", "embedding")
+    val got = Vectors.cosineNearDupPairs(df, "vec_id", "embedding", -1.0,
+      bits = 64, bands = 1, maxBucket = 2)
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(got == Seq((0L, 99L, 1.0)))
+    for ((bits, bands) <- Seq(16 -> 3, 4 -> 8))
+      intercept[IllegalArgumentException](
+        Vectors.cosineNearDupPairs(df, "vec_id", "embedding", 0.9, bits = bits, bands = bands))
   }
 
   test("ivfCentroids: no dimension explosion — one vector_mean partial agg") {
