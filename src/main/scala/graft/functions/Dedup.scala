@@ -21,14 +21,13 @@ import org.apache.spark.sql.functions._
   * All hashing uses xxhash64 (codegen'd Catalyst expression) — stable
   * across Spark versions and cluster nodes.
   *
-  * The shingle step is a MATERIALIZED pipeline (posexplode → lead window),
-  * not a nested higher-order-function expression: nested array lambdas over
+  * The shingle step is a per-document kernel (graft.plans), not a nested
+  * higher-order-function expression: nested array lambdas over
   * `split(regexp_replace(...))` fall out of whole-stage codegen and
   * re-evaluate the normalization per array element, which measured ~40ms
-  * per document. Here every expression runs exactly once per token inside
-  * codegen; the only added cost is one shuffle on the doc id, which the
-  * downstream signature groupBys then reuse (same partitioning — Catalyst
-  * inserts no further exchange).
+  * per document. MinHash signatures come straight from the text
+  * (plans.MinhashSignature, one row per document); SimHash and the exact
+  * Jaccard tiers explode shingle postings (plans.ShinglePostings).
   */
 object Dedup {
 
@@ -272,48 +271,49 @@ object Dedup {
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
 
   /** ---- MinHash ----
-    * k independent minhashes over the shingle postings:
+    * k independent minhashes over shingle postings:
     * sig[i] = min over shingles of hash(seed=i, shingle), computed as k
-    * `min` aggregates in ONE groupBy pass — partial (map-side) aggregation
-    * means the shuffle carries k longs per doc, never the shingles.
-    * `portable` swaps xxhash64 for the md5-derived [[h60]] (seed mixed in
-    * as a "seed:" prefix) so an external engine can replay the signatures.
+    * `min` aggregates in ONE groupBy pass. `portable` swaps xxhash64 for
+    * the md5-derived [[h60]] (seed mixed in as a "seed:" prefix) so an
+    * external engine can replay the signatures.
+    *
+    * The relational definition, for a caller that already holds
+    * postings. The MinHash operators below never build postings: they
+    * signature each document with the [[graft.plans.MinhashSignature]]
+    * kernel, which is bit-equal to this per distinct id.
     */
   def minhashSignatures(
       posts: DataFrame,
       numHashes: Int,
       portable: Boolean = false): DataFrame = {
-    val mins = minhashes(numHashes, portable)
-    posts.groupBy("id").agg(mins.head, mins.tail: _*)
-  }
-
-  /** The k `min` aggregates h0..h(k-1) of [[minhashSignatures]]. */
-  private def minhashes(numHashes: Int, portable: Boolean): Seq[Column] =
-    (0 until numHashes).map { seed =>
+    val mins = (0 until numHashes).map { seed =>
       val h =
         if (portable) h60(concat_ws(":", lit(seed), col("s")))
         else xxhash64(lit(seed), col("s"))
       min(h).as(s"h$seed")
     }
+    posts.groupBy("id").agg(mins.head, mins.tail: _*)
+  }
 
   /** Candidate near-duplicate pairs via MinHash LSH.
     * Output: (id_a, id_b) distinct pairs with id_a < id_b.
     *
-    * Scale shape: the band rows of [[bandedRows]] go through
-    * [[Kernels.bucketPairs]]: one shuffle on (band, bandhash) into sorted
-    * bucket runs. `maxBucket` means pairwise at or below, star-linked
-    * above: a run of at most `maxBucket` ids emits all its id_a < id_b
-    * pairs; a larger run STAR-LINKS to its first (min) id instead of
-    * dropping: |bucket| edges, never |bucket|², so a crawl's 500k-copy
-    * near-identical boilerplate cluster (the mega-group a dropping cap
-    * would silently un-dedup) still reaches downstream as ONE connected
-    * component. At most `maxBucket + 1` ids of a run are buffered at
-    * once, however large the bucket. Consumers that rescore
-    * (lshJaccardPairs) decide per-edge survival exactly as for pairwise
-    * candidates. No count aggregate, tag join, self-join or window: one
-    * scan, one shuffle of the signature partials on id, one of the band
-    * rows, and one of the pairs on id_a for the distinct over pairs that
-    * several bands share.
+    * Scale shape: the band rows of [[bandedRows]] — a per-row map over
+    * the scan, no shuffle — go through [[Kernels.bucketPairs]]: one
+    * shuffle on (band, bandhash) into sorted bucket runs. `maxBucket`
+    * means pairwise at or below, star-linked above: a run of at most
+    * `maxBucket` ids emits all its id_a < id_b pairs; a larger run
+    * STAR-LINKS to its first (min) id instead of dropping: |bucket|
+    * edges, never |bucket|², so a crawl's 500k-copy near-identical
+    * boilerplate cluster (the mega-group a dropping cap would silently
+    * un-dedup) still reaches downstream as ONE connected component. At
+    * most `maxBucket + 1` ids of a run are buffered at once, however
+    * large the bucket. Consumers that rescore (lshJaccardPairs) decide
+    * per-edge survival exactly as for pairwise candidates. No count
+    * aggregate, tag join, self-join, window or aggregate keyed on id:
+    * one scan, one shuffle of the band rows, and one of the pairs on
+    * id_a for the distinct over pairs that several bands share. A
+    * repeated id follows [[bandedRows]]' per-row rule.
     */
   def minhashCandidates(
       df: DataFrame,
@@ -340,20 +340,25 @@ object Dedup {
     * incidence-quadratic (reference posture: `grouper.hpp:16-60` buckets
     * everything, never materializing all-pairs).
     *
-    * Scale shape: the corpus is shingled once. One groupBy(id) computes
-    * each doc's k minhashes AND its distinct shingle-hash set, so only
-    * ids and hashes cross the one shuffle of its partials; the band rows
-    * of the signatures feed [[Kernels.scoredBucketPairs]]: the sorted
-    * bucket runs of [[minhashCandidates]] (one shuffle on (band,
-    * bandhash); `maxBucket` means pairwise at or below, star-linked
-    * above; at most `maxBucket + 1` ids buffered per bucket), then the
-    * sets join onto the pair stream by id_a and id_b, reading the
-    * aggregate's id partitioning and the pairs' id_a partitioning.
-    * Per-pair cost is O(|a| + |b|) set intersection; total cost is
+    * Scale shape: two narrow maps over the scan, no aggregate keyed on
+    * id. The band side is [[bandedRows]] (k minhashes per document, no
+    * set) into the sorted bucket runs of [[minhashCandidates]] (one
+    * shuffle on (band, bandhash); `maxBucket` means pairwise at or
+    * below, star-linked above; at most `maxBucket + 1` ids buffered per
+    * bucket). The set side signatures each document's distinct
+    * shingle-hash set alone (no minhashes) and joins it onto the pair
+    * stream by id_a — reading the pairs' id_a partitioning — and by
+    * id_b. Per-pair cost is O(|a| + |b|) set intersection; total cost is
     * candidate-pair mass, never corpus². Jaccard rounds to 6 before the
     * threshold compare (the [[matchesAgainstIndex]] convention) and
     * inherits the 64-bit shingle-hash almost-surely-exact caveat of
     * [[ngramJaccardPairs]].
+    *
+    * A repeated id is signatured per row ([[bandedRows]]): (x, y) is
+    * emitted when some row of x and some row of y clear `threshold`, and
+    * x never pairs with itself. The closing distinct reads the
+    * partitioning the set joins leave (id_b when they shuffle, the pair
+    * stream's id_a when they broadcast), so it adds no exchange.
     */
   def lshJaccardPairs(
       df: DataFrame,
@@ -364,28 +369,25 @@ object Dedup {
       numHashes: Int = 12,
       bands: Int = 4,
       maxBucket: Int = 1000,
-      portable: Boolean = false): DataFrame = {
-    val mins = minhashes(numHashes, portable)
-    // The filter holds for every doc (each has a shingle, so a set and
-    // minhashes) but reads every column: column pruning keeps ONE
-    // aggregate for the band rows and both set lookups, not a
-    // minhash-only and a set-only variant each shingling the corpus.
-    val sig = signaturePostings(df, idCol, textCol, shingleLen).groupBy("id")
-      .agg(collect_set(xxhash64(col("s"))).as("__set"), mins: _*)
-      .filter(size(col("__set")) > 0 &&
-        coalesce(mins.indices.map(i => col(s"h$i")): _*).isNotNull)
-    Kernels.scoredBucketPairs(sig.select("id", "__set"),
-        signatureBands(sig, numHashes, bands, portable), maxBucket)(
+      portable: Boolean = false): DataFrame =
+    Kernels.scoredBucketPairs(
+        signatures(df, idCol, textCol, shingleLen, 0, portable = false, withSet = true),
+        bandedRows(df, idCol, textCol, shingleLen, numHashes, bands, portable), maxBucket)(
         (a, b) => round(jaccard(a, b), 6).as("__j"))
       .filter(col("__j") >= threshold)
       .select("id_a", "id_b")
-  }
+      .distinct()
 
   /** The (id, band, bandhash) LSH band rows of a corpus — the shared
-    * front half of [[minhashCandidates]] and the persisted-index pair
-    * ([[buildMinhashIndex]] / [[minhashCandidatesAgainstIndex]]), so the
-    * bucket-run and index paths bucket IDENTICALLY by construction.
-    * One row per (doc, band): a bucket holds each id at most once.
+    * front half of [[minhashCandidates]], [[lshJaccardPairs]] and the
+    * persisted-index pair ([[buildMinhashIndex]] /
+    * [[minhashCandidatesAgainstIndex]]), so the bucket-run and index
+    * paths bucket IDENTICALLY by construction. One row per (input row,
+    * band), from a per-row signature map: no postings, no aggregate or
+    * exchange keyed on id. Each input row is signatured alone, so an id
+    * repeated over several rows yields one band row per row and band,
+    * and a bucket may hold it more than once; the bucket runs skip an
+    * equal (band, bandhash, id) row, so an id never pairs with itself.
     */
   private[graft] def bandedRows(
       df: DataFrame,
@@ -396,11 +398,26 @@ object Dedup {
       bands: Int,
       portable: Boolean): DataFrame =
     signatureBands(
-      minhashSignatures(signaturePostings(df, idCol, textCol, shingleLen), numHashes, portable),
+      signatures(df, idCol, textCol, shingleLen, numHashes, portable, withSet = false),
       numHashes, bands, portable)
 
-  /** Shingle postings of the docs with a non-null id: a null id names
-    * no document, and its signature group would bucket with real ones.
+  /** (id, set?, h0..h(k-1)) per row with a non-null id and at least one
+    * shingle ([[graft.plans.MinhashSignature]]): a null id names no
+    * document, and its band rows would bucket with real ones.
+    */
+  private def signatures(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleLen: Int,
+      numHashes: Int,
+      portable: Boolean,
+      withSet: Boolean): DataFrame =
+    df.filter(col(idCol).isNotNull).select(col(idCol).as("id"),
+      graft.plans.MinhashSignature(col(textCol), shingleLen, numHashes, portable, withSet))
+
+  /** Shingle postings of the docs with a non-null id, for the SimHash
+    * aggregate.
     */
   private def signaturePostings(
       df: DataFrame, idCol: String, textCol: String, shingleLen: Int): DataFrame =
@@ -1791,6 +1808,12 @@ object Dedup {
     * pipeline does. The cap only trades recall on near pairs whose
     * every shared chunk is over-populated and that are not the star's
     * centre.
+    *
+    * The signatures still come from a postings aggregate: every doc is
+    * exploded into one row per shingle and rebuilt by a groupBy on id.
+    * A SimHash signature depends only on its own doc's text, so this is
+    * the next candidate for a per-document kernel like MinHash's
+    * [[graft.plans.MinhashSignature]].
     */
   def simhashPairs(
       df: DataFrame,

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -84,6 +84,75 @@ object TextKernels {
     while (it.hasNext) { arr(k) = UTF8String.fromString(it.next()); k += 1 }
     new GenericArrayData(arr)
   }
+
+  /** One document's MinHash signature over its [[shingles]] (see
+    * plans.MinhashSignature): the row (set?, h0..h(k-1)), or null when
+    * the document has no shingle. `set` (when `withSet`) is the sorted,
+    * deduplicated `xxhash64(s)` of every shingle; hi is the min over
+    * shingles of `hash` i, for the k = `hash.k` hashes. Shingles are
+    * ASCII by construction (normTokens keeps [a-z0-9]), so each is a
+    * slice of the space-joined token bytes and is hashed in place. A
+    * shingle repeated within the document is hashed once per occurrence:
+    * min and the set's dedup absorb it.
+    */
+  def minhashSignature(
+      text: UTF8String,
+      n: Int,
+      hash: SeededShingleHash,
+      withSet: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
+    val numHashes = hash.k
+    val toks = normTokens(text)
+    if (toks.length < n) return null
+    val starts = new Array[Int](toks.length + 1)
+    val sb = new java.lang.StringBuilder(toks.length * 8)
+    var t = 0
+    while (t < toks.length) {
+      if (t > 0) sb.append(' ')
+      starts(t) = sb.length
+      sb.append(toks(t))
+      t += 1
+    }
+    starts(toks.length) = sb.length + 1 // token t ends at starts(t + 1) - 1
+    val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    val m = toks.length - n + 1
+    val set = if (withSet) new Array[Long](m) else null
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    var i = 0
+    while (i < m) {
+      val from = starts(i)
+      val len = starts(i + n) - 1 - from
+      if (withSet) set(i) = XXH64.hashUnsafeBytes(
+        bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, len, 42L)
+      var j = 0
+      while (j < numHashes) {
+        val h = hash(j, bytes, from, len)
+        if (h < mins(j)) mins(j) = h
+        j += 1
+      }
+      i += 1
+    }
+    val out = new Array[Any]((if (withSet) 1 else 0) + numHashes)
+    if (withSet) {
+      java.util.Arrays.sort(set)
+      var d = 1
+      i = 1
+      while (i < m) {
+        if (set(i) != set(d - 1)) { set(d) = set(i); d += 1 }
+        i += 1
+      }
+      out(0) = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(java.util.Arrays.copyOf(set, d))
+    }
+    var j = 0
+    while (j < numHashes) { out(out.length - numHashes + j) = mins(j); j += 1 }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+  }
+
+  /** Dedup.h60 of an md5 digest: its first 15 hex digits as a
+    * non-negative long, i.e. the top 60 bits of its first 8 bytes.
+    */
+  private[plans] def h60(md5: Array[Byte]): Long =
+    java.nio.ByteBuffer.wrap(md5).getLong >>> 4
 
   /** NFC canonical composition (see plans.NfcNormalize). Fast path:
     * java.text.Normalizer.isNormalized is O(n) with no allocation, and
@@ -427,14 +496,8 @@ object TextKernels {
       val from = starts(j)
       val until = starts(j + spanWords) - 1 // last byte of token j+spanWords-1
       if (portable) {
-        md.reset()
         md.update(bytes, from, until - from)
-        val d = md.digest()
-        // first 15 hex digits == 7 full bytes + high nibble of byte 7
-        var v = 0L
-        var b = 0
-        while (b < 7) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-        out(j) = (v << 4) | ((d(7) >> 4) & 0xfL)
+        out(j) = h60(md.digest())
       } else {
         out(j) = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
           bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from,
@@ -669,6 +732,86 @@ object ShinglePostings {
 
   def apply(text: Column, n: Int): Column =
     CatalystBridge.column(ShinglePostings(CatalystBridge.expression(text), n))
+}
+
+/** `minhash_signature(text, n, k, portable, withSet)`: a document's
+  * MinHash signature as one output row (set?, h0..h(k-1)) — `set`
+  * array<long> when `withSet`, then k long minhashes — and no row for a
+  * null text or a document without a shingle (see
+  * TextKernels.minhashSignature). A per-row map: no postings explode,
+  * no aggregate keyed on the id, no shuffle. Bit-equal to the postings
+  * formulation `collect_set(xxhash64(s))` plus k `min(xxhash64(i, s))`
+  * (portable: `min(h60(concat_ws(":", i, s)))`) grouped per document.
+  *
+  * A Generator for the reason [[ShinglePostings]] is one: a
+  * struct-valued expression that downstream nodes filter on and read k
+  * fields of is inlined into each reference by the optimizer, so the
+  * kernel would run once per field; a Generate node runs it once per row.
+  */
+final case class MinhashSignature(
+    child: Expression, n: Int, numHashes: Int, portable: Boolean, withSet: Boolean)
+  extends UnaryExpression
+  with org.apache.spark.sql.catalyst.expressions.Generator
+  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+
+  require(n >= 1, s"shingle length must be >= 1, got $n")
+  require(numHashes >= 0 && (withSet || numHashes > 0),
+    s"a signature needs the set or at least one minhash, got $numHashes hashes")
+
+  @transient private lazy val hash = new SeededShingleHash(numHashes, portable)
+
+  override def elementSchema: StructType = StructType(
+    (if (withSet) Seq(StructField("set", ArrayType(LongType, containsNull = false), nullable = false))
+     else Nil) ++ (0 until numHashes).map(i => StructField(s"h$i", LongType, nullable = false)))
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"minhash_signature expects string, got ${child.dataType}")
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): IterableOnce[org.apache.spark.sql.catalyst.InternalRow] = {
+    val t = child.eval(input)
+    val sig =
+      if (t == null) null
+      else TextKernels.minhashSignature(t.asInstanceOf[UTF8String], n, hash, withSet)
+    if (sig == null) Nil else sig :: Nil
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinhashSignature =
+    copy(child = newChild)
+
+  override def prettyName: String = "minhash_signature"
+}
+
+object MinhashSignature {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graftbridge.CatalystBridge
+
+  def apply(text: Column, n: Int, numHashes: Int, portable: Boolean, withSet: Boolean): Column =
+    CatalystBridge.column(MinhashSignature(
+      CatalystBridge.expression(text), n, numHashes, portable, withSet))
+}
+
+/** The k seeded shingle hashes MinHash and the Bloom n-gram filter
+  * share, over a shingle's UTF-8 bytes: hash i is Spark's chained
+  * `xxhash64(i, s)` (s hashed under the seed `hashInt(i, 42)`), or, when
+  * `portable`, Dedup.h60 of "i:" ++ s, which any engine with md5
+  * replays. Seeds and prefixes are derived once per instance; the md5
+  * digest is stateful, so an instance serves one task.
+  */
+final class SeededShingleHash(val k: Int, portable: Boolean) {
+  private val seeds = Array.tabulate(k)(i => XXH64.hashInt(i, 42L))
+  private val prefixes = Array.tabulate(k)(i =>
+    s"$i:".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+  private val md = if (portable) java.security.MessageDigest.getInstance("MD5") else null
+
+  def apply(i: Int, bytes: Array[Byte], from: Int, len: Int): Long =
+    if (portable) {
+      md.update(prefixes(i))
+      md.update(bytes, from, len)
+      TextKernels.h60(md.digest())
+    } else XXH64.hashUnsafeBytes(
+      bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, len, seeds(i))
 }
 
 /** `bucket_pairs(docs, threshold)`: ordered candidate pairs from one
@@ -1506,9 +1649,9 @@ object GramHashes {
   * array stays task-binary-sized (Bloom.FastClosureMaxLogM).
   *
   * Hashing mirrors the Column formulation bit for bit: position i of
-  * gram g is md5("i:" ++ g) first-15-hex (portable — the Dedup.h60
-  * convention, digest-byte extraction as TextKernels.gramHashes) or
-  * Spark's chained xxhash64(i, g) (production), taken pmod 2^logM.
+  * gram g is [[SeededShingleHash]] i of g (md5("i:" ++ g) first-15-hex
+  * when portable, else Spark's chained xxhash64(i, g)), taken pmod
+  * 2^logM.
   */
 final class BloomBits(
     val words: Array[Long],
@@ -1516,6 +1659,8 @@ final class BloomBits(
     val k: Int,
     val shingleLen: Int,
     val portable: Boolean) extends Serializable {
+
+  @transient private lazy val hash = new SeededShingleHash(k, portable)
 
   /** (n_shingles, contained) of a document's DISTINCT normalized
     * shingle set — the TextKernels.shingles semantics, so the kernel
@@ -1525,8 +1670,6 @@ final class BloomBits(
     val grams = TextKernels.shingles(text, shingleLen)
     val n = grams.numElements()
     val m = 1L << logM
-    val md =
-      if (portable) java.security.MessageDigest.getInstance("MD5") else null
     var contained = 0L
     var g = 0
     while (g < n) {
@@ -1534,24 +1677,7 @@ final class BloomBits(
       var allSet = true
       var i = 0
       while (allSet && i < k) {
-        val h =
-          if (portable) {
-            md.reset()
-            md.update(String.valueOf(i).getBytes)
-            md.update(':'.toByte)
-            md.update(gram)
-            val d = md.digest()
-            var v = 0L
-            var b = 0
-            while (b < 7) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-            (v << 4) | ((d(7) >> 4) & 0xfL)
-          } else {
-            org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-              gram, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-              gram.length,
-              org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(i, 42L))
-          }
-        val pos = java.lang.Math.floorMod(h, m)
+        val pos = java.lang.Math.floorMod(hash(i, gram, 0, gram.length), m)
         if ((words((pos >> 6).toInt) & (1L << (pos & 63L))) == 0L)
           allSet = false
         i += 1

@@ -655,6 +655,36 @@ class LibrarySpec extends SparkSuite {
     assert(reads(0).get.count() == 20)
   }
 
+  test("writeMetadataBatch and getInfoBatch report per-item outcomes") {
+    val lib = newLib()
+    val df = spark.range(10).select(col("id").as("ts2"), col("id").as("v"))
+    lib.write("ok1", df, Some("ts2"), 100)
+    lib.write("ok2", df, Some("ts2"), 100)
+    // a missing symbol is created metadata-only (writeMetadata's rule);
+    // a name that cannot be a path fails alone and its siblings commit
+    val md = Map("owner" -> "batch")
+    val out = lib.writeMetadataBatch(Seq("ok1" -> md, "missing" -> md, "" -> md, "ok2" -> md))
+    out match {
+      case Seq(Library.BatchOk("ok1", 1), Library.BatchOk("missing", 0),
+          Library.DataError("", e), Library.BatchOk("ok2", 1)) =>
+        assert(e.isInstanceOf[IllegalArgumentException])
+      case other => fail(s"unexpected outcomes: $other")
+    }
+    assert(lib.readMetadataBatch(Seq("ok1", "missing", "ok2")).map(_.get) == Seq.fill(3)(md))
+    assert(lib.read("ok1").count() == 10 && lib.read("missing").count() == 0)
+
+    val infos = lib.getInfoBatch(Seq("ok1", "nope", "ok2"))
+    assert(infos.map(_.isOk) == Seq(true, false, true))
+    assert(infos.map(_.symbol) == Seq("ok1", "nope", "ok2"))
+    intercept[NoSuchElementException](infos(1).get)
+    for (i <- Seq(infos(0).get, infos(2).get)) {
+      assert(i.version == 1 && i.rowCount == 10 && i.indexCol.contains("ts2"))
+      assert(i == lib.getInfo(i.symbol))
+    }
+    // as-of reaches every item: version 0 predates the metadata commit
+    assert(lib.getInfoBatch(Seq("ok1", "ok2"), AsOf.Version(0)).map(_.get.version) == Seq(0, 0))
+  }
+
   test("finalizeStaged unifies evolved staged-delta schemas under dynamicSchema") {
     val lib = newLib()
     val a = Seq((10L, 1), (20L, 2)).toDF("ts2", "x") // int x

@@ -276,25 +276,18 @@ class PlanSpec extends SparkSuite {
     assert(semi.isEmpty, plan.toString.take(2000))
   }
 
-  test("minhashCandidates shuffles its signature partials and band rows once each") {
-    // Unbroadcast (corpus scale): the signature partials cross one
-    // exchange on id, and lshJaccardPairs' set lookups reuse it because
-    // one aggregate carries both the minhashes and the sets. The band
-    // rows cross one exchange on (band, bandhash) into sorted bucket
-    // runs; no count aggregate, tag join or self-join re-reads them.
+  test("minhash signatures are a per-row map: no postings, no id aggregate or exchange") {
+    // Unbroadcast (corpus scale): each document is signatured where it is
+    // scanned (minhash_signature, one row per document), so no
+    // shingle_postings Generate, no aggregate keyed on id and no exchange
+    // on id sits below the one exchange on (band, bandhash) into sorted
+    // bucket runs. lshJaccardPairs' set side signatures the set alone,
+    // without the k minhashes only the band side reads.
     import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectSet, Min, Partial}
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    def partials(p: SparkPlan): Seq[Class[_]] = p match {
-      case w: WholeStageCodegenExec => partials(w.child)
-      case a: BaseAggregateExec => a.aggregateExpressions.collect {
-        case e if e.mode == Partial => e.aggregateFunction.getClass
-      }
-      case _ => Nil
-    }
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     def keys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
       case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
       case _ => Nil
@@ -308,16 +301,23 @@ class PlanSpec extends SparkSuite {
           functions.Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = 3) -> false,
           functions.Dedup.lshJaccardPairs(docs, "doc_id", "text", maxBucket = 3) -> true)) {
         val plan = df.queryExecution.executedPlan
-        val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
-        val sig = shuffles.filter(e => partials(e.child).contains(classOf[Min]))
-        assert(sig.size == 1 && keys(sig.head) == Seq("id"), plan.toString.take(4000))
-        assert(partials(sig.head.child).contains(classOf[CollectSet]) == sets,
+        val generators = plan.collect { case g: GenerateExec => g.generator }
+        assert(!generators.exists(_.isInstanceOf[plans.ShinglePostings]), plan.toString.take(4000))
+        val sigs = generators.collect { case m: plans.MinhashSignature => (m.withSet, m.numHashes) }
+        assert(sigs.contains((false, 12)), plan.toString.take(4000))
+        assert(sigs.filter(_._1).toSet == (if (sets) Set((true, 0)) else Set.empty),
           plan.toString.take(4000))
-        assert(shuffles.count(e => keys(e) == Seq("band", "bandhash")) == 1,
-          plan.toString.take(4000))
-        assert(plan.collect {
-          case r: ReusedExchangeExec if partials(r.child.child).contains(classOf[Min]) => r
-        }.nonEmpty == sets, plan.toString.take(4000))
+        assert(!plan.exists {
+          case a: BaseAggregateExec =>
+            a.groupingExpressions.collect { case g: Attribute => g.name } == Seq("id")
+          case _ => false
+        }, plan.toString.take(4000))
+        val bands = plan.collect { case e: ShuffleExchangeExec if keys(e) == Seq("band", "bandhash") => e }
+        assert(bands.size == 1, plan.toString.take(4000))
+        assert(!bands.head.child.exists {
+          case e: ShuffleExchangeExec => keys(e) == Seq("id")
+          case _ => false
+        }, plan.toString.take(4000))
       }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
